@@ -66,6 +66,8 @@ import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
+from askg_spark.session import unpersist_checkpoints
+
 _STAR_SCHEMA = "u string, v string"
 
 
@@ -266,11 +268,16 @@ def _loop_collapse(cur: DataFrame, n_part: int, max_iter: int,
                 jumped.alias("n").join(labels.alias("o"), "u")
                 .filter(F.col("n.lbl") != F.col("o.lbl")).isEmpty()
             )
-        labels.unpersist()
-        stepped.unpersist()
+        unpersist_checkpoints(labels)
+        unpersist_checkpoints(stepped)
         labels = jumped
         if done:
-            return labels.select(F.col("u"), F.col("lbl").alias("v"))
+            out = labels.select(F.col("u"), F.col("lbl").alias("v")) \
+                .localCheckpoint(eager=True,
+                                 storageLevel=StorageLevel.MEMORY_AND_DISK)
+            unpersist_checkpoints(labels)
+            return out
+    unpersist_checkpoints(labels)
     return None  # cap hit — caller falls back to the serial collapse
 
 
@@ -280,7 +287,28 @@ def connected_components(
     final_collapse: str = "serial",
 ) -> DataFrame:
     """edges(src,dst) + vertices(id) -> (id, component) where component
-    is the lexicographic min id reachable.
+    is the lexicographic min id reachable; vertices touching no edge
+    are their own component. See :func:`component_labels`, whose
+    checkpoint the result reads for the rest of the session."""
+    labels = component_labels(edges, max_iter, contract_rounds,
+                              contract_partitions, final_collapse)
+    singles = vertices.join(labels.select("id"), "id", "left_anti") \
+        .select("id", F.col("id").alias("component"))
+    return labels.unionByName(singles)
+
+
+def component_labels(
+    edges: DataFrame, max_iter: int = 25, contract_rounds: int = 3,
+    contract_partitions: int | None = None, final_collapse: str = "serial",
+) -> DataFrame:
+    """edges(src,dst) -> (id, component) for every vertex incident to
+    an edge, where component is the lexicographic min id reachable.
+
+    The result is a ``localCheckpoint`` (or a projection of one) that
+    the caller owns: every intermediate checkpoint is released here,
+    and the caller releases this one with
+    ``session.unpersist_checkpoints`` once its consumers are
+    materialized.
 
     ``contract_rounds`` parallel contraction rounds (alternating
     endpoint hashing) then one exact single-partition collapse — a
@@ -334,11 +362,7 @@ def connected_components(
     if labels is None:  # 64-bit code collision — exact string path
         labels = _string_coded_labels(cur, n_part, rounds, max_iter,
                                       final_collapse)
-    # vertices touching no edge are their own component
-    singles = vertices.join(labels.select("id"), "id", "left_anti") \
-        .select("id", F.col("id").alias("label"))
-    return labels.unionByName(singles) \
-        .select("id", F.col("label").alias("component"))
+    return labels.select("id", F.col("label").alias("component"))
 
 
 def _contract(cur: DataFrame, star_fn, schema: str, n_part: int,
@@ -379,10 +403,13 @@ def _contract(cur: DataFrame, star_fn, schema: str, n_part: int,
         cur = cur.localCheckpoint(
             eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
         out = _loop_collapse(cur, n_part, max_iter)
-        if out is not None:
-            return out.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        # convergence cap hit — exact serial fallback below
+        if out is None:  # convergence cap hit — exact serial fallback
+            out = (cur.repartition(1).mapInPandas(star_fn, schema=schema)
+                   .localCheckpoint(
+                       eager=True,
+                       storageLevel=StorageLevel.MEMORY_AND_DISK))
+        unpersist_checkpoints(cur)
+        return out
     return (
         cur.repartition(1).mapInPandas(star_fn, schema=schema)
         .localCheckpoint(eager=True,
@@ -414,7 +441,7 @@ def _int_coded_labels(cur: DataFrame, n_part: int, rounds: int,
         .filter(F.col("n") > 1).isEmpty()
     )
     if collided:
-        vmap.unpersist()
+        unpersist_checkpoints(vmap)
         return None
     ints = cur.select(F.xxhash64("u").alias("u"),
                       F.xxhash64("v").alias("v"))
@@ -423,11 +450,14 @@ def _int_coded_labels(cur: DataFrame, n_part: int, rounds: int,
     joined = lab_int.join(
         vmap, lab_int["u"] == vmap["id_h"]).select("id", "v")
     comp_min = joined.groupBy("v").agg(F.min("id").alias("label"))
-    return (
+    labels = (
         joined.join(comp_min, "v").select("id", "label")
         .localCheckpoint(eager=True,
                          storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
+    unpersist_checkpoints(vmap)
+    unpersist_checkpoints(lab_int)
+    return labels
 
 
 def _string_coded_labels(cur: DataFrame, n_part: int, rounds: int,

@@ -7,7 +7,7 @@ across stage boundaries until a materialization point):
     extract_mentions     mapInPandas (Arrow)         [extract.py]
     enrich_mentions      Column exprs only           [enrich.py]
     candidate_edges      equi-joins + LSH + pandas UDF  [linking.py]
-    connected_components union-find contraction (one lazy plan) [cc.py]
+    component_labels     union-find contraction (one lazy plan) [cc.py]
     canonical_entities   groupBy aggs                [canonicalize.py]
     assign_global_ids    window rank                 [canonicalize.py]
     infer_relationship_edges  equi-joins, skew-capped [relations.py]
@@ -30,12 +30,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from askg_spark.canonicalize import assign_global_ids, canonical_entities
 from askg_spark.catalog import Catalog, fingerprint
-from askg_spark.cc import connected_components
+from askg_spark.cc import component_labels
 from askg_spark.enrich import enrich_mentions
 from askg_spark.extract import extract_mentions
 from askg_spark.linking import LinkConfig, candidate_edges
 from askg_spark.metrics import StageTimer, new_run_id, partition_lineage
 from askg_spark.relations import infer_relationship_edges
+from askg_spark.session import unpersist_checkpoints
 from askg_spark.triples import build_triples
 
 log = logging.getLogger(__name__)
@@ -78,7 +79,10 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
 ) -> PipelineResult:
     """Pure in-memory run (tests, small scale). Persist points are the
-    two frames reused by several downstream stages."""
+    two frames reused by several downstream stages, and they are the
+    only ones the run leaves persisted: ``mentions`` (a cache; release
+    with ``unpersist()``) and ``entities`` (a local checkpoint; release
+    with ``session.unpersist_checkpoints``). Both are the caller's."""
     cfg = cfg or PipelineConfig()
     timer = StageTimer()
 
@@ -153,11 +157,12 @@ def run_pipeline(
     edges = timer.time("link", lambda: candidate_edges(
         enriched, cfg.link).localCheckpoint(
             eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK))
-    comps = timer.time("cc", lambda: connected_components(
-        edges, enriched.select(F.col("mention_id").alias("id")),
-        max_iter=cfg.cc_max_iter))
+    # mentions touching no edge get no label: the left join's
+    # coalesce makes them their own component
+    labels = timer.time("cc", lambda: component_labels(
+        edges, max_iter=cfg.cc_max_iter))
     with_comp = enriched.join(
-        comps, enriched["mention_id"] == comps["id"], "left"
+        labels, enriched["mention_id"] == labels["id"], "left"
     ).drop("id").withColumn(
         "component", F.coalesce("component", "mention_id"))
 
@@ -174,6 +179,11 @@ def run_pipeline(
     entities = timer.time("canonicalize", lambda: assign_global_ids(
         canonical_entities(with_comp)).localCheckpoint(
             eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK))
+    # Only entities read the edge and label checkpoints, and entities
+    # is now a materialized leaf: release them, so the run leaves
+    # exactly the returned frames persisted (mentions, entities).
+    unpersist_checkpoints(edges)
+    unpersist_checkpoints(labels)
 
     rel_edges = timer.time("relations", lambda: infer_relationship_edges(
         entities, cfg.max_entities_per_key))

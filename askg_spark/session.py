@@ -10,13 +10,26 @@ merely *tested* on local[N]:
   * shuffle partitions sized to cores locally; on a real cluster this is
     overridden by --conf (AQE coalesces down, so over-provisioning is
     cheap; under-provisioning is not).
+  * Python workers forked by ``askg_spark.worker_daemon``
+    (``spark.python.daemon.module``). Stock ``pyspark.daemon`` makes a
+    reused worker pay ~200 ms of CPU per task around a UDF body of a
+    few ms: on Python 3.11 every task's ``importlib.invalidate_caches``
+    re-reads ``pyspark.zip``'s directory once per zip importer (~16
+    times), and every task ends with a full ``gc.collect()`` over the
+    pandas/pyarrow heap. The daemon re-reads an archive only when its
+    (mtime, size) changed and ``gc.freeze()``-s the heap after a
+    worker's first task. It wraps ``pyspark.daemon`` instead of copying
+    it, so no second daemon drifts from the installed pyspark. The zip
+    fix has nothing to do on Python >= 3.12, whose zip importers
+    invalidate lazily. ``get_spark`` puts the package on the workers'
+    ``PYTHONPATH`` so the daemon can be imported before any task.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -39,6 +52,8 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.python.factory.idleWorkerMaxPoolSize": "64",
     "spark.python.worker.idleTimeoutSeconds": "0",
     "spark.python.worker.killOnIdleTimeout": "false",
+    # stock daemon minus two fixed per-task costs (module docstring)
+    "spark.python.daemon.module": "askg_spark.worker_daemon",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.parquet.compression.codec": "snappy",
     "spark.sql.session.timeZone": "UTC",
@@ -66,6 +81,25 @@ if os.path.isdir(_SHM) and os.access(_SHM, os.W_OK):
     DEFAULT_CONFS["spark.local.dir"] = os.path.join(_SHM, "askg-spark-local")
 
 
+# The directory askg_spark is imported from (a checkout, site-packages,
+# or a --py-files zip). Python workers must import askg_spark from it.
+_PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
+
+
+def _export_package_path(spark: SparkSession) -> None:
+    """Put ``_PACKAGE_ROOT`` on the Python workers' ``PYTHONPATH``.
+
+    ``SparkContext.environment`` seeds the environment of every Python
+    function this process creates from then on, and already holds any
+    ``spark.executorEnv.PYTHONPATH``; the root is appended to it, so a
+    value set by the caller keeps precedence."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [_PACKAGE_ROOT])
+
+
 def get_spark(
     app_name: str = "askg-spark",
     master: str | None = None,
@@ -82,6 +116,15 @@ def get_spark(
     spark-submit's ``--master`` — exactly the bug that made every
     spark-submit "local[8] vs local[32]" scaling pair run at
     local[*] twice.
+
+    Python workers get the directory ``askg_spark`` was imported from
+    on their ``PYTHONPATH``. The engine's UDFs always needed the
+    package importable on workers; the worker daemon
+    (``spark.python.daemon.module``) needs it before any task runs, and
+    without it every Python task fails, ``createDataFrame`` from a list
+    included. Override ``spark.python.daemon.module`` with
+    ``pyspark.daemon`` in ``extra_confs`` where workers cannot reach
+    that directory.
     """
     master = master or os.environ.get("ASKG_MASTER")
     # spark-submit pre-launches the JVM gateway (and has already fixed
@@ -104,6 +147,7 @@ def get_spark(
     for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    _export_package_path(spark)
     if shuffle_partitions is None and "spark.sql.shuffle.partitions" not in (
             extra_confs or {}):
         # 4x the session's ACTUAL parallelism (read back from the live
@@ -132,3 +176,19 @@ def get_spark(
             "spark.sql.files.minPartitionNum",
             str(4 * spark.sparkContext.defaultParallelism))
     return spark
+
+
+def unpersist_checkpoints(df: DataFrame) -> None:
+    """Unpersist the ``localCheckpoint`` RDDs that ``df`` reads from.
+
+    ``DataFrame.unpersist`` does not release a local checkpoint: the
+    checkpoint is a ``LogicalRDD`` leaf over a persisted RDD, not a
+    cache-manager entry. This unpersists every such leaf of ``df``'s
+    plan, so call it only on a checkpoint (or a projection of one)
+    that the caller owns, once everything that reads it has been
+    materialized."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)

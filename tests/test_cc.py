@@ -1,7 +1,10 @@
 """Connected components on known graph shapes (SURVEY §5 test plan)."""
 from __future__ import annotations
 
-from askg_spark.cc import connected_components
+import pytest
+
+from askg_spark.cc import component_labels, connected_components
+from askg_spark.session import unpersist_checkpoints
 
 
 def _run(spark, edges, vertices, **kw):
@@ -69,6 +72,28 @@ def test_loop_collapse_matches_serial_random_graphs(spark):
         b = _run(spark, edges, verts, final_collapse="loop",
                  contract_rounds=1)
         assert a == b
+
+
+def _persisted(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize("final_collapse", ["serial", "loop"])
+def test_component_labels_leave_only_their_checkpoint(spark,
+                                                      final_collapse):
+    # every intermediate checkpoint is released inside; the caller owns
+    # exactly the one the labels read, and releasing it leaves nothing
+    e = spark.createDataFrame(
+        [("b", "a"), ("b", "c"), ("c", "d"), ("x", "y")],
+        "src string, dst string")
+    before = _persisted(spark)
+    labels = component_labels(e, final_collapse=final_collapse)
+    assert len(_persisted(spark) - before) == 1
+    got = {r["id"]: r["component"] for r in labels.collect()}
+    assert got == {"a": "a", "b": "a", "c": "a", "d": "a",
+                   "x": "x", "y": "x"}
+    unpersist_checkpoints(labels)
+    assert _persisted(spark) - before == set()
 
 
 def test_min_label_matches_union_find():
