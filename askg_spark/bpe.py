@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from askg_spark.session import operator_scope, persist
+
 __all__ = ["word_type_counts", "train_bpe", "apply_merges"]
 
 _EOW = "</w>"
@@ -86,38 +88,31 @@ def _pair_counts(types: DataFrame) -> DataFrame:
             .agg(F.sum("n").alias("freq")))
 
 
+@operator_scope
 def train_bpe(word_counts: DataFrame, n_merges: int = 10,
               min_freq: int = 2) -> list[tuple[str, str, int]]:
     """Learn up to `n_merges` merges; returns [(left, right, freq)]
     in merge order. Stops early when the best pair drops below
     `min_freq`."""
-    types = word_counts.select(
-        "n", _initial_symbols(F.col("word")).alias("syms")).persist()
-    # every round's frame is persisted and kept until the end: the
-    # next round's argmax job is what materializes it (into cache, on
-    # top of the already-cached parent — lineage stays one level
-    # deep), so no extra count() job per round; the frames are
-    # word-TYPE sized, far below executor memory even at web scale
-    persisted = [types]
+    types = persist(word_counts.select(
+        "n", _initial_symbols(F.col("word")).alias("syms")))
+    # every round's frame is cached on top of its cached parent and
+    # kept until the scope releases them all on return; the next
+    # round's argmax job materializes it, so no extra count() job per
+    # round. The frames are word-TYPE sized, far below executor memory
     merges: list[tuple[str, str, int]] = []
-    try:
-        for _ in range(n_merges):
-            best = (_pair_counts(types)
-                    .orderBy(F.desc("freq"), "left", "right")
-                    .limit(1)
-                    .collect())
-            if not best or best[0]["freq"] < min_freq:
-                break
-            left, right, freq = (best[0]["left"], best[0]["right"],
-                                 int(best[0]["freq"]))
-            merges.append((left, right, freq))
-            types = types.select(
-                "n", _merge_expr(F.col("syms"), left, right)
-                .alias("syms")).persist()
-            persisted.append(types)
-    finally:
-        for f in persisted:
-            f.unpersist()
+    for _ in range(n_merges):
+        best = (_pair_counts(types)
+                .orderBy(F.desc("freq"), "left", "right")
+                .limit(1)
+                .collect())
+        if not best or best[0]["freq"] < min_freq:
+            break
+        left, right, freq = (best[0]["left"], best[0]["right"],
+                             int(best[0]["freq"]))
+        merges.append((left, right, freq))
+        types = persist(types.select(
+            "n", _merge_expr(F.col("syms"), left, right).alias("syms")))
     return merges
 
 

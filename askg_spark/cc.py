@@ -63,10 +63,9 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
-from askg_spark.session import unpersist_checkpoints
+from askg_spark.session import checkpoint, operator_scope, release
 
 _STAR_SCHEMA = "u string, v string"
 
@@ -222,13 +221,10 @@ def _loop_collapse(cur: DataFrame, n_part: int, max_iter: int,
     rest on a convergence-speed argument)."""
     und = cur.unionByName(
         cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    labels = (
+    labels = checkpoint(
         und.groupBy("u").agg(F.min("v").alias("lbl"))
         .select("u", F.least("u", "lbl").alias("lbl"))
-        .repartition(n_part, "u")
-        .localCheckpoint(eager=True,
-                         storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
+        .repartition(n_part, "u"))
     for it in range(max_iter):
         # edge step: neighbor labels through the static star edges
         nbr = (
@@ -240,25 +236,19 @@ def _loop_collapse(cur: DataFrame, n_part: int, max_iter: int,
         # twice — the leaf materializes on the round's first action and
         # the second reference reads blocks instead of re-running the
         # edge-step join
-        stepped = (
+        stepped = checkpoint(
             labels.join(nbr, "u", "left")
             .select("u", F.least("lbl", F.coalesce("nl", "lbl"))
-                    .alias("lbl"))
-            .localCheckpoint(eager=False,
-                             storageLevel=StorageLevel.MEMORY_AND_DISK)
-        )
+                    .alias("lbl")), eager=False)
         # jump step: follow the label's label
-        jumped = (
+        jumped = checkpoint(
             stepped.join(
                 stepped.select(F.col("u").alias("lbl"),
                                F.col("lbl").alias("ll")),
                 "lbl", "left")
             .select("u", F.least("lbl", F.coalesce("ll", "lbl"))
                     .alias("lbl"))
-            .repartition(n_part, "u")
-            .localCheckpoint(eager=True,
-                             storageLevel=StorageLevel.MEMORY_AND_DISK)
-        )
+            .repartition(n_part, "u"))
         done = False
         if (it + 1) % check_every == 0 or it == max_iter - 1:
             # labels only decrease, so "no row changed" == fixpoint;
@@ -268,16 +258,11 @@ def _loop_collapse(cur: DataFrame, n_part: int, max_iter: int,
                 jumped.alias("n").join(labels.alias("o"), "u")
                 .filter(F.col("n.lbl") != F.col("o.lbl")).isEmpty()
             )
-        unpersist_checkpoints(labels)
-        unpersist_checkpoints(stepped)
+        release(labels, stepped)
         labels = jumped
         if done:
-            out = labels.select(F.col("u"), F.col("lbl").alias("v")) \
-                .localCheckpoint(eager=True,
-                                 storageLevel=StorageLevel.MEMORY_AND_DISK)
-            unpersist_checkpoints(labels)
-            return out
-    unpersist_checkpoints(labels)
+            return checkpoint(
+                labels.select(F.col("u"), F.col("lbl").alias("v")))
     return None  # cap hit — caller falls back to the serial collapse
 
 
@@ -288,8 +273,8 @@ def connected_components(
 ) -> DataFrame:
     """edges(src,dst) + vertices(id) -> (id, component) where component
     is the lexicographic min id reachable; vertices touching no edge
-    are their own component. See :func:`component_labels`, whose
-    checkpoint the result reads for the rest of the session."""
+    are their own component. The result reads the checkpoint of
+    :func:`component_labels`: release it with ``session.release``."""
     labels = component_labels(edges, max_iter, contract_rounds,
                               contract_partitions, final_collapse)
     singles = vertices.join(labels.select("id"), "id", "left_anti") \
@@ -297,6 +282,7 @@ def connected_components(
     return labels.unionByName(singles)
 
 
+@operator_scope
 def component_labels(
     edges: DataFrame, max_iter: int = 25, contract_rounds: int = 3,
     contract_partitions: int | None = None, final_collapse: str = "serial",
@@ -304,11 +290,9 @@ def component_labels(
     """edges(src,dst) -> (id, component) for every vertex incident to
     an edge, where component is the lexicographic min id reachable.
 
-    The result is a ``localCheckpoint`` (or a projection of one) that
-    the caller owns: every intermediate checkpoint is released here,
-    and the caller releases this one with
-    ``session.unpersist_checkpoints`` once its consumers are
-    materialized.
+    The result reads one checkpoint, which the caller owns and releases
+    with ``session.release`` once its consumers are materialized; every
+    intermediate frame is released here.
 
     ``contract_rounds`` parallel contraction rounds (alternating
     endpoint hashing) then one exact single-partition collapse — a
@@ -382,16 +366,11 @@ def _contract(cur: DataFrame, star_fn, schema: str, n_part: int,
     (millions of rows on web corpora, where most match groups are 2-4
     mentions).
 
-    The output is referenced more than once downstream. Measured on
-    Spark 4 local mode: relying on plan-matching (persist) to dedupe
-    multiple references is NOT reliable for plans containing Python
-    mapInPandas stages under AQE — the event log shows the full
-    upstream DAG re-executing per reference. localCheckpoint truncates
-    the plan to a leaf, so the contraction chain runs exactly once no
-    matter how many consumers reference it. Star rows hold ~one row per
-    vertex incident to an edge (the matched-mention set), orders of
-    magnitude smaller than the corpus, so the checkpoint is cheap even
-    at 10^12 documents."""
+    The output has several consumers, and persist does not reliably
+    dedupe references to mapInPandas plans under AQE (module
+    docstring), so it is checkpointed: the contraction chain runs once.
+    Star rows hold ~one row per matched vertex, so the checkpoint is
+    cheap even at 10^12 documents."""
     for r in range(rounds):
         key = "u" if r % 2 == 0 else "v"
         cur = cur.repartition(n_part, key).mapInPandas(
@@ -400,21 +379,12 @@ def _contract(cur: DataFrame, star_fn, schema: str, n_part: int,
     if final_collapse == "loop":
         # the loop references the star frame every round — cut the
         # mapInPandas chain to a leaf first
-        cur = cur.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        cur = checkpoint(cur)
         out = _loop_collapse(cur, n_part, max_iter)
-        if out is None:  # convergence cap hit — exact serial fallback
-            out = (cur.repartition(1).mapInPandas(star_fn, schema=schema)
-                   .localCheckpoint(
-                       eager=True,
-                       storageLevel=StorageLevel.MEMORY_AND_DISK))
-        unpersist_checkpoints(cur)
-        return out
-    return (
-        cur.repartition(1).mapInPandas(star_fn, schema=schema)
-        .localCheckpoint(eager=True,
-                         storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
+        if out is not None:
+            return out
+        # convergence cap hit — exact serial fallback below
+    return checkpoint(cur.repartition(1).mapInPandas(star_fn, schema=schema))
 
 
 def _int_coded_labels(cur: DataFrame, n_part: int, rounds: int,
@@ -429,19 +399,12 @@ def _int_coded_labels(cur: DataFrame, n_part: int, rounds: int,
     root_code); min(id) per root_code -> the component's lexicographic
     min string; join back. Every frame involved is bounded by the
     matched vertex set, not the corpus."""
-    vmap = (
+    vmap = checkpoint(
         cur.select("u").unionAll(cur.select(F.col("v").alias("u")))
         .distinct()
-        .select(F.col("u").alias("id"), F.xxhash64("u").alias("id_h"))
-        .localCheckpoint(eager=True,
-                         storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    collided = not (
-        vmap.groupBy("id_h").agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1).isEmpty()
-    )
-    if collided:
-        unpersist_checkpoints(vmap)
+        .select(F.col("u").alias("id"), F.xxhash64("u").alias("id_h")))
+    if not (vmap.groupBy("id_h").agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") > 1).isEmpty()):
         return None
     ints = cur.select(F.xxhash64("u").alias("u"),
                       F.xxhash64("v").alias("v"))
@@ -450,14 +413,7 @@ def _int_coded_labels(cur: DataFrame, n_part: int, rounds: int,
     joined = lab_int.join(
         vmap, lab_int["u"] == vmap["id_h"]).select("id", "v")
     comp_min = joined.groupBy("v").agg(F.min("id").alias("label"))
-    labels = (
-        joined.join(comp_min, "v").select("id", "label")
-        .localCheckpoint(eager=True,
-                         storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    unpersist_checkpoints(vmap)
-    unpersist_checkpoints(lab_int)
-    return labels
+    return checkpoint(joined.join(comp_min, "v").select("id", "label"))
 
 
 def _string_coded_labels(cur: DataFrame, n_part: int, rounds: int,

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from askg_spark.session import operator_scope, persist
 from askg_spark.textops import fingerprints, ngrams_from_tokens, tokens
 
 
@@ -54,13 +55,6 @@ def exact_dedup(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------- n-grams
-
-def token_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of a TEXT column. Prefer projecting
-    `tokens(text)` to a column and calling :func:`ngrams_from_tokens`
-    in plans that enumerate grams (see that docstring)."""
-    return ngrams_from_tokens(tokens(text), n)
-
 
 def ngram_jaccard_pairs(
     df: DataFrame, n: int = 3, threshold: float = 0.5,
@@ -314,7 +308,9 @@ def near_dup_clusters(df: DataFrame, n: int = 3, threshold: float = 0.5,
     Scale: both edge generators are the sub-quadratic plans above; the
     CC contraction shuffles one 16-byte row per edge endpoint
     (cc.py). doc_ids ride as zero-padded fixed-width strings so the CC
-    module's lexicographic-min component label IS the numeric min."""
+    module's lexicographic-min component label IS the numeric min.
+    The result reads the CC label checkpoint, which is the caller's to
+    release with ``session.release``."""
     from askg_spark.cc import connected_components
 
     def enc(c: Column) -> Column:
@@ -342,6 +338,7 @@ def near_dup_clusters(df: DataFrame, n: int = 3, threshold: float = 0.5,
 
 # ---------------------------------------------------------------- minhash
 
+@operator_scope
 def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                   num_hashes: int = 32, band_rows: int = 2,
                   bucket_cap: int | None = None) -> DataFrame:
@@ -379,8 +376,9 @@ def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     # keys so exchange reuse can't kick in) — without a persist the
     # tokenize+hash work runs 3x. Same pattern (and eager-materialize
     # rationale) as linking._lsh_pair_ids; the frame is doc_id + one
-    # long array ~ tokens/doc, bounded at any corpus size.
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # long array ~ tokens/doc, bounded at any corpus size. The pairs
+    # read it and the band cache below: both are the caller's.
+    base = persist(base, StorageLevel.MEMORY_AND_DISK)
     base.count()
     n_bands = num_hashes // band_rows
     mh = F.array(*[
@@ -404,7 +402,7 @@ def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     # Both sides of the band self-join (and the optional hot-bucket
     # agg) re-evaluate the 32-hash minhash transform; cache it eagerly
     # — two longs per (doc, band) row.
-    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
+    bands = persist(bands, StorageLevel.MEMORY_AND_DISK)
     bands.count()
     if bucket_cap is not None:
         hot = (bands.groupBy("band")

@@ -15,7 +15,10 @@ guard that makes the two equi-joins survive a web-scale graph.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
+
+from askg_spark.session import checkpoint, operator_scope, persist, release
 
 
 def cooccurrence_edges(df: DataFrame, group_col: str,
@@ -40,6 +43,14 @@ def cooccurrence_edges(df: DataFrame, group_col: str,
               .distinct())
 
 
+def _degrees(e: DataFrame, name: str) -> DataFrame:
+    """(n, name): the degree of every endpoint of the (u, v) edges."""
+    return (e.select(F.col("u").alias("n"))
+            .unionAll(e.select(F.col("v").alias("n")))
+            .groupBy("n").agg(F.count(F.lit(1)).alias(name)))
+
+
+@operator_scope
 def triangle_stats(edges: DataFrame) -> DataFrame:
     """Exact global triangle count over undirected (u, v) edges
     (u <> v, each undirected edge present once in either direction):
@@ -52,17 +63,13 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     residual skew is runtime-split. The two degree lookups broadcast
     when the node dim is small and degrade to shuffled hash joins
     otherwise — never a cross join."""
-    from pyspark import StorageLevel
-
     spark = edges.sparkSession
     e = (edges.select(F.col("u"), F.col("v"))
          .filter(F.col("u") != F.col("v"))
          .select(F.least("u", "v").alias("u"),
                  F.greatest("u", "v").alias("v"))
          .distinct())
-    deg = (e.select(F.col("u").alias("n"))
-           .unionAll(e.select(F.col("v").alias("n")))
-           .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
+    deg = _degrees(e, "d")
     da = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
     db = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
     u_first = (F.col("du") < F.col("dv")) | \
@@ -71,35 +78,34 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # closing join (3 scans) — persist it or the whole
     # co-occurrence + distinct + degree pipeline above re-runs 3x
     # (measured 25.4s -> 9.7s at the 1.2M-edge sf0.1 graph)
-    de = (e.join(da, "u").join(db, "v")
-          .select(F.when(u_first, F.col("u")).otherwise(F.col("v"))
-                  .alias("s"),
-                  F.when(u_first, F.col("v")).otherwise(F.col("u"))
-                  .alias("t"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
-        n_edges = de.count()  # also materializes the persist
-        n_nodes = deg.count()
-        e1 = de.select(F.col("s").alias("a"), F.col("t").alias("b"))
-        e2 = de.select(F.col("s").alias("b"), F.col("t").alias("c"))
-        e3 = de.select(F.col("s").alias("a"), F.col("t").alias("c"))
-        # the wedge stream (sum of oriented-outdeg^2 rows — 60x the
-        # edge count on the dense sf0.1 co-occurrence graph) is the
-        # expensive frame: when the EDGE list itself is
-        # broadcast-sized, hash-build both join sides from it so the
-        # wedges are generated AND closed map-side, never shuffled;
-        # past that, fall back to shuffled equi-joins whose per-key
-        # fan-out the degree orientation bounds by O(sqrt(m))
-        if n_edges <= 8_000_000:
-            e2, e3 = F.broadcast(e2), F.broadcast(e3)
-        n_triangles = e1.join(e2, "b").join(e3, ["a", "c"]).count()
-    finally:
-        de.unpersist()
+    de = persist(
+        e.join(da, "u").join(db, "v")
+        .select(F.when(u_first, F.col("u")).otherwise(F.col("v"))
+                .alias("s"),
+                F.when(u_first, F.col("v")).otherwise(F.col("u"))
+                .alias("t")),
+        StorageLevel.MEMORY_AND_DISK)
+    n_edges = de.count()  # also materializes the persist
+    n_nodes = deg.count()
+    e1 = de.select(F.col("s").alias("a"), F.col("t").alias("b"))
+    e2 = de.select(F.col("s").alias("b"), F.col("t").alias("c"))
+    e3 = de.select(F.col("s").alias("a"), F.col("t").alias("c"))
+    # the wedge stream (sum of oriented-outdeg^2 rows — 60x the edge
+    # count on the dense sf0.1 co-occurrence graph) is the expensive
+    # frame: when the EDGE list itself is broadcast-sized, hash-build
+    # both join sides from it so the wedges are generated AND closed
+    # map-side, never shuffled; past that, fall back to shuffled
+    # equi-joins whose per-key fan-out the degree orientation bounds by
+    # O(sqrt(m))
+    if n_edges <= 8_000_000:
+        e2, e3 = F.broadcast(e2), F.broadcast(e3)
+    n_triangles = e1.join(e2, "b").join(e3, ["a", "c"]).count()
     return spark.createDataFrame(
         [(n_nodes, n_edges, n_triangles)],
         "n_nodes long, n_edges long, n_triangles long")
 
 
+@operator_scope
 def bfs_depths(edges: DataFrame, seeds: DataFrame,
                max_depth: int = 4) -> DataFrame:
     """Multi-source BFS: minimum hop distance (<= max_depth) from any
@@ -110,45 +116,38 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
     edge frame on the frontier's node key, anti-joins already-visited
     nodes, and advances. Per round that is one equi-join shuffle
     keyed by node plus one aggregation; rounds = max_depth, so the
-    total work is O(edges touched) with no plan growth (each round's
-    frontier is a fresh aggregation result, not a deepening lineage —
-    bounded loops at fixed depth need no checkpoint). Web-scale BFS
-    (friend-of-friend audiences, link-distance features) runs this
-    exact shape; hub-node skew lands on the edge join's build side
-    where AQE's skew split handles it.
+    total work is O(edges touched). Each round checkpoints the small
+    visited set (every node reached so far, with its depth) and
+    releases the previous one, so the plan stays flat and at most two
+    rounds are held. Web-scale BFS (friend-of-friend audiences,
+    link-distance features) runs this exact shape; hub-node skew lands
+    on the edge join's build side where AQE's skew split handles it.
 
     `edges` (src, dst) is treated as undirected; `seeds` is one
     column of node ids, depth 0."""
-    bidir = (edges.selectExpr("src AS u", "dst AS v")
-             .unionByName(edges.selectExpr("dst AS u", "src AS v"))
-             .distinct()
-             .persist())  # scanned once per round — without this the
-    # doubled+distinct edge shuffle re-runs every hop
+    # scanned once per round — without this the doubled+distinct edge
+    # shuffle re-runs every hop
+    bidir = persist(edges.selectExpr("src AS u", "dst AS v")
+                    .unionByName(edges.selectExpr("dst AS u", "src AS v"))
+                    .distinct())
     node_col = seeds.columns[0]
     visited = seeds.select(
         F.col(node_col).alias("node"), F.lit(0).alias("depth")).distinct()
-    frontier = visited
-    try:
-        for d in range(1, max_depth + 1):
-            nxt = (frontier.join(bidir, frontier["node"] == bidir["u"])
-                   .select(F.col("v").alias("node"))
-                   .distinct()
-                   .join(visited.select("node"), "node", "left_anti")
-                   .withColumn("depth", F.lit(d)))
-            # materialize the (small) frontier once so visited's
-            # growing union doesn't recompute every prior hop's joins
-            nxt = nxt.localCheckpoint(eager=True)
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt)
-            frontier = nxt
-        # pin the result before releasing the cached edge frame
-        visited = visited.localCheckpoint(eager=True)
-    finally:
-        bidir.unpersist()
+    for d in range(1, max_depth + 1):
+        frontier = visited.filter(F.col("depth") == d - 1)
+        nxt = (frontier.join(bidir, frontier["node"] == bidir["u"])
+               .select(F.col("v").alias("node"))
+               .distinct()
+               .join(visited.select("node"), "node", "left_anti")
+               .withColumn("depth", F.lit(d)))
+        prev, visited = visited, checkpoint(visited.unionByName(nxt))
+        release(prev)
+        if d < max_depth and visited.filter(F.col("depth") == d).isEmpty():
+            break
     return visited
 
 
+@operator_scope
 def kcore(edges: DataFrame, k: int, max_rounds: int = 16,
           broadcast_limit: int = 100_000_000) -> DataFrame:
     """k-core of an undirected graph — the maximal subgraph where
@@ -169,12 +168,13 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 16,
     warm at the sf0.1 graph on a contended host). No collect of
     data rows; the only driver sync is one scalar count per round for
     the convergence test, and each round's frame is an eager
-    localCheckpoint so lineage stays flat (same bounded-loop shape as
-    bfs_depths). The broadcast is gated, not forced (advisor r4:
-    F.broadcast is a hard hint — Spark attempts it regardless of size
-    and OOMs the driver rather than falling back): the loop already
-    holds each round's edge count as a driver-side int, and nodes <=
-    2*edges, so when the surviving edge count exceeds
+    localCheckpoint that releases the previous round's, so lineage
+    stays flat (same bounded-loop shape as bfs_depths). The broadcast
+    is gated, not forced (advisor r4: F.broadcast is a hard hint —
+    Spark attempts it regardless of size and OOMs the driver rather
+    than falling back): the loop already holds each round's edge
+    count as a driver-side int, and nodes <= 2*edges, so when the
+    surviving edge count exceeds
     ``broadcast_limit`` the hint is SKIPPED and the semi-joins run as
     ordinary shuffled joins — same plan shape, automatic degradation.
     Rounds are data-bounded: peel cascades are shallow in
@@ -182,26 +182,23 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 16,
     runaway backstop and the oracle unrolls the same bound — a graph
     still peeling after max_rounds raises rather than returning a
     non-fixed-point)."""
-    cur = (edges.select(F.least("u", "v").alias("u"),
-                        F.greatest("u", "v").alias("v"))
-           .filter(F.col("u") != F.col("v"))
-           .distinct()
-           .localCheckpoint(eager=True))
+    cur = checkpoint(edges.select(F.least("u", "v").alias("u"),
+                                  F.greatest("u", "v").alias("v"))
+                     .filter(F.col("u") != F.col("v"))
+                     .distinct())
     n_edges = cur.count()
     for _ in range(max_rounds):
-        deg = (cur.select(F.col("u").alias("n"))
-               .unionAll(cur.select(F.col("v").alias("n")))
-               .groupBy("n").agg(F.count(F.lit(1)).alias("c")))
-        keep = deg.filter(F.col("c") >= k).select("n")
+        keep = _degrees(cur, "c").filter(F.col("c") >= k).select("n")
         if n_edges <= broadcast_limit:
             keep = F.broadcast(keep)
-        nxt = (cur.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
-               .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
-               .select("u", "v")
-               .localCheckpoint(eager=True))
+        nxt = checkpoint(
+            cur.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
+            .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
+            .select("u", "v"))
         n_next = nxt.count()
         if n_next == n_edges:
             break
+        release(cur)
         cur, n_edges = nxt, n_next
         if n_edges == 0:
             break
@@ -211,19 +208,15 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 16,
         # (cascade depth == max_rounds), the state is correct and only
         # the confirming no-op round is missing: check stability with
         # one extra aggregate instead of raising on a right answer
-        deg = (cur.select(F.col("u").alias("n"))
-               .unionAll(cur.select(F.col("v").alias("n")))
-               .groupBy("n").agg(F.count(F.lit(1)).alias("c")))
-        if deg.filter(F.col("c") < k).limit(1).count() > 0:
+        if _degrees(cur, "c").filter(F.col("c") < k).limit(1).count() > 0:
             raise RuntimeError(
                 f"k-core peel did not converge within {max_rounds} rounds")
-    return (cur.select(F.col("u").alias("n"))
-            .unionAll(cur.select(F.col("v").alias("n")))
-            .groupBy("n").agg(F.count(F.lit(1)).alias("degree"))
-            .select(F.col("n").alias("node"),
-                    F.col("degree").cast("long").alias("degree")))
+    return _degrees(cur, "degree").select(
+        F.col("n").alias("node"),
+        F.col("degree").cast("long").alias("degree"))
 
 
+@operator_scope
 def random_walks(edges: DataFrame, starts: DataFrame,
                  length: int = 4) -> DataFrame:
     """Deterministic random walks over an undirected edge set — the
@@ -252,13 +245,14 @@ def random_walks(edges: DataFrame, starts: DataFrame,
     derivation, materialized once). Hub starts contribute their full
     neighbor list to one aggregation key: bounded by max degree, the
     same envelope every per-node op here carries."""
-    raw = (edges.select(F.col("u").alias("s"), F.col("v").alias("d"))
-           .unionByName(edges.select(F.col("v").alias("s"),
-                                     F.col("u").alias("d")))
-           # each hop probes this frame; pin it once or the caller's
-           # upstream lineage (typically a distinct over the triple
-           # store) re-executes per hop — 8 scans for a 4-hop walk
-           .localCheckpoint(eager=True))
+    # each hop probes this frame; pin it once or the caller's upstream
+    # lineage (typically a distinct over the triple store) re-executes
+    # per hop — 8 scans for a 4-hop walk. The walks read it: it is the
+    # caller's.
+    raw = checkpoint(
+        edges.select(F.col("u").alias("s"), F.col("v").alias("d"))
+        .unionByName(edges.select(F.col("v").alias("s"),
+                                  F.col("u").alias("d"))))
     start_col = starts.columns[0]
     base = starts.select(F.col(start_col).alias("start")).distinct()
     cur, cols = base, ["start"]

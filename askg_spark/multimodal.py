@@ -826,19 +826,6 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
         run, schema=FRAME_SCHEMA)
 
 
-def media_feature_stats(decoded: DataFrame) -> DataFrame:
-    """Aggregate check over decoded media: count, dimension bounds —
-    ints only, a cheap correctness probe over the decode stage."""
-    ok = decoded.filter(F.col("decode_error").isNull())
-    return ok.agg(
-        F.count(F.lit(1)).alias("n_decoded"),
-        F.min("width").cast("long").alias("min_width"),
-        F.max("width").cast("long").alias("max_width"),
-        F.min("height").cast("long").alias("min_height"),
-        F.max("height").cast("long").alias("max_height"),
-    )
-
-
 def synth_png_corpus(docs: DataFrame) -> DataFrame:
     """Planted-payload media source: one real (bit-valid) synthetic PNG
     per doc_id — the shape `attach_payload` fakes, but with payloads the

@@ -36,7 +36,7 @@ from askg_spark.extract import extract_mentions
 from askg_spark.linking import LinkConfig, candidate_edges
 from askg_spark.metrics import StageTimer, new_run_id, partition_lineage
 from askg_spark.relations import infer_relationship_edges
-from askg_spark.session import unpersist_checkpoints
+from askg_spark.session import checkpoint, operator_scope, persist
 from askg_spark.triples import build_triples
 
 log = logging.getLogger(__name__)
@@ -65,6 +65,10 @@ class PipelineConfig:
 
 @dataclass
 class PipelineResult:
+    """The frames of one ``run_pipeline`` run. They read two stored
+    frames, the ones several downstream stages reuse: ``mentions`` (a
+    cache) and ``entities`` (a local checkpoint). Both are the
+    caller's: release them with ``session.release``."""
     mentions: DataFrame
     rejects: DataFrame
     entities: DataFrame
@@ -73,55 +77,34 @@ class PipelineResult:
     timer: StageTimer
 
 
+@operator_scope
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     cfg: PipelineConfig | None = None,
 ) -> PipelineResult:
-    """Pure in-memory run (tests, small scale). Persist points are the
-    two frames reused by several downstream stages, and they are the
-    only ones the run leaves persisted: ``mentions`` (a cache; release
-    with ``unpersist()``) and ``entities`` (a local checkpoint; release
-    with ``session.unpersist_checkpoints``). Both are the caller's."""
+    """Pure in-memory run (tests, small scale). Every frame the run
+    stores is released before it returns, except the two the result
+    reads (``PipelineResult``)."""
     cfg = cfg or PipelineConfig()
     timer = StageTimer()
 
     mentions_raw, rejects = extract_mentions(pages)
     enriched = enrich_mentions(mentions_raw)
-    # Mentions are far smaller than pages (projection drops html), so
-    # inheriting the page scan's partitioning leaves hundreds of
-    # near-empty cache partitions that every downstream AQE stage
-    # re-scans as its own task wave (measured: 201-partition cache ->
-    # 15 concurrent 201-task cache-read stages inside ONE downstream
-    # job). Re-key to the session's shuffle parallelism: one cheap
-    # shuffle of the small mention set, balanced cache reads after.
-    # Cache partition count tracks the session's CORE count, not the
-    # (4x larger) shuffle-partition conf: every downstream job re-scans
-    # this cache as one task wave, and tiny over-partitioned caches pay
-    # that wave's scheduling overhead dozens of times per pipeline.
-    # One wave of defaultParallelism tasks is the floor for any core
-    # count. (At real scale the mention set is large enough that AQE /
-    # maxPartitionBytes governs instead; this branch only fires when
-    # the cache would otherwise be over-split.)
-    # Cache width: up to 4x cores is fine (short balanced waves); only
-    # genuinely over-split scans (many-small-file tables) pay the
-    # re-key shuffle. Re-keying when the scan is already ~4x cores was
-    # measured NEGATIVE at the 1M-page corpus: the repartition
-    # round-trip added ~100 core-s (serialize + shuffle + rebuild) and
-    # the narrower cache throttled every downstream python stage that
-    # inherits its partitioning (link 95s -> 121s at local[8] with a
-    # cores-wide cache).
-    # Re-key width is BYTE-bounded relative to the scan, not a bare
-    # 2x-cores: collapsing an arbitrarily wide scan to 2x cores makes
-    # cache-partition size proportional to corpus/cores — at the 4M-page
-    # corpus on local[2] that was 4 partitions x ~1.8 GB, which broke
-    # the 2 GB block-serialization limit outright, and on a real
-    # cluster it would OOM executors long before that. Coalescing by at
-    # most 8x keeps each cache partition within ~8 scan splits (scan
-    # splits are <= maxPartitionBytes of PAGES; mentions are a small
-    # fraction of that), so partition bytes stay bounded at any corpus
-    # size while over-split scans still lose their per-wave scheduling
-    # overhead.
+    # Cache width. Mentions are far smaller than pages (projection
+    # drops html), and every downstream job re-scans this cache as one
+    # task wave, so an over-split scan (many-small-file tables) leaves
+    # near-empty cache partitions whose wave overhead is paid dozens of
+    # times per pipeline (measured: a 201-partition cache -> 15
+    # concurrent 201-task cache-read stages inside ONE downstream job).
+    # Only such scans, wider than 8x cores, pay a re-key shuffle. Up to
+    # ~4x cores needs none: re-keying there measured NEGATIVE at the
+    # 1M-page corpus (~100 core-s of round-trip, and link 95s -> 121s at
+    # local[8] through a narrower cache). The re-key coalesces by at
+    # most 8x, so a cache partition holds ~8 scan splits whatever the
+    # corpus size: collapsing straight to 2x cores made 4 x ~1.8 GB
+    # partitions at the 4M-page corpus on local[2], past the 2 GB block
+    # limit.
     n_part = spark.sparkContext.defaultParallelism
     n_scan = enriched.rdd.getNumPartitions()
     if n_scan > 8 * n_part:
@@ -137,7 +120,7 @@ def run_pipeline(
     # N->4N scaling loss). With spark.local.dir on tmpfs the disk
     # tier is RAM-backed; on a real cluster it is node-local NVMe —
     # either way strictly cheaper than recomputing a Python UDF.
-    enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
+    enriched = persist(enriched, StorageLevel.MEMORY_AND_DISK)
     # eager: build the extraction cache ONCE before the linking DAG
     # fans out — exact-edge branches, the LSH fit and the scorer all
     # reference this frame, and evaluating them against a cold cache
@@ -154,9 +137,8 @@ def run_pipeline(
     # Truncating the plan to a leaf makes the linking DAG run exactly
     # once; the edge set (LSH + exact-key output) is tiny relative to
     # the corpus at any scale.
-    edges = timer.time("link", lambda: candidate_edges(
-        enriched, cfg.link).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK))
+    edges = timer.time("link", lambda: checkpoint(
+        candidate_edges(enriched, cfg.link)))
     # mentions touching no edge get no label: the left join's
     # coalesce makes them their own component
     labels = timer.time("cc", lambda: component_labels(
@@ -176,14 +158,8 @@ def run_pipeline(
     # 215s -> 30s for the same job). At scale the materialized-table
     # path (run_pipeline_materialized) provides the same cut via
     # parquet.
-    entities = timer.time("canonicalize", lambda: assign_global_ids(
-        canonical_entities(with_comp)).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK))
-    # Only entities read the edge and label checkpoints, and entities
-    # is now a materialized leaf: release them, so the run leaves
-    # exactly the returned frames persisted (mentions, entities).
-    unpersist_checkpoints(edges)
-    unpersist_checkpoints(labels)
+    entities = timer.time("canonicalize", lambda: checkpoint(
+        assign_global_ids(canonical_entities(with_comp))))
 
     rel_edges = timer.time("relations", lambda: infer_relationship_edges(
         entities, cfg.max_entities_per_key))

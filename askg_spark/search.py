@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from askg_spark.session import operator_scope, persist
+
 
 def clean_cypher(q: Column) -> Column:
     """P13: strip markdown code fences + surrounding whitespace from a
@@ -215,6 +217,7 @@ def similar_servers(entities: DataFrame, limit: int = 10,
                                      max_entities_per_key)
 
 
+@operator_scope
 def _similar_servers_classes(entities: DataFrame, limit: int,
                              author_cap: int | None = None) -> DataFrame:
     """Exact class-decomposition plan (see similar_servers docstring).
@@ -251,7 +254,7 @@ def _similar_servers_classes(entities: DataFrame, limit: int,
     # classes the birthday bound is ~C²/2^65 ≈ 5e-13 — far below the
     # accepted xxhash64 tolerances elsewhere in this repo (gram keys,
     # band keys), and the fallback threshold caps C by construction.
-    ent = ent.persist()
+    ent = persist(ent)
 
     classes = (ent.groupBy("cls").agg(
         F.first("cats").alias("cats"), F.first("ops").alias("ops"),
@@ -281,7 +284,7 @@ def _similar_servers_classes(entities: DataFrame, limit: int,
     cls_pairs = (ca.crossJoin(cb).withColumn("s0", s0.cast("long"))
                  .filter(F.col("s0") > 0)
                  .select("cls_a", "cls_b", "s0", "n_b"))
-    cls_pairs = cls_pairs.persist()
+    cls_pairs = persist(cls_pairs)
     # keep candidate classes until strictly-better-scored classes
     # already cover k+1 members; s0 is integral so a range frame
     # ending at -1 is exactly "strictly greater score" (ties included)

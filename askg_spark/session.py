@@ -23,12 +23,25 @@ merely *tested* on local[N]:
     fix has nothing to do on Python >= 3.12, whose zip importers
     invalidate lazily. ``get_spark`` puts the package on the workers'
     ``PYTHONPATH`` so the daemon can be imported before any task.
+
+One lifetime rule covers every cached and checkpointed frame.
+Operators store frames only through :func:`persist` and
+:func:`checkpoint`, inside a function wrapped by :func:`operator_scope`.
+When it returns, the scope releases all it stored except what its
+result reads; that passes to the caller (the enclosing scope, which
+applies the same rule, or the code that called the operator). A loop
+releases each round with :func:`release` once the next is
+materialized. ``release`` frees caches and local checkpoints alike,
+without blocking, so no caller needs to know which kind it holds.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONFS: dict[str, str] = {
@@ -178,17 +191,113 @@ def get_spark(
     return spark
 
 
-def unpersist_checkpoints(df: DataFrame) -> None:
-    """Unpersist the ``localCheckpoint`` RDDs that ``df`` reads from.
+# ------------------------------------------------------- frame lifetimes
 
-    ``DataFrame.unpersist`` does not release a local checkpoint: the
-    checkpoint is a ``LogicalRDD`` leaf over a persisted RDD, not a
-    cache-manager entry. This unpersists every such leaf of ``df``'s
-    plan, so call it only on a checkpoint (or a projection of one)
-    that the caller owns, once everything that reads it has been
-    materialized."""
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
-    while leaves.hasNext():
-        leaf = leaves.next()
-        if leaf.getClass().getSimpleName() == "LogicalRDD":
-            leaf.rdd().unpersist(False)
+class _Scopes(threading.local):
+    def __init__(self) -> None:
+        self.stack: list[list] = []  # per open scope: (session, leaf)
+
+
+_OPEN = _Scopes()
+
+
+def _kind(leaf) -> str:
+    return leaf.getClass().getSimpleName()
+
+
+def _leaves(df: DataFrame) -> list:
+    """The cache (``InMemoryRelation``) and checkpoint (``LogicalRDD``)
+    leaves ``df`` reads. Caches are substituted afresh: the frame's own
+    ``withCachedData`` is fixed when it is first planned."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    it = cm.useCachedData(df._jdf.queryExecution().analyzed()) \
+        .collectLeaves().iterator()
+    out = []
+    while it.hasNext():
+        leaf = it.next()
+        if _kind(leaf) in ("InMemoryRelation", "LogicalRDD"):
+            out.append(leaf)
+    return out
+
+
+def _same(a, b) -> bool:
+    if _kind(a) != _kind(b):
+        return False
+    if _kind(a) == "LogicalRDD":
+        return a.rdd().id() == b.rdd().id()
+    # the cache manager tells its entries apart by sameResult
+    return a.cacheBuilder().logicalPlan().sameResult(
+        b.cacheBuilder().logicalPlan())
+
+
+def _drop(jspark, leaf) -> None:
+    if _kind(leaf) == "LogicalRDD":
+        leaf.rdd().unpersist(False)
+    else:
+        jspark.sharedState().cacheManager().uncacheQuery(
+            jspark, leaf.cacheBuilder().logicalPlan(), False, False)
+
+
+def _own(df: DataFrame) -> DataFrame:
+    if _OPEN.stack:
+        jspark = df.sparkSession._jsparkSession
+        _OPEN.stack[-1].extend((jspark, leaf) for leaf in _leaves(df))
+    return df
+
+
+def persist(df: DataFrame, level: StorageLevel =
+            StorageLevel.MEMORY_AND_DISK_DESER) -> DataFrame:
+    """``df.persist(level)``, owned by the innermost open scope."""
+    return _own(df.persist(level))
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """A MEMORY_AND_DISK ``localCheckpoint`` of ``df``, owned by the
+    innermost open scope: consumers read blocks, never ``df``'s plan."""
+    return _own(df.localCheckpoint(
+        eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK))
+
+
+def release(*dfs: DataFrame) -> None:
+    """Release the caches and checkpoints ``dfs`` read, once all that
+    reads them is materialized. Inside an operator scope only the
+    scope's own are released: an operator never frees its inputs."""
+    for df in dfs:
+        for leaf in _leaves(df):
+            if _OPEN.stack:
+                made = _OPEN.stack[-1]
+                hit = [_same(m[1], leaf) for m in made]
+                if not any(hit):
+                    continue
+                made[:] = [m for m, h in zip(made, hit) if not h]
+            _drop(df.sparkSession._jsparkSession, leaf)
+
+
+def operator_scope(fn):
+    """Release, when ``fn`` returns or raises, the frames it stored
+    (its callees' included), except those its result reads: a frame, or
+    the frame fields of a returned object. Those pass to the caller."""
+    @functools.wraps(fn)
+    def run(*args, **kwargs):
+        made: list = []
+        _OPEN.stack.append(made)
+        try:
+            out = fn(*args, **kwargs)
+        except BaseException:
+            for m in made:
+                _drop(*m)
+            raise
+        finally:
+            _OPEN.stack.pop()
+        frames = ([out] if isinstance(out, DataFrame) else
+                  [x for x in getattr(out, "__dict__", {}).values()
+                   if isinstance(x, DataFrame)])
+        reads = [leaf for df in frames for leaf in _leaves(df)]
+        for m in made:
+            if any(_same(m[1], r) for r in reads):
+                if _OPEN.stack:
+                    _OPEN.stack[-1].append(m)
+            else:
+                _drop(*m)
+        return out
+    return run

@@ -25,6 +25,35 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from askg_spark import schemas
 from askg_spark.enrich import enrich_mentions
 from askg_spark.extract import extract_mentions
+from askg_spark.session import operator_scope, persist
+
+
+def _drain(stream: DataFrame, out_dir: str, checkpoint_dir: str) -> int:
+    """Run ``stream`` with ``Trigger.AvailableNow`` into ``out_dir``,
+    one overwritten ``_batch=<id>`` partition per micro-batch; return
+    the rows written. The batch is persisted so the row count and the
+    write share one computation."""
+    counted = {"n": 0}
+
+    @operator_scope
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = persist(batch_df)
+        n = batch_df.count()
+        counted["n"] += n
+        if n:
+            (batch_df.withColumn("_batch", F.lit(int(batch_id)))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("_batch")
+             .parquet(out_dir))
+
+    (stream.writeStream
+     .foreachBatch(sink)
+     .option("checkpointLocation", checkpoint_dir)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+    return counted["n"]
 
 
 def incremental_extract(
@@ -43,8 +72,7 @@ def incremental_extract(
     between the write and the checkpoint commit replays the batch
     idempotently instead of duplicating rows — the at-least-once
     foreachBatch contract made idempotent by keying output on batch_id
-    (ADVICE r1). The batch is persisted so the row count and the write
-    share one computation."""
+    (ADVICE r1)."""
     pages = (
         spark.readStream.schema(schemas.PAGES)
         .option("maxFilesPerTrigger", 64)
@@ -52,32 +80,7 @@ def incremental_extract(
     )
     mentions, _ = extract_mentions(pages)
     enriched = enrich_mentions(mentions)
-
-    counted = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            n = batch_df.count()
-            counted["n"] += n
-            if n:
-                (batch_df.withColumn("_batch", F.lit(int(batch_id)))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("_batch")
-                 .parquet(out_dir))
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        enriched.writeStream
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return counted["n"]
+    return _drain(enriched, out_dir, checkpoint_dir)
 
 
 def windowed_mention_counts(
@@ -171,28 +174,4 @@ def changed_pages_extract(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    counted = {"n": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            n = batch_df.count()
-            counted["n"] += n
-            if n:
-                (batch_df.withColumn("_batch", F.lit(int(batch_id)))
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("_batch")
-                 .parquet(out_dir))
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        changed.writeStream
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return counted["n"]
+    return _drain(changed, out_dir, checkpoint_dir)

@@ -800,6 +800,7 @@ def dsir_scores(raw: DataFrame, target: DataFrame,
 
 
 _LONG_MAX = (1 << 63) - 1
+_LONG_MIN = -(1 << 63)
 
 
 def floor_div_exact(num: Column, den: Column) -> Column:
@@ -824,11 +825,12 @@ def floor_div_exact(num: Column, den: Column) -> Column:
 
 
 def _guarded_long(col: Column, what: str) -> Column:
-    """CAST exact-decimal -> BIGINT that RAISES on out-of-range
-    instead of silently wrapping/nulling (advisor r4: document the
-    envelope in code, not just prose). The guard is a per-row codegen
-    branch — free next to the shuffle it follows."""
-    return (F.when(col <= F.lit(_LONG_MAX).cast("decimal(38,0)"),
+    """CAST exact-decimal -> BIGINT that RAISES on a value outside
+    [-2^63, 2^63-1] instead of silently wrapping/nulling (advisor r4:
+    document the envelope in code, not just prose). The guard is a
+    per-row codegen branch — free next to the shuffle it follows."""
+    return (F.when(col.between(F.lit(_LONG_MIN).cast("decimal(38,0)"),
+                               F.lit(_LONG_MAX).cast("decimal(38,0)")),
                    col.cast("long"))
             .otherwise(F.raise_error(
                 F.lit(f"{what} exceeds BIGINT range: lower `scale` "

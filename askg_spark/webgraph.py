@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from askg_spark.session import checkpoint, operator_scope, persist, release
+
 # double-quoted href attributes; the corpus renderer escapes embedded
 # quotes (webcorpus._esc), so [^"]* is exact for our page families and
 # the standard approximation for wild HTML
@@ -224,13 +226,8 @@ class _AqeOff:
     exchange AQE re-plans becomes its own driver-scheduled job — tiny
     per-iteration frames turn into dozens of ~1s scheduling rounds
     (the round-1 CC pathology). Restores the prior setting on exit,
-    exception or not.
-
-    Conf is per-SESSION: apply this to a dedicated child session
-    (`spark.newSession()` — shared SparkContext and cache, isolated
-    conf) when other queries may run concurrently. pagerank() does
-    exactly that: its loop body runs on a child session, so the
-    override can never leak into a caller's concurrent queries."""
+    exception or not. Conf is per-SESSION: pagerank() applies this to
+    a child session, so a caller's concurrent queries never see it."""
 
     def __init__(self, spark):
         self._spark = spark
@@ -264,6 +261,7 @@ class _ShufflePartitions:
         return False
 
 
+@operator_scope
 def pagerank(edges: DataFrame, iterations: int = 10,
              damping: float = 0.85,
              checkpoint_every: int = 4) -> DataFrame:
@@ -296,12 +294,12 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     # edges is referenced 3x (verts union, outdeg, fan) — persist, or
     # an expensive upstream (page render + regex extract) re-executes
     # per reference (measured 39s -> 12s for the sf0.001 driver query)
-    edges = (edges.select("src", "dst").distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    verts = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    edges = persist(edges.select("src", "dst").distinct(),
+                    StorageLevel.MEMORY_AND_DISK)
+    verts = persist(edges.select(F.col("src").alias("node"))
+                    .union(edges.select(F.col("dst").alias("node")))
+                    .distinct(),
+                    StorageLevel.MEMORY_AND_DISK)
     n = verts.count()
     if n == 0:
         return verts.withColumn("rank", F.lit(0.0))
@@ -309,8 +307,7 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     # (src -> dst, 1/outdeg(src)) is loop-invariant; one narrow frame
     outdeg = edges.groupBy("src").agg(
         (F.lit(1.0) / F.count(F.lit(1))).alias("w"))
-    fan = (edges.join(outdeg, "src")
-           .persist(StorageLevel.MEMORY_AND_DISK))
+    fan = persist(edges.join(outdeg, "src"), StorageLevel.MEMORY_AND_DISK)
 
     # Data-proportional shuffle width for the loop body: with AQE off
     # (below), every exchange inherits spark.sql.shuffle.partitions —
@@ -350,9 +347,7 @@ def pagerank(edges: DataFrame, iterations: int = 10,
         spark.catalog.dropGlobalTempView(f"{tag}_fan")
         spark.catalog.dropGlobalTempView(f"{tag}_verts")
     # the final ranks frame is an eager checkpoint — self-contained —
-    # so the loop-invariant caches can be dropped before returning
-    for df in (fan, verts, edges):
-        df.unpersist()
+    # so the scope releases the loop-invariant caches on return
     return ranks
 
 
@@ -386,9 +381,8 @@ def _pagerank_loop(spark, fan, verts, ranks, iterations, damping, base,
                 )
             )
             if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-                ranks = ranks.localCheckpoint(
-                    eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+                ranks = checkpoint(ranks)
                 if prev is not None:
-                    prev.unpersist()
+                    release(prev)
                 prev = ranks
     return ranks

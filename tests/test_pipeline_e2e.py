@@ -83,31 +83,6 @@ def test_determinism_two_runs(spark, result):
     assert first == second
 
 
-def test_only_returned_frames_stay_persisted(spark, result):
-    """run_pipeline releases its link-edge and CC label checkpoints:
-    every RDD it leaves persisted is the mentions cache or the entities
-    checkpoint, and the lazy triples, which read only entities, are
-    unchanged."""
-    _, first, _ = result
-
-    def persisted():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    before = persisted()
-    pages = generate_pages(spark, n_servers=N_SERVERS, seed=SEED)
-    res = run_pipeline(spark, pages, PipelineConfig())
-    cached = spark._jsparkSession.sharedState().cacheManager() \
-        .lookupCachedData(res.mentions._jdf).get()
-    mentions_rdd = cached.cachedRepresentation().cacheBuilder() \
-        .cachedColumnBuffers().id()
-    entities_rdd = res.entities._jdf.queryExecution().analyzed().rdd().id()
-    left = persisted() - before
-    assert entities_rdd in left
-    assert left <= {mentions_rdd, entities_rdd}
-    assert {(r["subj"], r["pred"], r["obj"])
-            for r in res.triples.collect()} == first
-
-
 def test_triples_unique_on_spo(result):
     res, _, _ = result
     n = res.triples.count()

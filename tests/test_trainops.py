@@ -1457,6 +1457,21 @@ def test_floor_div_exact_and_overflow_guard(spark):
                 F.lit(str(2**63)).cast("decimal(38,0)"), "t")).collect()
 
 
+def test_guarded_long_guards_both_ends(spark):
+    """_guarded_long keeps both BIGINT end points and RAISES below
+    -2^63 as it does above 2^63-1, instead of wrapping or nulling."""
+    from pyspark.sql import functions as F
+
+    def guarded(v):
+        return spark.range(1).select(textops._guarded_long(
+            F.lit(str(v)).cast("decimal(38,0)"), "t")).collect()[0][0]
+
+    assert guarded(-2**63) == -2**63
+    assert guarded(2**63 - 1) == 2**63 - 1
+    with pytest.raises(Exception, match="exceeds BIGINT range"):
+        guarded(-2**63 - 1)
+
+
 def test_unigram_lm_scores_exact_integers(spark):
     """Closed-form check of the exact count-ratio pipeline: token
     counts a=3 b=2 c=1 (N=6, V=3), add-one inverse probability

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 from datetime import date, datetime
 from decimal import Decimal
@@ -78,12 +79,17 @@ def canonical_rows(cols, rows) -> list[tuple[str, ...]]:
 
 
 def value_hash(canon: list[tuple[str, ...]]) -> str:
+    """sha256 over the canonical rows. Every row is prefixed with its
+    cell count and every cell with its byte length, so no cell content
+    can pass for a boundary: two rowsets hash equal only if their cells
+    are equal."""
     h = hashlib.sha256()
     for row in canon:
+        h.update(f"{len(row)}:".encode())
         for cell in row:
-            h.update(cell.encode())
-            h.update(b"\x01")
-        h.update(b"\x02")
+            b = cell.encode()
+            h.update(f"{len(b)}:".encode())
+            h.update(b)
     return h.hexdigest()
 
 
@@ -91,7 +97,8 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import duckdb
 
     import __spark_entry__ as entrymod
@@ -141,8 +148,9 @@ def main() -> int:
             oc = canonical_rows(ocols, orows)
             sh, oh = value_hash(sc), value_hash(oc)
             if sh != oh:
-                extra = [r for r in sc if r not in set(oc)][:3]
-                miss = [r for r in oc if r not in set(sc)][:3]
+                sset, oset = set(sc), set(oc)
+                extra = [r for r in sc if r not in oset][:3]
+                miss = [r for r in oc if r not in sset][:3]
                 problems.append(
                     f"hash {sh[:16]} != {oh[:16]}; "
                     f"spark-extra={extra} missing={miss}")

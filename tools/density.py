@@ -22,14 +22,15 @@ both levels now see the same per-core cache/bandwidth, so the ratio
 measures the SOFTWARE's scaling (shuffle width, stragglers, serial
 stages), which is the thing that transfers to a real cluster.
 
-Straight-pinned numbers (tools/quiet_sampler.py) remain the primary
-disclosure; this protocol is reported alongside them, labeled.
+Straight-pinned numbers (BENCH.md §1, from the samplers kept in git
+history at commit 7ae147d) remain the primary disclosure; this protocol
+is reported alongside them, labeled.
 
 Usage:
     python tools/density.py --servers 800000 \
         --pages /dev/shm/askg-scaling-pages-800000 \
         --cores 2 --copies 4 --pairs 3 \
-        --out /root/repo/.scaling_density_800k.jsonl
+        --out density_800k.jsonl
 """
 
 from __future__ import annotations
@@ -39,11 +40,43 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
+import zipfile
 
-sys.path.insert(0, __file__.rsplit("/", 1)[0])
-from scaling import REPO, _load_avg, _run, _steal_ticks, _zip_pkg  # noqa: E402
-from quiet_sampler import steal_cores  # noqa: E402
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _zip_pkg() -> str:
+    path = os.path.join(tempfile.gettempdir(), "askg_spark_density.zip")
+    with zipfile.ZipFile(path, "w") as zf:
+        pkg = os.path.join(REPO, "askg_spark")
+        for root, _, files in os.walk(pkg):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    zf.write(full, os.path.relpath(full, REPO))
+    return path
+
+
+def _load_avg() -> float:
+    with open("/proc/loadavg") as fh:
+        return float(fh.read().split()[0])
+
+
+def _steal_ticks() -> int:
+    """Cumulative hypervisor steal ticks (all vCPUs, 10 ms each). On a
+    shared VM, steal inflates every measured duration; the per-sample
+    delta makes co-tenant interference auditable per run."""
+    with open("/proc/stat") as fh:
+        return int(fh.readline().split()[8])
+
+
+def steal_cores(window: float = 15.0) -> float:
+    """Average stolen cores over `window` seconds."""
+    s0, t0 = _steal_ticks(), time.monotonic()
+    time.sleep(window)
+    return (_steal_ticks() - s0) * 0.01 / (time.monotonic() - t0)
 
 
 def _dense_cmd(copy: int, cores: int, servers: int, zip_path: str,
@@ -57,6 +90,29 @@ def _dense_cmd(copy: int, cores: int, servers: int, zip_path: str,
         os.path.join(REPO, "askg_spark", "cli.py"),
         "bench", "--servers", str(servers), "--pages", pages,
     ]
+
+
+def run_big(cores: int, servers: int, zip_path: str, pages: str,
+            timeout: int) -> dict:
+    """One bench run with the whole process tree pinned to cores
+    0..cores-1 (JVM, shuffle/GC threads and Python workers alike)."""
+    load, steal0, t0 = _load_avg(), _steal_ticks(), time.monotonic()
+    proc = subprocess.run(
+        _dense_cmd(0, cores, servers, zip_path, pages,
+                   os.environ.get("ASKG_DRIVER_MEM", "48g")),
+        capture_output=True, text=True, timeout=timeout, cwd=REPO)
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    if not line:
+        raise RuntimeError(
+            f"bench produced no JSON (rc={proc.returncode}):\n"
+            + proc.stderr[-8000:])
+    wall = time.monotonic() - t0
+    rec = json.loads(line[-1])
+    rec.update(cores=cores, load_before=load, load_after=_load_avg(),
+               steal_corepct=round(
+                   100 * (_steal_ticks() - steal0) * 0.01 / wall, 1),
+               harness_wall=round(wall, 1))
+    return rec
 
 
 def run_dense(cores: int, copies: int, servers: int, zip_path: str,
@@ -135,8 +191,8 @@ def main() -> int:
             time.sleep(45)
             continue
         # big level first (scarcer-clean: shorter window)
-        rec_big = _run(big, args.servers, zip_path, None, args.timeout,
-                       pages=args.pages, pin=True)
+        rec_big = run_big(big, args.servers, zip_path, args.pages,
+                          args.timeout)
         rec_big["gated"] = True
         with open(args.out, "a") as fh:
             fh.write(json.dumps(rec_big) + "\n")
