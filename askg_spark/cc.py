@@ -38,17 +38,18 @@ Scale design / measured rationale:
     serial collapse factorizes with np.unique over int64 instead of a
     string factorize + argsort (~15 of its ~21s wall at the 4M-page
     corpus was string handling). The min-string-per-component contract
-    is restored by parallel joins against the (id, hash) vertex map;
-    64-bit injectivity is verified first, with an exact string-coded
-    fallback on collision.
+    is restored by parallel joins against the (id, code) vertex map.
+    64-bit injectivity is verified first; on a collision the vertex
+    map is rebuilt with dense codes and the same int64 kernel runs.
   * Memory bound: the final task holds one row per vertex incident to
     an edge — the MATCHED mention set, orders of magnitude smaller
     than the corpus (at 10^12 pages the candidate-match graph is the
-    output of LSH blocking + exact keys, not all pages). For graphs
-    whose contracted star set exceeds single-task memory (~10^8
-    vertices), pass ``final_collapse="loop"``: the exact distributed
-    min-label/pointer-jumping phase (:func:`_loop_collapse`) replaces
-    the serial task entirely — the contraction rounds themselves are
+    output of LSH blocking + exact keys, not all pages). Above
+    ``_LOOP_ABOVE`` matched vertices (~10^8, where the star set stops
+    fitting one task) the exact distributed min-label/pointer-jumping
+    phase (:func:`_loop_collapse`) replaces the serial task entirely;
+    the count comes from the vertex-map probe, so the choice is exact
+    and costs no extra job. The contraction rounds themselves are
     fully parallel and bounded by partition size at any scale.
 
 Reference analog: the greedy transitive merge of
@@ -67,23 +68,38 @@ from pyspark.sql import DataFrame, functions as F
 
 from askg_spark.session import checkpoint, operator_scope, release
 
-_STAR_SCHEMA = "u string, v string"
+# Matched vertices above which the final collapse is the distributed
+# loop (:func:`_loop_collapse`) instead of the one serial task. That
+# task reads ~one 16-byte star row per matched vertex, which fits one
+# executor up to ~10^8 vertices; below that the serial task is the
+# faster mode (1.9x at 10^7 vertices, BENCH.md "CC final-collapse
+# modes").
+_LOOP_ABOVE = 10**8
+# alternating-key contraction rounds before the final collapse
+_ROUNDS = 3
+# round cap of the loop collapse; past it the serial collapse runs
+_MAX_ITER = 25
+
+_STAR_SCHEMA = "u long, v long"
 
 
-_STAR_SCHEMA_LONG = "u long, v long"
+def _code(col):
+    """64-bit vertex code of an id column (fixed-seed xxhash64)."""
+    return F.xxhash64(col)
 
 
 def _uf_stars_long(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """int64-coded variant of :func:`_uf_stars` — the hot path.
+    """Whole-partition union-find over int64 vertex codes; emits
+    (x, min-root(x)) for every vertex seen.
 
-    Vertex ids arrive as 64-bit codes (xxhash64 of the id string,
-    assigned by a zero-shuffle projection in ``connected_components``),
-    so the per-partition work is ``np.unique`` over int64 instead of
-    ``pd.factorize`` + an O(n log n) **string** argsort: measured on a
-    4M-row star frame, factorize 7.5s + argsort 4.4s + remap 2.5s of
-    the serial collapse's ~21s wall were pure string handling. np.unique
-    returns codes indexed into the SORTED unique array, so min-over-code
-    is min-over-hash-value — deterministic (fixed xxhash64 seed)."""
+    Codes are xxhash64 of the id string (dense ids after a hash
+    collision, see :func:`component_labels`), so the per-partition
+    work is ``np.unique`` over int64 instead of ``pd.factorize`` + an
+    O(n log n) **string** argsort: measured on a 4M-row star frame,
+    factorize 7.5s + argsort 4.4s + remap 2.5s of the serial
+    collapse's ~21s wall were pure string handling. np.unique returns
+    codes indexed into the SORTED unique array, so min-over-code is
+    min-over-code-value — deterministic for fixed codes."""
     import numpy as np
 
     parts = [pdf for pdf in batches if len(pdf)]
@@ -97,40 +113,6 @@ def _uf_stars_long(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     n_edges = len(pdf)
     roots = _min_label(len(uniq), codes[:n_edges], codes[n_edges:])
     yield pd.DataFrame({"u": uniq, "v": uniq[roots]})
-
-
-def _uf_stars(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Whole-partition union-find; emits (x, min-root(x)) per vertex.
-    Union-by-min + path compression: roots are always the component's
-    lexicographic min, so output is deterministic.
-
-    Int-coded: ids are factorized once and ranked by sorted order so
-    union-by-min over int ranks IS union-by-min over the strings; the
-    find/union loop then runs over plain Python ints (a list-backed
-    parent array), ~4x faster than the string-keyed dict this replaces
-    — the single-partition final collapse is the pipeline's one serial
-    task, so its constant factor is wall time at every scale."""
-    import numpy as np
-
-    parts = [pdf for pdf in batches if len(pdf)]
-    if not parts:
-        yield pd.DataFrame({"u": pd.Series([], dtype="str"),
-                            "v": pd.Series([], dtype="str")})
-        return
-    pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-    codes, uniques = pd.factorize(
-        pd.concat([pdf["u"], pdf["v"]], ignore_index=True))
-    uniq = np.asarray(uniques)
-    n_ids = len(uniq)
-    order = np.argsort(uniq)                 # rank -> factorize code
-    rank = np.empty(n_ids, dtype=np.int64)   # factorize code -> rank
-    rank[order] = np.arange(n_ids)
-    n_edges = len(pdf)
-    eu = rank[codes[:n_edges]]
-    ev = rank[codes[n_edges:]]
-    roots = _min_label(n_ids, eu, ev)
-    by_rank = uniq[order]                    # rank -> id string
-    yield pd.DataFrame({"u": by_rank, "v": by_rank[roots]})
 
 
 def _min_label(n_ids: int, eu, ev):
@@ -190,8 +172,7 @@ def _min_label(n_ids: int, eu, ev):
                        dtype=np.int64, count=n_ids)
 
 
-def _loop_collapse(cur: DataFrame, n_part: int, max_iter: int,
-                   check_every: int = 2) -> DataFrame:
+def _loop_collapse(cur: DataFrame, n_part: int) -> DataFrame | None:
     """Distributed EXACT final phase over the contracted star frame —
     the 10^12-scale alternative to the single-task serial collapse
     (which reads ~one row per matched vertex: past ~10^8 vertices that
@@ -211,7 +192,7 @@ def _loop_collapse(cur: DataFrame, n_part: int, max_iter: int,
     Labels are monotone non-increasing and bounded by the component
     min, so the fixpoint IS the component min; convergence is detected
     by an exact changed-row count (anti-join of consecutive label
-    frames) every ``check_every`` rounds — a driver action per check,
+    frames) every second round — a driver action per check,
     amortized over the O(log n) total rounds and run on the CONTRACTED
     frame, not the corpus (the round-1 loop this module replaced paid
     that latency per corpus-scale iteration; here it is the documented
@@ -225,7 +206,7 @@ def _loop_collapse(cur: DataFrame, n_part: int, max_iter: int,
         und.groupBy("u").agg(F.min("v").alias("lbl"))
         .select("u", F.least("u", "lbl").alias("lbl"))
         .repartition(n_part, "u"))
-    for it in range(max_iter):
+    for it in range(_MAX_ITER):
         # edge step: neighbor labels through the static star edges
         nbr = (
             und.join(labels.select(F.col("u").alias("v"),
@@ -250,7 +231,7 @@ def _loop_collapse(cur: DataFrame, n_part: int, max_iter: int,
                     .alias("lbl"))
             .repartition(n_part, "u"))
         done = False
-        if (it + 1) % check_every == 0 or it == max_iter - 1:
+        if it % 2 == 1 or it == _MAX_ITER - 1:
             # labels only decrease, so "no row changed" == fixpoint;
             # the join is on the contracted frame (small), and the
             # count is the only extra driver sync in the round
@@ -266,27 +247,20 @@ def _loop_collapse(cur: DataFrame, n_part: int, max_iter: int,
     return None  # cap hit — caller falls back to the serial collapse
 
 
-def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 25,
-    contract_rounds: int = 3, contract_partitions: int | None = None,
-    final_collapse: str = "serial",
-) -> DataFrame:
+def connected_components(edges: DataFrame,
+                         vertices: DataFrame) -> DataFrame:
     """edges(src,dst) + vertices(id) -> (id, component) where component
     is the lexicographic min id reachable; vertices touching no edge
     are their own component. The result reads the checkpoint of
     :func:`component_labels`: release it with ``session.release``."""
-    labels = component_labels(edges, max_iter, contract_rounds,
-                              contract_partitions, final_collapse)
+    labels = component_labels(edges)
     singles = vertices.join(labels.select("id"), "id", "left_anti") \
         .select("id", F.col("id").alias("component"))
     return labels.unionByName(singles)
 
 
 @operator_scope
-def component_labels(
-    edges: DataFrame, max_iter: int = 25, contract_rounds: int = 3,
-    contract_partitions: int | None = None, final_collapse: str = "serial",
-) -> DataFrame:
+def component_labels(edges: DataFrame) -> DataFrame:
     """edges(src,dst) -> (id, component) for every vertex incident to
     an edge, where component is the lexicographic min id reachable.
 
@@ -294,37 +268,34 @@ def component_labels(
     with ``session.release`` once its consumers are materialized; every
     intermediate frame is released here.
 
-    ``contract_rounds`` parallel contraction rounds (alternating
-    endpoint hashing) then one exact single-partition collapse — a
-    linear plan executed once, with a handful of driver syncs (the
-    label/vmap checkpoints below) instead of the round-1 loop's
-    O(log n) syncs. ``max_iter`` caps the rounds (API compatibility
-    with the round-1 iterative implementation).
+    ``_ROUNDS`` parallel contraction rounds (alternating endpoint
+    hashing), then one exact final collapse — a linear plan executed
+    once, with a handful of driver syncs (the checkpoints below)
+    instead of the round-1 loop's O(log n) syncs.
 
-    The contraction runs over xxhash64 int64 codes of the ids (a
-    zero-shuffle projection): shuffled star rows are 16 B instead of
-    ~80 B url strings, and the one serial task (final collapse) does
-    np.unique over int64 instead of string factorize + argsort —
+    The contraction runs over int64 vertex codes: shuffled star rows
+    are 16 B instead of ~80 B url strings, and the serial collapse
+    does np.unique over int64 instead of string factorize + argsort —
     measured ~15s of the ~21s serial wall at the 4M-page corpus was
     string handling. The min-STRING-per-component contract is restored
-    afterwards by three parallel narrow joins against the (id, hash)
-    vertex map. 64-bit codes are verified injective over the matched
-    vertex set first (one count-per-hash aggregation; birthday bound
-    ~n^2/2^65, so a collision is possible in principle at >=1e8 matched
-    vertices); on a collision the string-coded path runs instead, so
+    afterwards by three parallel narrow joins against the (id, code)
+    vertex map.
+
+    The vertex map is built by one shuffle keyed by xxhash64(id), which
+    both dedups the ids and flags a code shared by two ids; one
+    aggregate over it then returns the matched-vertex count and whether
+    any code clashed. Birthday bound ~n^2/2^65, so a collision is
+    possible in principle at >=1e8 matched vertices; on one the map is
+    rebuilt with dense ``monotonically_increasing_id`` codes, fixed by
+    its checkpoint, and the edges are coded by two joins against it —
     correctness never depends on the hash.
 
-    ``final_collapse``: "serial" (default) finishes with the exact
-    single-partition union-find pass — one task reading ~one 16-byte
-    row per matched vertex, the fastest option up to ~10^8 matched
-    vertices; "loop" finishes with the distributed min-label
-    propagation of :func:`_loop_collapse` — no serial task anywhere,
-    the mode for corpora whose matched-vertex set alone exceeds a
-    single task (10^12-page inputs), at the price of O(log n) extra
+    The count picks the final collapse: up to ``_LOOP_ABOVE`` matched
+    vertices, the exact single-partition union-find task reading ~one
+    16-byte row per vertex (the fastest mode); above it, the
+    distributed min-label propagation of :func:`_loop_collapse` — no
+    serial task anywhere, at the price of O(log n) extra
     driver-synchronized rounds on the contracted frame."""
-    if final_collapse not in ("serial", "loop"):
-        raise ValueError(f"final_collapse: {final_collapse!r}")
-    spark = edges.sparkSession
     # Contraction width follows CORE count, not the (4x larger)
     # shuffle-partition conf: a round's output carries one star row per
     # (partition, vertex-touching-it), so over-splitting multiplies
@@ -332,29 +303,46 @@ def component_labels(
     # a 576k-edge graph: n_part 32 vs 8 grew the collapse from ~6s to
     # 17s of serial wall. Per-partition union-find memory is one int
     # pair per local vertex; on a real cluster defaultParallelism =
-    # total executor cores, which scales with the data. Pass
-    # contract_partitions explicitly for graphs whose edges-per-core
-    # exceed partition memory.
-    n_part = contract_partitions or spark.sparkContext.defaultParallelism
-    rounds = min(contract_rounds, max_iter)
+    # total executor cores, which scales with the data.
+    n_part = edges.sparkSession.sparkContext.defaultParallelism
     cur = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
-    labels = _int_coded_labels(cur, n_part, rounds, max_iter,
-                               final_collapse)
-    if labels is None:  # 64-bit code collision — exact string path
-        labels = _string_coded_labels(cur, n_part, rounds, max_iter,
-                                      final_collapse)
-    return labels.select("id", F.col("label").alias("component"))
+    ends = cur.select(F.col("u").alias("id")).unionAll(
+        cur.select(F.col("v").alias("id")))
+    vmap = checkpoint(ends.groupBy(_code("id").alias("id_h")).agg(
+        F.min("id").alias("id"),
+        (F.min("id") != F.max("id")).alias("clash")))
+    n, clash = vmap.agg(F.count(F.lit(1)), F.max("clash")).first()
+    if clash:
+        release(vmap)
+        vmap = checkpoint(ends.distinct().select(
+            "id", F.monotonically_increasing_id().alias("id_h")))
+        n = vmap.count()
+        ints = (
+            cur.join(vmap.select(F.col("id").alias("u"),
+                                 F.col("id_h").alias("cu")), "u")
+            .join(vmap.select(F.col("id").alias("v"),
+                              F.col("id_h").alias("cv")), "v")
+            .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
+        )
+    else:
+        ints = cur.select(_code("u").alias("u"), _code("v").alias("v"))
+    lab_int = _contract(ints, n_part, loop=n > _LOOP_ABOVE)
+    # relabel, all parallel and bounded by the matched vertex set:
+    # (code, root code) x vmap -> (id, root code); min(id) per root
+    # code -> the component's lexicographic min string; join back
+    joined = lab_int.join(
+        vmap, lab_int["u"] == vmap["id_h"]).select("id", "v")
+    comp_min = joined.groupBy("v").agg(F.min("id").alias("component"))
+    return checkpoint(joined.join(comp_min, "v").select("id", "component"))
 
 
-def _contract(cur: DataFrame, star_fn, schema: str, n_part: int,
-              rounds: int, max_iter: int = 25,
-              final_collapse: str = "serial") -> DataFrame:
-    """``rounds`` alternating-key contraction rounds, then the exact
-    single-partition collapse (or the distributed loop collapse),
-    checkpointed to a leaf.
+def _contract(cur: DataFrame, n_part: int, loop: bool) -> DataFrame:
+    """``_ROUNDS`` alternating-key contraction rounds, then the exact
+    single-partition collapse (or, with ``loop``, the distributed loop
+    collapse), checkpointed to a leaf.
 
     Self-stars (r, r) — one per (partition, local component) — carry
     zero connectivity: every non-root vertex's row already names its
@@ -371,58 +359,18 @@ def _contract(cur: DataFrame, star_fn, schema: str, n_part: int,
     docstring), so it is checkpointed: the contraction chain runs once.
     Star rows hold ~one row per matched vertex, so the checkpoint is
     cheap even at 10^12 documents."""
-    for r in range(rounds):
+    for r in range(_ROUNDS):
         key = "u" if r % 2 == 0 else "v"
         cur = cur.repartition(n_part, key).mapInPandas(
-            star_fn, schema=schema)
+            _uf_stars_long, schema=_STAR_SCHEMA)
         cur = cur.filter(F.col("u") != F.col("v"))
-    if final_collapse == "loop":
+    if loop:
         # the loop references the star frame every round — cut the
         # mapInPandas chain to a leaf first
         cur = checkpoint(cur)
-        out = _loop_collapse(cur, n_part, max_iter)
+        out = _loop_collapse(cur, n_part)
         if out is not None:
             return out
         # convergence cap hit — exact serial fallback below
-    return checkpoint(cur.repartition(1).mapInPandas(star_fn, schema=schema))
-
-
-def _int_coded_labels(cur: DataFrame, n_part: int, rounds: int,
-                      max_iter: int = 25,
-                      final_collapse: str = "serial") -> DataFrame | None:
-    """Hash-coded contraction + min-string relabel; None on collision.
-
-    vmap (one row per matched vertex: id string + xxhash64 code) is the
-    only frame that carries strings; the contraction itself shuffles
-    16-byte rows. The relabel is three narrow equi-joins/aggs — all
-    parallel, no driver data: (code, root_code) x vmap -> (id,
-    root_code); min(id) per root_code -> the component's lexicographic
-    min string; join back. Every frame involved is bounded by the
-    matched vertex set, not the corpus."""
-    vmap = checkpoint(
-        cur.select("u").unionAll(cur.select(F.col("v").alias("u")))
-        .distinct()
-        .select(F.col("u").alias("id"), F.xxhash64("u").alias("id_h")))
-    if not (vmap.groupBy("id_h").agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1).isEmpty()):
-        return None
-    ints = cur.select(F.xxhash64("u").alias("u"),
-                      F.xxhash64("v").alias("v"))
-    lab_int = _contract(ints, _uf_stars_long, _STAR_SCHEMA_LONG,
-                        n_part, rounds, max_iter, final_collapse)
-    joined = lab_int.join(
-        vmap, lab_int["u"] == vmap["id_h"]).select("id", "v")
-    comp_min = joined.groupBy("v").agg(F.min("id").alias("label"))
-    return checkpoint(joined.join(comp_min, "v").select("id", "label"))
-
-
-def _string_coded_labels(cur: DataFrame, n_part: int, rounds: int,
-                         max_iter: int = 25,
-                         final_collapse: str = "serial") -> DataFrame:
-    """Exact string-coded contraction (the pre-hash-coding path); only
-    runs when the 64-bit injectivity check fails."""
-    return (
-        _contract(cur, _uf_stars, _STAR_SCHEMA, n_part, rounds,
-                  max_iter, final_collapse)
-        .select(F.col("u").alias("id"), F.col("v").alias("label"))
-    )
+    return checkpoint(cur.repartition(1).mapInPandas(
+        _uf_stars_long, schema=_STAR_SCHEMA))

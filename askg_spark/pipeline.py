@@ -55,7 +55,6 @@ class PipelineConfig:
     # (reference parity; fixture tests and corpora < cap are identical
     # either way because the cap only binds past M entities per key).
     max_entities_per_key: int | None = 1000
-    cc_max_iter: int = 25
     # append the static HAS_SUBCATEGORY ontology edges to the triple
     # set (default OFF — reference parity: its predefined categories
     # set no parent ids, so its default build emits none; see
@@ -105,8 +104,12 @@ def run_pipeline(
     # corpus size: collapsing straight to 2x cores made 4 x ~1.8 GB
     # partitions at the 4M-page corpus on local[2], past the 2 GB block
     # limit.
+    # The width is read off the pre-enrich frame (enrich is narrow):
+    # planning `enriched` itself here would fix its plan before the
+    # cache below exists, and actions on the returned mentions would
+    # then re-run extraction.
     n_part = spark.sparkContext.defaultParallelism
-    n_scan = enriched.rdd.getNumPartitions()
+    n_scan = mentions_raw.rdd.getNumPartitions()
     if n_scan > 8 * n_part:
         enriched = enriched.repartition(max(2 * n_part, n_scan // 8))
     # MEMORY_AND_DISK, not MEMORY_ONLY: under the unified memory
@@ -141,8 +144,7 @@ def run_pipeline(
         candidate_edges(enriched, cfg.link)))
     # mentions touching no edge get no label: the left join's
     # coalesce makes them their own component
-    labels = timer.time("cc", lambda: component_labels(
-        edges, max_iter=cfg.cc_max_iter))
+    labels = timer.time("cc", lambda: component_labels(edges))
     with_comp = enriched.join(
         labels, enriched["mention_id"] == labels["id"], "left"
     ).drop("id").withColumn(

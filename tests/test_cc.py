@@ -1,14 +1,26 @@
 """Connected components on known graph shapes (SURVEY §5 test plan)."""
 from __future__ import annotations
 
+from askg_spark import cc
 from askg_spark.cc import connected_components
 
 
-def _run(spark, edges, vertices, **kw):
+def _run(spark, edges, vertices):
     e = spark.createDataFrame(edges, "src string, dst string")
     v = spark.createDataFrame([(x,) for x in vertices], "id string")
-    rows = connected_components(e, v, **kw).collect()
+    rows = connected_components(e, v).collect()
     return {r["id"]: r["component"] for r in rows}
+
+
+def _loop_calls(monkeypatch) -> list:
+    """Record what every run of the loop collapse returns."""
+    calls, real = [], cc._loop_collapse
+
+    def spy(*args):
+        calls.append(real(*args))
+        return calls[-1]
+    monkeypatch.setattr(cc, "_loop_collapse", spy)
+    return calls
 
 
 def test_chain_transitivity(spark):
@@ -36,24 +48,46 @@ def test_two_components_and_long_path(spark):
     assert {got[x] for x in ("x1", "x2", "x3")} == {"x1"}
 
 
-def test_loop_collapse_known_shapes(spark):
-    # the distributed final phase (no serial task) on the same shapes
-    got = _run(spark, [("b", "a"), ("b", "c"), ("c", "d")], "abcd",
-               final_collapse="loop")
+def test_loop_collapse_known_shapes(spark, monkeypatch):
+    # the distributed final phase (no serial task) on the same shapes,
+    # selected by a size threshold below every graph here
+    calls = _loop_calls(monkeypatch)
+    monkeypatch.setattr(cc, "_LOOP_ABOVE", 0)
+    got = _run(spark, [("b", "a"), ("b", "c"), ("c", "d")], "abcd")
     assert got == {x: "a" for x in "abcd"}
     path = [(str(i), str(i + 1)) for i in range(1, 8)]
     tri = [("x1", "x2"), ("x2", "x3"), ("x1", "x3")]
     verts = [str(i) for i in range(1, 9)] + ["x1", "x2", "x3", "solo"]
-    got = _run(spark, path + tri, verts, final_collapse="loop")
+    got = _run(spark, path + tri, verts)
     assert {got[str(i)] for i in range(1, 9)} == {"1"}
     assert {got[x] for x in ("x1", "x2", "x3")} == {"x1"}
     assert got["solo"] == "solo"
+    assert len(calls) == 2
 
 
-def test_loop_collapse_matches_serial_random_graphs(spark):
+def test_collapse_mode_follows_matched_vertex_count(spark, monkeypatch):
+    # 6 matched vertices: serial at a threshold of 6, loop below it
+    calls = _loop_calls(monkeypatch)
+    edges = [("b", "a"), ("b", "c"), ("q", "p"), ("q", "r")]
+    verts = ["a", "b", "c", "p", "q", "r", "solo"]
+    monkeypatch.setattr(cc, "_LOOP_ABOVE", 6)
+    serial = _run(spark, edges, verts)
+    assert not calls
+    monkeypatch.setattr(cc, "_LOOP_ABOVE", 5)
+    loop = _run(spark, edges, verts)
+    assert len(calls) == 1
+    assert serial == loop == {"a": "a", "b": "a", "c": "a", "p": "p",
+                              "q": "p", "r": "p", "solo": "solo"}
+
+
+def test_loop_collapse_matches_serial_random_graphs(spark, monkeypatch):
     # seeded random graphs incl. chains that span contraction
     # partitions: the loop mode must agree with the exact serial path
     import random
+    calls = _loop_calls(monkeypatch)
+    # one contraction round leaves maximal cross-partition residue for
+    # the final phase to resolve
+    monkeypatch.setattr(cc, "_ROUNDS", 1)
     rng = random.Random(11)
     for trial in range(3):
         n = rng.randrange(20, 90)
@@ -62,13 +96,25 @@ def test_loop_collapse_matches_serial_random_graphs(spark):
             (rng.choice(verts), rng.choice(verts))
             for _ in range(rng.randrange(10, int(1.3 * n)))
         ]
-        # contract_rounds=1 leaves maximal cross-partition residue for
-        # the final phase to resolve
-        a = _run(spark, edges, verts, final_collapse="serial",
-                 contract_rounds=1)
-        b = _run(spark, edges, verts, final_collapse="loop",
-                 contract_rounds=1)
+        monkeypatch.setattr(cc, "_LOOP_ABOVE", 10**8)
+        a = _run(spark, edges, verts)
+        monkeypatch.setattr(cc, "_LOOP_ABOVE", 0)
+        b = _run(spark, edges, verts)
         assert a == b
+    assert len(calls) == 3
+
+
+def test_loop_collapse_round_cap_falls_back_to_serial(spark, monkeypatch):
+    # one contraction round and one loop round cannot settle a long
+    # path: the loop gives up and the exact serial collapse labels it
+    calls = _loop_calls(monkeypatch)
+    monkeypatch.setattr(cc, "_ROUNDS", 1)
+    monkeypatch.setattr(cc, "_MAX_ITER", 1)
+    monkeypatch.setattr(cc, "_LOOP_ABOVE", 0)
+    path = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(12)]
+    got = _run(spark, path, [f"p{i:02d}" for i in range(13)])
+    assert calls == [None]
+    assert set(got.values()) == {"p00"}
 
 
 def test_min_label_matches_union_find():
@@ -107,17 +153,19 @@ def test_min_label_matches_union_find():
     check()
 
 
-def test_string_fallback_path_matches(spark):
-    """The exact string-coded path (taken on a 64-bit code collision)
-    labels identically to the hash-coded default."""
+def test_code_collision_recodes_densely(spark, monkeypatch):
+    """A 64-bit code shared by two ids re-codes the vertex map densely
+    and labels exactly as the hash-coded path does."""
     from pyspark.sql import functions as F
-    from askg_spark.cc import _string_coded_labels
 
-    edges = [("b", "a"), ("b", "c"), ("c", "d"), ("q", "p")]
-    e = (spark.createDataFrame(edges, "src string, dst string")
-         .select(F.col("src").alias("u"), F.col("dst").alias("v")))
-    n_part = spark.sparkContext.defaultParallelism
-    got = {r["id"]: r["label"]
-           for r in _string_coded_labels(e, n_part, 3).collect()}
-    assert got == {"a": "a", "b": "a", "c": "a", "d": "a",
-                   "p": "p", "q": "p"}
+    edges = [("b", "a"), ("b", "c"), ("c", "d"), ("q", "p"),
+             ("x", "y"), ("y", "z")]
+    verts = list("abcdpqxyz") + ["solo"]
+    want = _run(spark, edges, verts)
+    # three codes (-1, 0, 1) for nine ids: taken at face value, they
+    # would merge components
+    monkeypatch.setattr(cc, "_code", lambda c: F.xxhash64(c) % 2)
+    got = _run(spark, edges, verts)
+    assert got == want == {"a": "a", "b": "a", "c": "a", "d": "a",
+                           "p": "p", "q": "p", "x": "x", "y": "x",
+                           "z": "x", "solo": "solo"}

@@ -10,8 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import DataFrame
 
-from askg_spark import bpe, dedup, graphops, session, webgraph
-from askg_spark.cc import component_labels
+from askg_spark import bpe, cc, dedup, graphops, session, webgraph
 from askg_spark.fixtures import generate_pages
 from askg_spark.pipeline import PipelineConfig, PipelineResult, run_pipeline
 
@@ -76,14 +75,18 @@ def _docs(spark):
         "doc_id long, text string")
 
 
-def _labels(final_collapse):
+def _labels(loop):
     want = {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
 
     def build(spark):
         e = spark.createDataFrame(
             [("b", "a"), ("b", "c"), ("c", "d"), ("x", "y")],
             "src string, dst string")
-        return component_labels(e, final_collapse=final_collapse)
+        with pytest.MonkeyPatch.context() as mp:
+            if loop:
+                # a size threshold below this graph selects the loop
+                mp.setattr(cc, "_LOOP_ABOVE", 0)
+            return cc.component_labels(e)
 
     def check(spark, labels, new):
         # the caller owns exactly one checkpoint
@@ -102,6 +105,14 @@ def _pipeline():
                 for r in res.triples.collect()}
 
     def check(spark, res, new):
+        # actions on the returned mentions read the cache: its own plan
+        # was not fixed before the cache existed
+        it = res.mentions._jdf.queryExecution().withCachedData() \
+            .collectLeaves().iterator()
+        leaves = []
+        while it.hasNext():
+            leaves.append(it.next().getClass().getSimpleName())
+        assert "InMemoryRelation" in leaves
         # the lazy triples read only the entities checkpoint, so
         # releasing the link-edge and label checkpoints changes nothing
         ref = run_pipeline(spark, pages(spark), PipelineConfig())
@@ -133,8 +144,8 @@ CASES = {
     "train_bpe": (lambda spark: bpe.train_bpe(
         bpe.word_type_counts(_docs(spark)), n_merges=4, min_freq=1),
         None),
-    "component_labels_serial": _labels("serial"),
-    "component_labels_loop": _labels("loop"),
+    "component_labels_serial": _labels(loop=False),
+    "component_labels_loop": _labels(loop=True),
     "run_pipeline": _pipeline(),
 }
 
@@ -165,3 +176,38 @@ def test_result_reads_all_that_stays_persisted(spark, name):
     session.release(*frames)
     assert not _persisted(spark) & new
     assert _cache_entries(spark) == caches0
+
+
+# ------------------------------------------------------ bounded lineage
+
+def _tailed(spark, n, a, b):
+    # a triangle with a pendant chain of n edges: the 2-core peels one
+    # chain node per round, and BFS from the chain's end runs n hops
+    rows = [("t1", "t2"), ("t2", "t3"), ("t1", "t3"), ("t3", "c1")]
+    rows += [(f"c{i}", f"c{i + 1}") for i in range(1, n)]
+    return spark.createDataFrame(rows, f"{a} string, {b} string")
+
+
+ROUNDS = {
+    "bfs_depths": lambda spark, n: graphops.bfs_depths(
+        _tailed(spark, n, "src", "dst"),
+        spark.createDataFrame([(f"c{n}",)], "node string"), max_depth=n),
+    "kcore": lambda spark, n: graphops.kcore(_tailed(spark, n, "u", "v"),
+                                             k=2),
+    "pagerank": lambda spark, n: webgraph.pagerank(
+        _tailed(spark, 2, "src", "dst"), iterations=2 * n,
+        checkpoint_every=2),
+}
+
+
+@pytest.mark.parametrize("name", list(ROUNDS))
+def test_result_plan_grows_at_most_linearly_in_rounds(spark, name):
+    sizes = []
+    for n in (2, 4):
+        out = ROUNDS[name](spark, n)
+        sizes.append(
+            len(out._jdf.queryExecution().optimizedPlan().toString()))
+        session.release(out)
+    # a plan of a + b*rounds characters at most doubles when the rounds
+    # double; a plan that doubles every round grows far past that
+    assert sizes[1] <= 2 * sizes[0], sizes

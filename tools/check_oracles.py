@@ -17,6 +17,7 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 import os
 import sys
@@ -36,7 +37,11 @@ def _norm_cell(v) -> str:
     - bytes: hex
     - bool before int (bool is an int subclass)
     - list/tuple/dict(struct): recursive
+    - str: JSON-quoted, and no other type's form starts with '"', so
+      no other value (None, a list, ...) serializes equal to a string
     """
+    if isinstance(v, str):
+        return json.dumps(v)
     if v is None:
         return "\x00NULL"
     if isinstance(v, bool):
@@ -67,7 +72,7 @@ def _norm_cell(v) -> str:
     if isinstance(v, dict):
         return "{" + ",".join(
             f"{k}:{_norm_cell(v[k])}" for k in sorted(v)) + "}"
-    return str(v)
+    return f"{type(v).__name__}:{v}"
 
 
 def canonical_rows(cols, rows) -> list[tuple[str, ...]]:
