@@ -19,6 +19,16 @@ classification, linking, canonicalization, relations, triples — whose
 closed-form oracle is derivable because the corpus plants no fuzzy
 duplicates (the fuzzy/CC paths are exercised + oracle-checked on the
 fixture corpus in tests/, where SQL cannot express difflib scoring).
+
+Builds that several queries read (the KG pipeline runs, the ANN result
+frames, the rendered web pages and their PageRank, the part
+co-occurrence graph) are named views, registered below with
+``askg_spark.session.shared_view`` and requested with
+``askg_spark.session.view``: each is built once per SparkContext and
+sf, its frames stored once by the session's view rule, and all of them
+freed by ``askg_spark.session.release_views``. No query stores a frame
+itself. bench.py times each view build in its own ``build:<view>`` row,
+so no query row depends on which query ran first.
 """
 
 from __future__ import annotations
@@ -27,71 +37,105 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from askg_spark.session import shared_view, view
+
 # --------------------------------------------------------------- helpers
-
-_KG_CACHE: dict[tuple[int, str], object] = {}
-
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _kg_run(spark: SparkSession, sf_dir: str):
-    """Full pipeline over documents-rendered pages, memoized per sf;
-    the result carries mentions / entities / triples for the whole
-    query family (one pipeline run serves them all)."""
-    key = (id(spark), sf_dir)
-    if key not in _KG_CACHE:
-        from askg_spark.pipeline import PipelineConfig, run_pipeline
-        from askg_spark.webcorpus import render_pages
-
-        pages = render_pages(_t(spark, sf_dir, "documents"))
-        res = run_pipeline(spark, pages, PipelineConfig())
-        from pyspark import StorageLevel
-        # every frame the query family consumes is persisted — entities
-        # feed kg_similar_servers / kg_semantic_search /
-        # kg_relations_capped and mentions feed registry_completeness;
-        # without the persists each consumer re-executes the whole
-        # extract->link->cc->canonicalize chain (measured 73.9s for
-        # kg_similar_servers at sf0.1, ~50s of it recompute).
-        # coalesce to the core count first: the raw union plan leaves
-        # 384 partitions, and every downstream scan of the cache then
-        # schedules 384 near-empty tasks — pure scheduler latency
-        # (measured: anchors-distinct over cached triples 3.2 s at
-        # 384 parts vs 1.8 s at 32, × three scans in kg_two_hop
-        # alone). coalesce merges map-side (no shuffle) and 32 tasks
-        # still saturate local[32]; at cluster scale the same rule is
-        # "cache width ~ total cores", not "whatever the plan left".
-        width = spark.sparkContext.defaultParallelism
-        res.triples = res.triples.coalesce(width) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        res.entities = res.entities.coalesce(width) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        res.mentions = res.mentions.coalesce(width) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        _KG_CACHE[key] = res
-    return _KG_CACHE[key]
-
-
 def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _kg_run(spark, sf_dir).triples
+    return view(spark, "kg", sf_dir)["triples"]
 
 
-def _kg_union_run(spark: SparkSession, sf_dir: str):
+# ---------------------------------------------------------- shared views
+# Builds that several queries read. askg_spark.session.view runs each
+# once per SparkContext and sf and stores its frames; without that, each
+# consumer re-executes the build (measured 73.9s for kg_similar_servers
+# at sf0.1, ~50s of it the pipeline). Registration order is build order.
+
+@shared_view("kg")
+def _kg_view(spark, sf_dir):
+    """Full pipeline over documents-rendered pages: its mentions,
+    entities and triples serve the whole kg_* query family."""
+    from askg_spark.pipeline import PipelineConfig, run_pipeline
+    from askg_spark.webcorpus import render_pages
+
+    res = run_pipeline(spark, render_pages(_t(spark, sf_dir, "documents")),
+                       PipelineConfig())
+    return {"mentions": res.mentions, "entities": res.entities,
+            "triples": res.triples}
+
+
+@shared_view("kg_union")
+def _kg_union_view(spark, sf_dir):
     """Pipeline over the planted-duplicate union corpus (every 10th doc
     appears in BOTH the mcp.so and glama page families, the glama copy
-    carrying the repository URL) — memoized: kg_canonical_groups and
-    the three dedup-analysis reports all read this one run."""
-    key = (id(spark), sf_dir, "union")
-    if key not in _KG_CACHE:
-        from askg_spark.pipeline import PipelineConfig, run_pipeline
-        from askg_spark.webcorpus import render_glama_pages, render_pages
+    carrying the repository URL): kg_canonical_groups and the three
+    dedup-analysis reports all read this one run."""
+    from askg_spark.pipeline import PipelineConfig, run_pipeline
+    from askg_spark.webcorpus import render_glama_pages, render_pages
 
-        docs = _t(spark, sf_dir, "documents")
-        pages = render_pages(docs).unionByName(
-            render_glama_pages(docs.filter(F.col("doc_id") % 10 == 0)))
-        _KG_CACHE[key] = run_pipeline(spark, pages, PipelineConfig())
-    return _KG_CACHE[key]
+    docs = _t(spark, sf_dir, "documents")
+    pages = render_pages(docs).unionByName(
+        render_glama_pages(docs.filter(F.col("doc_id") % 10 == 0)))
+    res = run_pipeline(spark, pages, PipelineConfig())
+    return {"mentions": res.mentions, "entities": res.entities}
+
+
+# The three ANN result frames (exact / LSH / IVF, 40 rows each) are
+# read by four queries. One view per method: ivf_topk trains its
+# k-means centroids with eager driver-side Lloyd rounds, and a shared
+# view would charge that to whichever method's query came first.
+def _ann_view(method: str, **kw):
+    def build(spark, sf_dir):
+        from askg_spark import simsearch
+        emb = _t(spark, sf_dir, "embeddings")
+        q = emb.filter(F.col("vec_id") < 8).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        return {"topk": getattr(simsearch, method)(emb, q, k=5, **kw)}
+    return build
+
+
+shared_view("ann_exact")(_ann_view("brute_force_topk"))
+shared_view("ann_lsh")(_ann_view("lsh_topk"))
+shared_view("ann_ivf")(_ann_view("ivf_topk", n_cells=16, nprobe=14))
+
+
+@shared_view("web_pages")
+def _web_pages_view(spark, sf_dir):
+    """The rendered mcpmarket page family: both web link queries read
+    it, and the HTML render + regex extract dominates either query cold
+    (~6-9 s at sf0.1 vs <1 s for the graph work itself)."""
+    from askg_spark.webcorpus import render_mcpmarket_pages
+    return {"pages": render_mcpmarket_pages(_t(spark, sf_dir, "documents"))}
+
+
+@shared_view("web_ranks")
+def _web_ranks_view(spark, sf_dir):
+    """The 8-iteration PageRank frame, an eager checkpoint with one row
+    per node, shared by the topk and quantized queries.
+    checkpoint_every=2: at this graph size the cost is Catalyst
+    analyzing the 2^k-subtree logical plan, not materialization
+    (measured 24.2s @ ck=4 vs 11.9s @ ck=2 for 8 iterations at sf0.1);
+    a 10^9-node graph inverts the trade, and ck rises to 4-8 there."""
+    from askg_spark import webgraph
+    pages = view(spark, "web_pages", sf_dir)["pages"]
+    edges = webgraph.page_owner_edges(pages)
+    return {"ranks": webgraph.pagerank(edges, iterations=8,
+                                       checkpoint_every=2)}
+
+
+@shared_view("cooccur")
+def _cooccur_view(spark, sf_dir):
+    """The part co-occurrence graph (1.2M edges at sf0.1) both
+    graph-census queries read; its pp self-join + distinct is most of
+    either query's cold cost."""
+    from askg_spark import graphops
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return {"edges": graphops.cooccurrence_edges(li, "l_orderkey",
+                                                 "l_partkey")}
 
 
 # --------------------------------------------------------------- entry
@@ -163,7 +207,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # layer's stated skew policy (the library default is the
         # reference's uncapped formula); the oracle mirrors the cap.
         from askg_spark.search import similar_servers
-        return similar_servers(_kg_run(spark, sf).entities, limit=10,
+        return similar_servers(view(spark, "kg", sf)["entities"], limit=10,
                                author_cap=1000)
 
     def kg_semantic_search(spark, sf):
@@ -171,7 +215,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 314-365, 426-461); the prompt maps to category
         # 'data_processing' (kw "process") and ops query/transform
         from askg_spark.search import semantic_search
-        return semantic_search(_kg_run(spark, sf).entities,
+        return semantic_search(view(spark, "kg", sf)["entities"],
                                "find data process servers", limit=10)
 
     def kg_category_hierarchy(spark, sf):
@@ -222,7 +266,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # A5 per-registry metadata completeness
         # (analyze_deduplication.py:183-207)
         from askg_spark.metrics import metadata_completeness
-        return metadata_completeness(_kg_run(spark, sf).mentions)
+        return metadata_completeness(view(spark, "kg", sf)["mentions"])
 
     def kg_canonical_groups(spark, sf):
         # J1-J3 exact linking + CC + A2 canonical merge + P9/P11
@@ -232,8 +276,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # page lacks), so per-doc group size, registry union, the
         # prefer-non-empty repository fill and the repo-id branch of
         # the ID cascade are all closed-form per doc_id.
-        res = _kg_union_run(spark, sf)
-        return res.entities.select(
+        return view(spark, "kg_union", sf)["entities"].select(
             "id",
             F.size("member_urls").cast("int").alias("n_mentions"),
             F.array_join("registry_sources", ",").alias("registries"),
@@ -247,21 +290,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # from the planted glama repository URL, the rest from
         # author/name.
         from askg_spark.analysis import id_standardization_stats
-        return id_standardization_stats(_kg_union_run(spark, sf).entities)
+        return id_standardization_stats(
+            view(spark, "kg_union", sf)["entities"])
 
     def kg_repo_domains(spark, sf):
         # repository-URL domain distribution + unique-repo counts over
         # mentions (analyze_deduplication.py:91-121)
         from askg_spark.analysis import repo_domain_stats
-        return repo_domain_stats(_kg_union_run(spark, sf).mentions)
+        return repo_domain_stats(view(spark, "kg_union", sf)["mentions"])
 
     def kg_dedup_report(spark, sf):
         # dedup effectiveness + name-similarity stats in one row
         # (analyze_deduplication.py:124-180): mentions before, entities
         # after, removed, rate %, distinct norm names, dup-name groups
         from askg_spark.analysis import dedup_effectiveness
-        res = _kg_union_run(spark, sf)
-        return dedup_effectiveness(res.mentions, res.entities)
+        res = view(spark, "kg_union", sf)
+        return dedup_effectiveness(res["mentions"], res["entities"])
 
     def kg_fuzzy_groups(spark, sf):
         # J4 (LSH blocking) + J5 (weighted difflib scoring) under the
@@ -443,7 +487,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # truncation that bounds the quadratic joins at web scale,
         # exercised here against a SQL window mirror
         from askg_spark.relations import infer_relationship_edges
-        ents = _kg_run(spark, sf).entities
+        ents = view(spark, "kg", sf)["entities"]
         return (infer_relationship_edges(ents, max_entities_per_key=50)
                 .select("src", "dst", "rel_type").dropDuplicates())
 
@@ -674,47 +718,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return dedup.duplicate_span_stats(_t(spark, sf, "documents"),
                                           w=15)
 
-    def _ann_frames(spark, sf, method=None):
-        # the three ANN result frames (exact / LSH / IVF, 40 rows
-        # each) are consumed by four queries — memoized + persisted so
-        # the index build and rescore run once per sf, not per query.
-        # Memoization is PER METHOD (r5): ivf_topk trains its k-means
-        # centroids with eager driver-side Lloyd rounds, so building
-        # all three frames in one shot charged the IVF (and LSH) index
-        # build to whichever query called first — bench.py times
-        # ann_topk first, which is why its suite number jumped 0.7s ->
-        # 2.2s when the r4 md5-seeded IVF landed. Now each query pays
-        # exactly its own build; ann_recall_report still reuses all
-        # three without recompute.
-        def build(m):
-            key = (id(spark), sf, "ann", m)
-            if key not in _KG_CACHE:
-                emb = _t(spark, sf, "embeddings")
-                q = emb.filter(F.col("vec_id") < 8).select(
-                    F.col("vec_id").alias("query_id"), "embedding")
-                if m == "exact":
-                    df = simsearch.brute_force_topk(emb, q, k=5)
-                elif m == "lsh":
-                    df = simsearch.lsh_topk(emb, q, k=5)
-                else:
-                    df = simsearch.ivf_topk(emb, q, k=5, n_cells=16,
-                                            nprobe=14)
-                _KG_CACHE[key] = df.persist()
-            return _KG_CACHE[key]
-
-        if method is not None:
-            return build(method)
-        return {m: build(m) for m in ("exact", "lsh", "ivf")}
-
     def ann_topk(spark, sf):
-        return _ann_frames(spark, sf, "exact")
+        return view(spark, "ann_exact", sf)["topk"]
 
     def ann_lsh_topk(spark, sf):
         # HARD oracle (r4): the md5-derived hyperplanes make the whole
         # banded-LSH + multiprobe + rescore pipeline SQL-expressible,
         # so the DuckDB oracle re-runs the identical algorithm; recall
         # vs exact is additionally pinned by ann_recall_report
-        return _ann_frames(spark, sf, "lsh")
+        return view(spark, "ann_lsh", sf)["topk"]
 
     def ann_ivf_topk(spark, sf):
         # HARD oracle (r4): md5-seeded exact-break k-means makes the
@@ -726,15 +738,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # cell-pruning index must probe most cells; clustered real-world
         # embedding corpora sit at small nprobe/n_cells (see
         # simsearch.ivf_topk docstring).
-        return _ann_frames(spark, sf, "ivf")
+        return view(spark, "ann_ivf", sf)["topk"]
 
     def ann_recall_report(spark, sf):
         # in-engine recall certification: per (method, query) count of
         # exact-top-5 neighbors the approximate path recovered —
         # integers, hard-oracled by the same SQL mirrors; reads the
-        # shared persisted ANN frames (no recompute)
-        frames = _ann_frames(spark, sf)
-        exact = frames["exact"].select("query_id", "neighbor_id")
+        # shared ANN views (no recompute)
+        exact = view(spark, "ann_exact", sf)["topk"].select(
+            "query_id", "neighbor_id")
 
         def hits(approx, method):
             return (exact.join(
@@ -746,29 +758,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     .select(F.lit(method).alias("method"), "query_id",
                             "n_hits"))
 
-        return hits(frames["lsh"], "lsh").unionByName(
-            hits(frames["ivf"], "ivf"))
-
-    def _web_pages(spark, sf):
-        # rendered mcpmarket page family, memoized + persisted per sf:
-        # both web queries (indegree, pagerank) consume it, and the
-        # HTML render + regex extract dominates either query cold
-        # (~6-9 s at sf0.1 vs <1 s for the graph work itself)
-        from askg_spark.webcorpus import render_mcpmarket_pages
-        key = (id(spark), sf, "webpages")
-        if key not in _KG_CACHE:
-            from pyspark import StorageLevel
-            pages = render_mcpmarket_pages(_t(spark, sf, "documents")) \
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            _KG_CACHE[key] = pages
-        return _KG_CACHE[key]
+        return hits(view(spark, "ann_lsh", sf)["topk"], "lsh").unionByName(
+            hits(view(spark, "ann_ivf", sf)["topk"], "ivf"))
 
     def web_owner_indegree(spark, sf):
         # link-graph in-degree rolled up to the target owner over the
         # mcpmarket page family (2 github hrefs per page; doc_id%5==0
         # pages repeat the first card's target) — closed-form oracle
         from askg_spark import webgraph
-        return webgraph.owner_indegree(_web_pages(spark, sf))
+        return webgraph.owner_indegree(view(spark, "web_pages", sf)["pages"])
 
     def web_anchor_texts(spark, sf):
         # anchor-text aggregation over the fuzzy + mcpmarket page
@@ -785,31 +783,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             render_mcpmarket_pages(docs))
         return webgraph.target_anchor_stats(pages)
 
-    def _web_ranks(spark, sf):
-        # the 8-iteration rank frame is an eager localCheckpoint —
-        # self-contained and tiny (one row per node) — memoized so the
-        # topk and quantized queries share one loop run per sf
-        key = (id(spark), sf, "pagerank")
-        if key not in _KG_CACHE:
-            from askg_spark import webgraph
-            edges = webgraph.page_owner_edges(_web_pages(spark, sf))
-            # checkpoint_every=2: at this graph size the cost is
-            # Catalyst analyzing the 2^k-subtree logical plan, not
-            # materialization (measured 24.2s @ ck=4 vs 11.9s @ ck=2
-            # for 8 iterations at sf0.1); a 10^9-node graph inverts
-            # the trade — there ranks materialization dominates and
-            # ck rises to 4-8
-            _KG_CACHE[key] = webgraph.pagerank(edges, iterations=8,
-                                               checkpoint_every=2)
-        return _KG_CACHE[key]
-
     def web_pagerank_topk(spark, sf):
         # fixed-iteration distributed PageRank over the page->owner
         # link graph: iterative algorithm -> rows-only (float ranks
         # from distributed sums are not bit-stable across engines);
         # the update rule is verified against a NumPy power-iteration
         # reference to 1e-12 in tests/test_webgraph.py
-        return (_web_ranks(spark, sf)
+        return (view(spark, "web_ranks", sf)["ranks"]
                 .orderBy(F.desc("rank"), F.asc("node")).limit(10))
 
     def web_pagerank_quantized(spark, sf):
@@ -820,7 +800,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # summation-order drift; ordering is on the QUANTIZED rank
         # (+ node tie-break) so both engines rank identically. The
         # oracle re-runs the identical unrolled iteration in SQL.
-        return (_web_ranks(spark, sf).select(
+        return (view(spark, "web_ranks", sf)["ranks"].select(
                     "node",
                     F.floor(F.col("rank") * F.lit(1e9))
                      .cast("long").alias("rank_nano"))
@@ -843,7 +823,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # shuffle. The original plan — pair-distinct the full edge
         # set, then two sort-merge self-joins — shuffled the 1.5M-row
         # frame three times for the same answer.
-        tr = _kg_run(spark, sf).triples
+        tr = _kg_triples(spark, sf)
         rel_raw = (tr.where(F.col("pred").isin(
             "same_author", "similar_functionality"))
             .select("subj", "obj"))
@@ -864,7 +844,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # graph stats: top-20 subjects by out-degree (distinct
         # predicates ride the same groupBy); (degree DESC, subj ASC)
         # total order
-        tr = _kg_run(spark, sf).triples
+        tr = _kg_triples(spark, sf)
         return (tr.groupBy("subj")
                 .agg(F.count(F.lit(1)).alias("out_degree"),
                      F.countDistinct("pred").alias("n_preds"))
@@ -877,7 +857,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # two left-anti joins on (s,p,o). cast('' as bigint) -> NULL
         # in Spark mirrors the oracle's TRY_CAST
         from askg_spark.triples import snapshot_diff
-        tr = _kg_run(spark, sf).triples.select("subj", "pred", "obj")
+        tr = _kg_triples(spark, sf).select("subj", "pred", "obj")
         # try_cast: any digit-less subject extracts '' which ANSI cast
         # would reject; NULL-safe in both engines
         tail = F.regexp_extract(F.col("subj"), r"([0-9]+)$", 1) \
@@ -1269,30 +1249,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
              <= 3 * rsd * F.col("n_exact"))
             .cast("int").alias("sketch_ok"))
 
-    def _cooccur_edges(spark, sf):
-        # the 1.2M-edge part co-occurrence frame (sf0.1) feeds both
-        # graph-census queries; the pp self-join + distinct that
-        # builds it is most of either query's cold cost, so it is
-        # memoized + persisted per sf (same pattern as _web_pages)
-        from pyspark import StorageLevel
-
-        from askg_spark import graphops
-        key = (id(spark), sf, "cooccur")
-        if key not in _KG_CACHE:
-            li = _t(spark, sf, "lineitem").select("l_orderkey",
-                                                  "l_partkey")
-            # coalesce to core count before persisting: a cached frame
-            # pins its partitioning (AQE cannot coalesce through an
-            # InMemoryRelation), and the distinct's 128-way layout
-            # would tax every downstream scan with near-empty tasks
-            # (the r4 pipeline-cache lesson)
-            width = spark.sparkContext.defaultParallelism
-            _KG_CACHE[key] = (
-                graphops.cooccurrence_edges(li, "l_orderkey", "l_partkey")
-                .coalesce(width)
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        return _KG_CACHE[key]
-
     def part_cooccur_triangles(spark, sf):
         # exact triangle census of the part co-occurrence graph
         # (parts sharing an order), degree-ordered orientation so the
@@ -1300,14 +1256,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # orientation-independent, so the oracle recomputes it with
         # the simpler id-ordering
         from askg_spark import graphops
-        return graphops.triangle_stats(_cooccur_edges(spark, sf))
+        return graphops.triangle_stats(view(spark, "cooccur", sf)["edges"])
 
     def part_cooccur_kcore(spark, sf):
         # 80-core of the same co-occurrence graph: iterative peel to
         # the fixed point (<= 7 rounds here), surviving (node, degree)
         # rows; the oracle unrolls the peel to the 16-round backstop
         from askg_spark import graphops
-        return graphops.kcore(_cooccur_edges(spark, sf), k=80)
+        return graphops.kcore(view(spark, "cooccur", sf)["edges"], k=80)
 
     def events_latest_per_user(spark, sf):
         from pyspark.sql import Window

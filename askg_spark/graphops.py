@@ -244,11 +244,12 @@ def random_walks(edges: DataFrame, starts: DataFrame,
     the rank-window formulation (the residue is the caller's edge
     derivation, materialized once). Hub starts contribute their full
     neighbor list to one aggregation key: bounded by max degree, the
-    same envelope every per-node op here carries."""
+    same envelope every per-node op here carries. Each hop checkpoints
+    the walk frame (one row per start) and releases the hop before, so
+    the plan stays flat whatever the walk length."""
     # each hop probes this frame; pin it once or the caller's upstream
     # lineage (typically a distinct over the triple store) re-executes
-    # per hop — 8 scans for a 4-hop walk. The walks read it: it is the
-    # caller's.
+    # per hop — 8 scans for a 4-hop walk
     raw = checkpoint(
         edges.select(F.col("u").alias("s"), F.col("v").alias("d"))
         .unionByName(edges.select(F.col("v").alias("s"),
@@ -263,8 +264,10 @@ def random_walks(edges: DataFrame, starts: DataFrame,
         weight = F.md5(F.concat_ws(
             "|", F.col("start").cast("string"), F.lit(str(t)),
             F.col(hop).cast("string")))
-        cur = (F.broadcast(cur).join(nbr, cols[-1])
-               .groupBy(*cols)
-               .agg(F.min_by(hop, weight).alias(hop)))
+        prev, cur = cur, checkpoint(
+            F.broadcast(cur).join(nbr, cols[-1])
+            .groupBy(*cols)
+            .agg(F.min_by(hop, weight).alias(hop)))
+        release(prev)
         cols.append(hop)
     return base.join(cur, "start", "left")

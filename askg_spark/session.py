@@ -33,13 +33,22 @@ applies the same rule, or the code that called the operator). A loop
 releases each round with :func:`release` once the next is
 materialized. ``release`` frees caches and local checkpoints alike,
 without blocking, so no caller needs to know which kind it holds.
+
+Builds that several queries share are named views (:func:`shared_view`,
+:func:`view`). A view is built once per live SparkContext and input
+directory, inside its own operator scope, and each frame it exports is
+stored once by one rule: a frame that is itself a cache or checkpoint
+is kept as it is, any other is coalesced to ``defaultParallelism`` and
+persisted MEMORY_AND_DISK. :func:`release_views` frees them all.
 """
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 import threading
+from collections.abc import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -205,13 +214,17 @@ def _kind(leaf) -> str:
     return leaf.getClass().getSimpleName()
 
 
+def _plan(df: DataFrame):
+    """``df``'s analyzed plan with caches substituted afresh: the
+    frame's own ``withCachedData`` is fixed when it is first planned."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    return cm.useCachedData(df._jdf.queryExecution().analyzed())
+
+
 def _leaves(df: DataFrame) -> list:
     """The cache (``InMemoryRelation``) and checkpoint (``LogicalRDD``)
-    leaves ``df`` reads. Caches are substituted afresh: the frame's own
-    ``withCachedData`` is fixed when it is first planned."""
-    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
-    it = cm.useCachedData(df._jdf.queryExecution().analyzed()) \
-        .collectLeaves().iterator()
+    leaves ``df`` reads."""
+    it = _plan(df).collectLeaves().iterator()
     out = []
     while it.hasNext():
         leaf = it.next()
@@ -273,10 +286,19 @@ def release(*dfs: DataFrame) -> None:
             _drop(df.sparkSession._jsparkSession, leaf)
 
 
+def _frames(out) -> list[DataFrame]:
+    """A frame, or the frames in a returned dict or object's fields."""
+    if isinstance(out, DataFrame):
+        return [out]
+    values = out.values() if isinstance(out, dict) else \
+        getattr(out, "__dict__", {}).values()
+    return [x for x in values if isinstance(x, DataFrame)]
+
+
 def operator_scope(fn):
     """Release, when ``fn`` returns or raises, the frames it stored
-    (its callees' included), except those its result reads: a frame, or
-    the frame fields of a returned object. Those pass to the caller."""
+    (its callees' included), except those its result reads (see
+    :func:`_frames`). Those pass to the caller."""
     @functools.wraps(fn)
     def run(*args, **kwargs):
         made: list = []
@@ -289,10 +311,7 @@ def operator_scope(fn):
             raise
         finally:
             _OPEN.stack.pop()
-        frames = ([out] if isinstance(out, DataFrame) else
-                  [x for x in getattr(out, "__dict__", {}).values()
-                   if isinstance(x, DataFrame)])
-        reads = [leaf for df in frames for leaf in _leaves(df)]
+        reads = [leaf for df in _frames(out) for leaf in _leaves(df)]
         for m in made:
             if any(_same(m[1], r) for r in reads):
                 if _OPEN.stack:
@@ -301,3 +320,78 @@ def operator_scope(fn):
                 _drop(*m)
         return out
     return run
+
+
+# ---------------------------------------------------------- shared views
+
+# name -> build(spark, sf) returning {frame name: frame}
+VIEWS: dict[str, Callable[[SparkSession, str], dict[str, DataFrame]]] = {}
+_BUILT: dict[tuple[str, str], dict[str, DataFrame]] = {}
+_built_in = None  # the SparkContext the frames in _BUILT live in
+_BUILDING = threading.RLock()  # a build may request the views it reads
+
+
+def shared_view(name: str):
+    """Register the decorated ``build(spark, sf)`` as view ``name``.
+    Register a view after the views its build requests, so that
+    building them in ``VIEWS`` order charges each build to its own."""
+    def register(build):
+        VIEWS[name] = build
+        return build
+    return register
+
+
+@contextlib.contextmanager
+def _unscoped():
+    # a view outlives whichever operator first requests it
+    outer, _OPEN.stack = _OPEN.stack, []
+    try:
+        yield
+    finally:
+        _OPEN.stack = outer
+
+
+def _is_stored(df: DataFrame) -> bool:
+    root = _plan(df)
+    return _kind(root) == "InMemoryRelation" or (
+        _kind(root) == "LogicalRDD"
+        and root.rdd().getStorageLevel().isValid())
+
+
+@operator_scope
+def _build(spark: SparkSession, name: str, sf: str) -> dict[str, DataFrame]:
+    frames = VIEWS[name](spark, sf)
+    width = spark.sparkContext.defaultParallelism
+    for key, df in frames.items():
+        if not _is_stored(df):
+            # a cache pins its width (AQE cannot coalesce through it);
+            # the core count keeps every scan of it one full task wave
+            frames[key] = persist(df.coalesce(width),
+                                  StorageLevel.MEMORY_AND_DISK)
+            frames[key].count()
+    return frames
+
+
+def view(spark: SparkSession, name: str, sf: str) -> dict[str, DataFrame]:
+    """The frames of view ``name`` over input directory ``sf``, built
+    by the first request in the live SparkContext; later requests get
+    the same frames and run no job. A new context starts afresh."""
+    global _built_in
+    with _BUILDING:
+        if _built_in is not spark.sparkContext:
+            _BUILT.clear()  # a stopped context's storage is gone with it
+            _built_in = spark.sparkContext
+        if (name, sf) not in _BUILT:
+            with _unscoped():
+                _BUILT[name, sf] = _build(spark, name, sf)
+        return _BUILT[name, sf]
+
+
+def release_views() -> None:
+    """Release every built view's storage with one :func:`release`."""
+    with _BUILDING:
+        frames = [df for built in _BUILT.values() for df in built.values()]
+        _BUILT.clear()
+        if frames and _built_in._jsc is not None:
+            with _unscoped():
+                release(*frames)

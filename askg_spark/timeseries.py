@@ -31,7 +31,7 @@ Reference analog: none (training-pipeline operator family).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str = "user_id",
@@ -226,12 +226,15 @@ def anomaly_hours(events: DataFrame, type_col: str = "event_type",
 
     — integer arithmetic, so the flag is bit-reproducible on any
     partitioning and in SQL with no float tolerance at the boundary.
-    The multiplied-out terms are computed in DECIMAL(38,0)
-    unconditionally (advisor r4: the BIGINT version wrapped silently
-    past hourly counts of ~10⁶ over ~10³ hours in non-ANSI Spark —
-    wrong flags, no error; decimal lanes are exact to 38 digits,
-    envelope |c·n − S| < ~10¹⁹, far beyond any hourly count), and
-    the DuckDB oracle mirrors with HUGEINT.
+    SS and the multiplied-out terms are computed in DECIMAL(38,0) (the
+    BIGINT version wrapped silently past hourly counts of ~10⁶ over
+    ~10³ hours in non-ANSI Spark — wrong flags, no error), and the
+    DuckDB oracle mirrors with HUGEINT. The envelope is every product
+    below 10³⁸, for the square |c·n − S| < 10¹⁹, far beyond any hourly
+    count. Past it the flag raises whatever ``spark.sql.ansi.enabled``
+    says: ANSI mode raises on the overflow, and without it the
+    overflowed product is NULL, which the guard turns into an error
+    instead of a silent 0.
 
     Plan: one groupBy(type, hour) count (map-side combine), a tiny
     per-type moment aggregate joined back broadcast, and a pure
@@ -246,17 +249,30 @@ def anomaly_hours(events: DataFrame, type_col: str = "event_type",
     moments = hourly.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_h"),
         F.sum("n_events").alias("s"),
-        F.sum(F.col("n_events") * F.col("n_events")).alias("ss"))
-    def d38(c):
-        return c.cast("decimal(38,0)")
-
-    dev = d38(F.col("n_events")) * d38(F.col("n_h")) - d38(F.col("s"))
-    var_term = (F.lit(int(sigmas) ** 2).cast("decimal(38,0)") *
-                (d38(F.col("n_h")) * d38(F.col("ss"))
-                 - d38(F.col("s")) * d38(F.col("s"))))
+        F.sum(_d38(F.col("n_events")) * _d38(F.col("n_events")))
+        .alias("ss"))
     return (hourly.join(F.broadcast(moments), "event_type")
             .select("event_type", "hour",
                     F.col("n_events").cast("long").alias("n_events"),
-                    F.when((dev > 0) & (dev * dev > var_term),
-                           F.lit(1)).otherwise(F.lit(0))
-                    .cast("long").alias("is_anomaly")))
+                    _anomaly_flag(F.col("n_events"), F.col("n_h"),
+                                  F.col("s"), F.col("ss"), sigmas)
+                    .alias("is_anomaly")))
+
+
+def _d38(c: Column) -> Column:
+    return c.cast("decimal(38,0)")
+
+
+def _anomaly_flag(c: Column, n: Column, s: Column, ss: Column,
+                  sigmas: int) -> Column:
+    """1 if (c·n − S) > 0 and (c·n − S)² > k²·(n·SS − S²), else 0, as
+    a BIGINT; raises if a product leaves DECIMAL(38,0)."""
+    dev = _d38(c) * _d38(n) - _d38(s)
+    square = dev * dev
+    var_term = (F.lit(int(sigmas) ** 2).cast("decimal(38,0)") *
+                (_d38(n) * _d38(ss) - _d38(s) * _d38(s)))
+    return (F.when(square.isNull() | var_term.isNull(), F.raise_error(
+                F.lit("anomaly_hours: moments exceed DECIMAL(38,0)"))
+                .cast("long"))
+            .when((dev > 0) & (square > var_term), F.lit(1).cast("long"))
+            .otherwise(F.lit(0).cast("long")))

@@ -1,12 +1,19 @@
-"""Bench harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
+"""Bench harness: every shared view build and every query of
+``__spark_entry__.queries()`` at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
 
   {"metric": "headline_suite", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <dir>, ...extras}
+   "queries": {"build:<view>": sec, ..., <query>: sec, ...},
+   "sf": <dir>, ...extras}
 
-Extras carry throughput (docs/sec into the KG pipeline, triples/sec
-out) and the LSH-ANN recall vs the exact top-k — the numbers
-BENCH.md's scaling table is built from.
+Each view of ``askg_spark.session.VIEWS`` is built in its own
+``build:<view>`` row first, so no query row pays for a build that
+others share, whatever the order. Then every query runs in contract
+order through one action, a ``noop`` write: it evaluates every column,
+where a ``count()`` may prune projected UDF columns. Extras: the
+untimed warmup's wall (``warmup_s``), KG throughput from the
+``build:kg`` row, ANN recall from the ``ann_recall_report`` rows and
+host steal over the suite.
 """
 from __future__ import annotations
 
@@ -33,152 +40,64 @@ def main() -> int:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entrymod
-    from askg_spark.session import get_spark
+    from askg_spark import session
+    from askg_spark.pipeline import PipelineConfig, run_pipeline
+    from askg_spark.webcorpus import render_pages
 
-    spark = get_spark("askg-bench")
+    spark = session.get_spark("askg-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = entrymod.queries()
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
 
-    def run(name: str, action=None):
+    def timed(row, fn, *args):
         t0 = time.monotonic()
-        df = qs[name](spark, sf_dir)
-        out = df.count() if action is None else action(df)
-        timings[name] = round(time.monotonic() - t0, 3)
-        return out
+        fn(*args)
+        timings[row] = round(time.monotonic() - t0, 3)
 
-    # UNTIMED session warmup (disclosed in BENCH.md §movers-r5): a
-    # 200-doc pipeline pass spins up the Arrow python-worker pool
-    # (32 workers importing pandas/numpy) and compiles the hot
-    # whole-stage-codegen paths. Measured at sf0.1: the first
-    # pipeline run in a session costs ~22s, every later one ~11.5s
-    # with identical work — the ~10.9s delta is one-time JVM/worker
-    # startup, and without this pass it all lands on whichever query
-    # runs first (kg_triples), misattributing session setup as query
-    # cost. Per-query rows below are steady-state.
-    from askg_spark.pipeline import PipelineConfig, run_pipeline
-    from askg_spark.webcorpus import render_pages
-    warm_res = run_pipeline(
-        spark,
-        render_pages(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)),
-        PipelineConfig())
-    warm_res.triples.count()
+    @session.operator_scope
+    def run_query(query):
+        # the scope frees what the query stored once its rows are written
+        query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    # Untimed warmup: a 200-doc pipeline pass starts the Python worker
+    # pool and compiles the hot codegen paths. The first pipeline run
+    # in a session measured ~22s at sf0.1 and every later one ~11.5s
+    # with identical work; without this pass the one-time startup
+    # lands on whichever row runs first.
+    t0 = time.monotonic()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    warm = run_pipeline(spark, render_pages(docs.limit(200)),
+                        PipelineConfig())
+    warm.triples.count()
+    session.release(warm.mentions, warm.entities)
+    extras["warmup_s"] = round(time.monotonic() - t0, 2)
 
     t_all = time.monotonic()
     steal0 = _steal_ticks()
-
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    n_triples = run("kg_triples")
-    extras["kg_docs"] = n_docs
-    extras["kg_triples"] = n_triples
-    extras["kg_docs_per_sec"] = round(n_docs / timings["kg_triples"], 1)
-    extras["kg_triples_per_sec"] = round(n_triples / timings["kg_triples"], 1)
-
-    run("dedup_exact_groups")
-    run("dedup_substring_spans")
-    run("dedup_incremental")
-    run("corpus_domain_stats")
-    run("events_anomaly_hours")
-    run("doc_top_terms")
-    run("corpus_collocations")
-    run("stream_windowed_mentions")
-    run("doc_chunks")
-    run("web_anchor_texts")
-    run("doc_lm_perplexity")
-    run("part_cooccur_kcore")
-    run("dedup_ngram_pairs")
-    run("dedup_minhash_pairs")
-    run("dedup_simhash_pairs")
-    run("dedup_embedding_pairs")
-
-    t0 = time.monotonic()
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in qs["ann_topk"](spark, sf_dir).collect()}
-    timings["ann_topk"] = round(time.monotonic() - t0, 3)
-    t0 = time.monotonic()
-    approx = {(r["query_id"], r["neighbor_id"])
-              for r in qs["ann_lsh_topk"](spark, sf_dir).collect()}
-    timings["ann_lsh_topk"] = round(time.monotonic() - t0, 3)
-    extras["ann_lsh_recall"] = round(
-        len(exact & approx) / len(exact), 4) if exact else 1.0
-    t0 = time.monotonic()
-    ivf = {(r["query_id"], r["neighbor_id"])
-           for r in qs["ann_ivf_topk"](spark, sf_dir).collect()}
-    timings["ann_ivf_topk"] = round(time.monotonic() - t0, 3)
-    extras["ann_ivf_recall"] = round(
-        len(exact & ivf) / len(exact), 4) if exact else 1.0
-
-    run("kg_negative_samples")
-    run("kg_random_walks")
-    run("kg_similar_servers")
-    run("kg_triples_diff")
-    run("kg_degree_topk", lambda df: len(df.collect()))
-    run("kg_two_hop", lambda df: len(df.collect()))
-    run("ann_recall_report", lambda df: len(df.collect()))
-    run("kg_semantic_search")
-    run("kg_category_hierarchy")
-    run("kg_clean_cypher")
-    run("multimodal_decode_stats")
-    run("multimodal_resize_stats")
-    run("multimodal_frame_stats")
-    run("multimodal_bmp_stats")
-    run("multimodal_audio_stats")
-    run("multimodal_gif_stats")
-    run("multimodal_jpeg_stats")
-    run("multimodal_quarantine_stats")
-    run("warc_roundtrip")
-    run("kg_ntriples_export")
-    run("web_robots_filter")
-    run("catalog_pruned_scan")
-    run("graph_bfs_depths")
-    run("corpus_bpe_merges")
-    run("corpus_bpe_encode")
-    run("web_surt_keys")
-    run("web_cdx_index")
-    run("web_fetch_schedule")
-    run("events_quantile_sketch")
-    run("doc_dsir_scores")
-    run("part_cooccur_triangles")
-    run("events_distinct_sketch")
-    run("doc_eval_holdout")
-    run("web_canonical_urls")
-    run("registry_completeness")
-    run("doc_token_stats")
-    run("doc_lang_id")
-    run("doc_repetition_stats")
-    run("doc_pii_scan")
-    run("doc_quality_report", lambda df: len(df.collect()))
-    run("doc_sample_mixture")
-    run("doc_line_dedup")
-    run("corpus_token_vocab", lambda df: len(df.collect()))
-    run("doc_normalize_text")
-    run("doc_oov_rate")
-    run("doc_pack_assignments")
-    run("doc_length_quantiles", lambda df: len(df.collect()))
-    run("doc_contamination")
-    run("emb_label_centroids")
-    run("web_owner_indegree")
-    run("web_pagerank_topk", lambda df: len(df.collect()))
-    run("web_pagerank_quantized", lambda df: len(df.collect()))
-    run("events_latest_per_user")
-    run("events_asof_join")
-    run("events_sessions")
-    run("events_funnel", lambda df: len(df.collect()))
-    run("events_rolling_weekly")
-    run("events_type_pivot")
-    run("events_cohort_retention", lambda df: len(df.collect()))
-    run("events_hourly_counts")
-    run("top_customers_by_revenue", lambda df: len(df.collect()))
-    run("lineitem_pricing_summary", lambda df: len(df.collect()))
-    run("nation_lineitem_volume", lambda df: len(df.collect()))
-
+    for name in session.VIEWS:
+        timed(f"build:{name}", session.view, spark, name, sf_dir)
+    qs = entrymod.queries()
+    for name, query in qs.items():
+        timed(name, run_query, query)
     total = round(time.monotonic() - t_all, 2)
     # steal as % of ONE core over the suite window (jiffy = 10 ms)
     extras["steal_corepct"] = round(
         100 * (_steal_ticks() - steal0) * 0.01 / max(total, 1e-9), 1)
+
+    n_docs = docs.count()
+    n_triples = session.view(spark, "kg", sf_dir)["triples"].count()
+    extras["kg_docs"] = n_docs
+    extras["kg_triples"] = n_triples
+    extras["kg_docs_per_sec"] = round(n_docs / timings["build:kg"], 1)
+    extras["kg_triples_per_sec"] = round(n_triples / timings["build:kg"], 1)
+    n_exact = session.view(spark, "ann_exact", sf_dir)["topk"].count()
+    hits: dict[str, int] = {}
+    for r in qs["ann_recall_report"](spark, sf_dir).collect():
+        hits[r["method"]] = hits.get(r["method"], 0) + r["n_hits"]
+    for method, n in sorted(hits.items()):
+        extras[f"ann_{method}_recall"] = round(n / n_exact, 4)
+
     print(json.dumps({
         "metric": "headline_suite",
         "value": total,

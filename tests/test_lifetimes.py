@@ -3,9 +3,14 @@
 Every operator that stores frames leaves persisted exactly the storage
 its returned frames read, and ``session.release`` on those frames frees
 all of it: no persisted RDD and no cache-manager entry is left behind.
-The walk over a result's plan below is written independently of
-``askg_spark.session``."""
+The shared views obey the same rule, are built once per SparkContext,
+and ``session.release_views`` frees them all. The walk over a result's
+plan below is written independently of ``askg_spark.session``."""
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import DataFrame
@@ -13,6 +18,7 @@ from pyspark.sql import DataFrame
 from askg_spark import bpe, cc, dedup, graphops, session, webgraph
 from askg_spark.fixtures import generate_pages
 from askg_spark.pipeline import PipelineConfig, PipelineResult, run_pipeline
+from tests.test_trainops import SF  # the sf0.001 tables
 
 
 def _persisted(spark) -> set[int]:
@@ -197,7 +203,18 @@ ROUNDS = {
     "pagerank": lambda spark, n: webgraph.pagerank(
         _tailed(spark, 2, "src", "dst"), iterations=2 * n,
         checkpoint_every=2),
+    "random_walks": lambda spark, n: graphops.random_walks(
+        _tailed(spark, 2, "u", "v"),
+        spark.createDataFrame([("c2",)], "n string"), length=n),
+    "component_labels_loop": lambda spark, n: _loop_labels(
+        _tailed(spark, n, "src", "dst")),
 }
+
+
+def _loop_labels(edges):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cc, "_LOOP_ABOVE", 0)
+        return cc.component_labels(edges)
 
 
 @pytest.mark.parametrize("name", list(ROUNDS))
@@ -211,3 +228,82 @@ def test_result_plan_grows_at_most_linearly_in_rounds(spark, name):
     # a plan of a + b*rounds characters at most doubles when the rounds
     # double; a plan that doubles every round grows far past that
     assert sizes[1] <= 2 * sizes[0], sizes
+
+
+# -------------------------------------------------------- shared views
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+@pytest.fixture(scope="module")
+def views(spark):
+    """name -> (frames, persisted RDDs added, cache entries added) for
+    every registered view, built in registry order over SF."""
+    import __spark_entry__  # noqa: F401  (registers the views)
+    session.release_views()
+    built = {}
+    for name in session.VIEWS:
+        rdds0, caches0 = _persisted(spark), _cache_entries(spark)
+        frames = session.view(spark, name, SF)
+        built[name] = (frames, _persisted(spark) - rdds0,
+                       _cache_entries(spark) - caches0)
+    yield built
+    session.release_views()
+
+
+def test_second_view_request_runs_no_job(spark, views):
+    jobs = _jobs(spark)
+    again = {name: session.view(spark, name, SF) for name in views}
+    assert _jobs(spark) == jobs
+    for name, (frames, _, _) in views.items():
+        assert again[name] == frames
+        assert all(again[name][k] is df for k, df in frames.items())
+    views["cooccur"][0]["edges"].count()
+    assert _jobs(spark) > jobs  # the probe sees a job
+
+
+def test_view_stores_exactly_what_its_frames_read(spark, views):
+    for name, (frames, added, entries) in views.items():
+        reads, cached = _reads(list(frames.values()))
+        assert added == reads, name
+        assert entries == len(cached), name
+    # the mentions cache, the entities checkpoint and the triples cache:
+    # frames that are stored already are kept, not stored again
+    assert len(views["kg"][1]) == 3
+    assert views["kg"][2] == 2
+
+
+def test_release_views_frees_every_view(spark, views):
+    stored = set().union(*(added for _, added, _ in views.values()))
+    entries = _cache_entries(spark)
+    session.release_views()
+    assert not _persisted(spark) & stored
+    assert _cache_entries(spark) == entries - sum(
+        n for _, _, n in views.values())
+
+
+def test_view_is_built_afresh_in_a_new_context():
+    code = f"""
+import __spark_entry__
+from askg_spark import session
+
+def start():
+    return session.get_spark(
+        "views", master="local[2]", shuffle_partitions=2,
+        extra_confs={{"spark.driver.memory": "1g"}})
+
+spark = start()
+first = session.view(spark, "cooccur", {SF!r})["edges"]
+n = first.count()
+spark.stop()
+spark = start()
+again = session.view(spark, "cooccur", {SF!r})["edges"]
+assert again is not first and again.sparkSession is spark
+assert again.count() == n
+"""
+    subprocess.run([sys.executable, "-c", code], cwd=ROOT, check=True,
+                   timeout=300, capture_output=True)

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
+
 from askg_spark.timeseries import asof_join
 
 
@@ -232,3 +234,33 @@ def test_anomaly_hours_integer_z_test(spark):
            for r in anomaly_hours(df).collect()}
     assert got[("spiky", 20)] == 1
     assert all(v == 0 for k, v in got.items() if k != ("spiky", 20))
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_anomaly_flag_raises_past_the_decimal_envelope(spark, ansi):
+    """One synthetic moments row per side of |c·n − S| = 10^19, where
+    the square leaves DECIMAL(38,0): inside, the exact flag; outside,
+    an error in both ANSI modes (with ANSI off the square is NULL and
+    used to make a silent 0)."""
+    from pyspark.sql import functions as F
+
+    from askg_spark.timeseries import _anomaly_flag
+
+    def flag(s):
+        # c = 10^9 over n = 10^10 hours: c·n = 10^19, SS = c²
+        row = spark.createDataFrame(
+            [(10**9, 10**10, s, 10**18)],
+            "c long, n long, s long, ss long")
+        return row.select(_anomaly_flag(
+            F.col("c"), F.col("n"), F.col("s"), F.col("ss"), 3)
+            .alias("f")).collect()[0]["f"]
+
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        assert flag(1) == 1  # |c·n − S| = 10^19 - 1
+        with pytest.raises(Exception,
+                           match="DECIMAL|NUMERIC_VALUE_OUT_OF_RANGE"):
+            flag(0)  # |c·n − S| = 10^19
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)

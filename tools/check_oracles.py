@@ -10,7 +10,9 @@ gate. This version serializes every cell EXACTLY (repr round-trip for
 floats, full-precision decimals, hex bytes), sorts rows canonically,
 and hashes — so mirror-green requires bit-level value equality, at
 least as strict as any sane driver hash. A mismatch prints both
-hashes plus the first differing rows for debugging.
+hashes plus the first differing rows for debugging. Each query runs
+inside an operator scope and the shared views are released at the end,
+so a run leaves no stored frame behind.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
@@ -107,11 +109,17 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
-    from askg_spark.session import get_spark
+    from askg_spark.session import get_spark, operator_scope, release_views
 
     spark = get_spark("check-oracles", master="local[8]",
                       shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
+
+    @operator_scope
+    def spark_rows(fn):
+        # the scope frees what the query stored once its rows are read
+        sdf = fn(spark, sf_dir)
+        return sdf.columns, [tuple(r) for r in sdf.collect()]
 
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
@@ -125,9 +133,7 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
+            scols, srows = spark_rows(fn)
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {exc}")
             failures += 1
@@ -164,6 +170,7 @@ def main() -> int:
             failures += 1
         else:
             print(f"ok    {name}: {len(srows)} rows")
+    release_views()
     print(f"\n{failures} failing" if failures else "\nall oracle checks pass")
     return 1 if failures else 0
 
