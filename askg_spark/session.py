@@ -53,6 +53,29 @@ from collections.abc import Callable
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
+
+def _default_heap(meminfo: str | None) -> str:
+    """The driver heap for a host whose ``/proc/meminfo`` reads
+    ``meminfo``: half its ``MemTotal``, at most 48g; 48g when the text
+    gives no ``MemTotal``. In ``local[N]`` mode the one JVM does all
+    executor work, so the heap is sized for the whole host."""
+    for line in (meminfo or "").splitlines():
+        field = line.split()
+        if field[:1] == ["MemTotal:"] and len(field) > 1 \
+                and field[1].isdigit():
+            mb = int(field[1]) // 2048  # kB -> MB, halved
+            return f"{mb}m" if mb < 48 * 1024 else "48g"
+    return "48g"
+
+
+def _meminfo() -> str | None:
+    try:
+        with open("/proc/meminfo") as f:
+            return f.read()
+    except OSError:
+        return None
+
+
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -84,8 +107,8 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.ui.enabled": "false",
     # NB: honored only when the JVM is launched by this process (plain
     # `python` entrypoints); under spark-submit pass --driver-memory.
-    # local[32] is one JVM doing all executor work — size accordingly.
-    "spark.driver.memory": os.environ.get("ASKG_DRIVER_MEM", "48g"),
+    "spark.driver.memory": (os.environ.get("ASKG_DRIVER_MEM")
+                            or _default_heap(_meminfo())),
 }
 
 # Shuffle/spill scratch: Spark's default is /tmp, which on this box is

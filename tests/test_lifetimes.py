@@ -150,10 +150,19 @@ CASES = {
     "train_bpe": (lambda spark: bpe.train_bpe(
         bpe.word_type_counts(_docs(spark)), n_merges=4, min_freq=1),
         None),
+    "train_bpe_spark": (lambda spark: _spark_bpe(
+        bpe.word_type_counts(_docs(spark)), n_merges=4), None),
     "component_labels_serial": _labels(loop=False),
     "component_labels_loop": _labels(loop=True),
     "run_pipeline": _pipeline(),
 }
+
+
+def _spark_bpe(word_counts, n_merges):
+    with pytest.MonkeyPatch.context() as mp:
+        # a gate below the table's size selects the Spark loop
+        mp.setattr(bpe, "_DRIVER_MAX_TYPES", 0)
+        return bpe.train_bpe(word_counts, n_merges=n_merges, min_freq=1)
 
 
 def _frames(out) -> list[DataFrame]:
@@ -228,6 +237,23 @@ def test_result_plan_grows_at_most_linearly_in_rounds(spark, name):
     # a plan of a + b*rounds characters at most doubles when the rounds
     # double; a plan that doubles every round grows far past that
     assert sizes[1] <= 2 * sizes[0], sizes
+
+
+def test_bpe_spark_rounds_read_a_flat_plan(spark, monkeypatch):
+    sizes = []
+    pair_counts = bpe._pair_counts
+
+    def spy(types):
+        sizes.append(
+            len(types._jdf.queryExecution().optimizedPlan().toString()))
+        return pair_counts(types)
+
+    monkeypatch.setattr(bpe, "_pair_counts", spy)
+    merges = _spark_bpe(bpe.word_type_counts(_docs(spark)), n_merges=16)
+    assert len(merges) == 16
+    # the frame the 16th round reads, against the one the 8th reads:
+    # a plan that stacks a round per round would far more than double
+    assert sizes[15] <= 2 * sizes[7], sizes
 
 
 # -------------------------------------------------------- shared views
