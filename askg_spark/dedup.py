@@ -6,8 +6,7 @@ DataFrame -> DataFrame function designed for 100 TB inputs:
   exact        hash-groupBy on a canonical md5 fingerprint (one shuffle
                on the hash key; map-side partial agg free from Catalyst)
   ngram        token n-gram Jaccard via an inverted-index equi-join —
-               never all-pairs; optional stop-gram cap bounds the
-               posting-list blowup on hot shingles (skew policy)
+               never all-pairs
   minhash      banded MinHash blocking (r=2 JVM-side minhashes, the
                linking.py:104-112 analysis) + exact Jaccard rescore of
                candidates — the sub-quadratic scale path
@@ -56,21 +55,13 @@ def exact_dedup(df: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------- n-grams
 
-def ngram_jaccard_pairs(
-    df: DataFrame, n: int = 3, threshold: float = 0.5,
-    max_gram_df: int | None = None,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, n: int = 3,
+                        threshold: float = 0.5) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard >= threshold.
 
     Inverted-index plan: explode grams -> self equi-join on gram ->
     per-pair intersection count -> join per-doc set sizes. Shuffles on
     (gram) then (pair) — linear in posting-list mass, never |docs|².
-
-    ``max_gram_df`` drops grams appearing in more than that many docs
-    (stop-grams): at web scale a boilerplate shingle ("all rights
-    reserved...") creates a quadratic posting list; capping it is the
-    standard, explicitly-logged recall trade (pairs supported ONLY by
-    stop-grams are lost). None = exact (tests, oracle parity).
     """
     g = (df.select("doc_id", tokens(F.col("text")).alias("toks"))
          .select("doc_id", F.explode(ngrams_from_tokens(F.col("toks"), n))
@@ -81,10 +72,6 @@ def ngram_jaccard_pairs(
     # is the dominant byte volume at web scale, and a 64-bit collision
     # only adds one spurious common-gram count (P ~ m^2/2^64)
     g = g.select("doc_id", F.xxhash64("gram").alias("gram"))
-    if max_gram_df is not None:
-        hot = g.groupBy("gram").agg(F.count(F.lit(1)).alias("df_"))
-        g = g.join(hot.filter(F.col("df_") <= max_gram_df).select("gram"),
-                   "gram", "left_semi")
     a = g.select(F.col("doc_id").alias("doc_a"), "gram")
     b = g.select(F.col("doc_id").alias("doc_b"), "gram")
     inter = (
@@ -105,8 +92,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def duplicate_span_stats(df: DataFrame, w: int = 15,
-                         max_window_df: int | None = None) -> DataFrame:
+def duplicate_span_stats(df: DataFrame, w: int = 15) -> DataFrame:
     """Exact duplicate-SUBSTRING coverage per document — the windowed
     formulation of suffix-array substring dedup (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): a
@@ -131,12 +117,7 @@ def duplicate_span_stats(df: DataFrame, w: int = 15,
       * interval union is a per-doc sort (lead over doc_id/i): for
         fixed-length intervals sorted by start, covered =
         Σ min(w, next_start - start) with w for the last — no
-        collect, no per-doc Python;
-      * ``max_window_df`` (None = exact) drops windows occurring in
-        more than that many positions corpus-wide — the boilerplate
-        stop-window cap; at web scale a license header's windows have
-        posting lists of millions and would dominate the back-join.
-        Dropped mass is the cap policy, logged by the caller.
+        collect, no per-doc Python.
     """
     t = (df.select("doc_id", tokens(F.col("text")).alias("toks"))
          .select("doc_id", F.col("toks"),
@@ -156,8 +137,6 @@ def duplicate_span_stats(df: DataFrame, w: int = 15,
                     F.col("win.h").alias("h")))
     counts = wins.groupBy("h").agg(F.count(F.lit(1)).alias("n_occ"))
     dup_keys = counts.filter(F.col("n_occ") > 1)
-    if max_window_df is not None:
-        dup_keys = dup_keys.filter(F.col("n_occ") <= max_window_df)
     hit = wins.join(dup_keys.select("h"), "h", "left_semi")
     nxt = F.lead("i").over(
         Window.partitionBy("doc_id").orderBy("i"))
@@ -181,8 +160,7 @@ def duplicate_span_stats(df: DataFrame, w: int = 15,
 
 
 def incremental_dedup_flags(base: DataFrame, inc: DataFrame,
-                            n: int = 3, threshold: float = 0.5,
-                            max_gram_df: int | None = None) -> DataFrame:
+                            n: int = 3, threshold: float = 0.5) -> DataFrame:
     """Incremental-crawl dedup: flag each INCREMENT document against
     an existing BASE corpus — the shape every rolling web pipeline
     runs per snapshot (dedup the new crawl against the index, never
@@ -200,9 +178,7 @@ def incremental_dedup_flags(base: DataFrame, inc: DataFrame,
     the increment shuffles). The near arm is the asymmetric variant
     of ngram_jaccard_pairs' inverted index: increment grams equi-join
     base grams on the xxhash64 gram key, so join work is proportional
-    to the INCREMENT's posting mass, not the corpus product.
-    ``max_gram_df`` is the same stop-gram skew cap, measured on the
-    base side (boilerplate lives in the base)."""
+    to the INCREMENT's posting mass, not the corpus product."""
     fp_base = fingerprints(base).select("fingerprint").distinct()
     fp_inc = fingerprints(inc)
     exact = (fp_inc.join(fp_base, "fingerprint", "left_semi")
@@ -216,11 +192,6 @@ def incremental_dedup_flags(base: DataFrame, inc: DataFrame,
                 .select("doc_id", F.xxhash64("gram").alias("gram")))
 
     gb, gi = grams_of(base), grams_of(inc)
-    if max_gram_df is not None:
-        hot = gb.groupBy("gram").agg(F.count(F.lit(1)).alias("df_"))
-        ok = hot.filter(F.col("df_") <= max_gram_df).select("gram")
-        gb = gb.join(ok, "gram", "left_semi")
-        gi = gi.join(ok, "gram", "left_semi")
     sizes_b = gb.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_b"))
     sizes_i = gi.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_i"))
     inter = (gi.withColumnRenamed("doc_id", "inc_id")
@@ -245,10 +216,8 @@ def incremental_dedup_flags(base: DataFrame, inc: DataFrame,
                      .alias("n_near_dups")))
 
 
-def contamination_check(
-    train: DataFrame, eval_df: DataFrame, n: int = 4,
-    max_gram_df: int | None = None,
-) -> DataFrame:
+def contamination_check(train: DataFrame, eval_df: DataFrame,
+                        n: int = 4) -> DataFrame:
     """Benchmark-contamination scan: which training documents share
     word n-grams with an evaluation/benchmark set?
     -> (train_doc_id, eval_doc_id, n_shared_grams) for every
@@ -264,9 +233,7 @@ def contamination_check(
 
     Gram keys are xxhash64 (8-byte) like :func:`ngram_jaccard_pairs`;
     a 64-bit collision adds one spurious shared-gram count with
-    P ~ m^2/2^64. ``max_gram_df`` optionally drops grams appearing in
-    more than that many TRAIN docs (boilerplate guard, same stop-gram
-    policy as the Jaccard join). Both frames need (doc_id, text)."""
+    P ~ m^2/2^64. Both frames need (doc_id, text)."""
     def grams_of(df: DataFrame, out_id: str) -> DataFrame:
         return (
             df.select(F.col("doc_id").alias(out_id),
@@ -279,10 +246,6 @@ def contamination_check(
         )
 
     tg = grams_of(train, "train_doc_id")
-    if max_gram_df is not None:
-        hot = tg.groupBy("gram").agg(F.count(F.lit(1)).alias("df_"))
-        tg = tg.join(hot.filter(F.col("df_") <= max_gram_df)
-                     .select("gram"), "gram", "left_semi")
     eg = grams_of(eval_df, "eval_doc_id")
     return (
         tg.join(F.broadcast(eg), "gram")
@@ -293,8 +256,8 @@ def contamination_check(
 
 # ---------------------------------------------------------------- clusters
 
-def near_dup_clusters(df: DataFrame, n: int = 3, threshold: float = 0.5,
-                      max_gram_df: int | None = None) -> DataFrame:
+def near_dup_clusters(df: DataFrame, n: int = 3,
+                      threshold: float = 0.5) -> DataFrame:
     """Transitive near-duplicate clusters -> (doc_id, cluster_id).
 
     Connected components over the union of exact-fingerprint edges
@@ -316,8 +279,7 @@ def near_dup_clusters(df: DataFrame, n: int = 3, threshold: float = 0.5,
     def enc(c: Column) -> Column:
         return F.lpad(c.cast("string"), 20, "0")
 
-    ng = ngram_jaccard_pairs(df, n=n, threshold=threshold,
-                             max_gram_df=max_gram_df)
+    ng = ngram_jaccard_pairs(df, n=n, threshold=threshold)
     fp = fingerprints(df)
     fp_min = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("canon"))
     fp_edges = (
@@ -340,8 +302,7 @@ def near_dup_clusters(df: DataFrame, n: int = 3, threshold: float = 0.5,
 
 @operator_scope
 def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
-                  num_hashes: int = 32, band_rows: int = 2,
-                  bucket_cap: int | None = None) -> DataFrame:
+                  num_hashes: int = 32, band_rows: int = 2) -> DataFrame:
     """Banded MinHash blocking + exact Jaccard rescore on hashed gram
     sets — entirely JVM-side column expressions, no MLlib.
 
@@ -354,11 +315,7 @@ def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     while background pairs (J well under 0.3 — the 0.35..0.5 band is
     EMPTY in the testdata) almost never collide. The reported pair set
     is exact Jaccard >= threshold on xxhash64-hashed distinct gram sets
-    (collision error ~|grams|/2^64, negligible).
-
-    ``bucket_cap`` optionally drops band buckets hotter than the cap
-    (skew guard for adversarial corpora — boilerplate-heavy near-dup
-    floods; None = exact parity with the inverted-index join)."""
+    (collision error ~|grams|/2^64, negligible)."""
     # filter on token count, not size(grams) > 0 (equivalent: grams is
     # empty iff < n tokens): Catalyst pushes a grams-based predicate
     # below the token projection, re-inlining the whole gram expression
@@ -399,16 +356,10 @@ def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
             for i in range(n_bands)
         ])).alias("band"),
     )
-    # Both sides of the band self-join (and the optional hot-bucket
-    # agg) re-evaluate the 32-hash minhash transform; cache it eagerly
-    # — two longs per (doc, band) row.
+    # Both sides of the band self-join re-evaluate the 32-hash minhash
+    # transform; cache it eagerly — two longs per (doc, band) row.
     bands = persist(bands, StorageLevel.MEMORY_AND_DISK)
     bands.count()
-    if bucket_cap is not None:
-        hot = (bands.groupBy("band")
-               .agg(F.count(F.lit(1)).alias("sz"))
-               .filter(F.col("sz") > bucket_cap).select("band"))
-        bands = bands.join(hot, "band", "left_anti")
     a = bands.select(F.col("doc_id").alias("doc_a"), "band")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band")
     cands = (

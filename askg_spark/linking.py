@@ -21,12 +21,15 @@ Scale design:
     high name similarity (phase-1 gates on ratio > 0.85; phase-2's
     detailed > 0.9 forces name_sim >= 0.75 because the other components
     sum to at most 0.6), so name-based blocking bounds recall loss; the
-    LSH Jaccard-distance threshold is calibrated in tests to recover
-    100% of fixture fuzzy pairs.
-  * TF-IDF cosine over descriptions (hashed-bucket idf, numpy batch)
-    is computed per candidate pair and used as a cheap prune at scale
-    (cfg.tfidf_prune); the final decision is the reference-exact difflib
-    scorer in an Arrow-batched pandas UDF over candidate pairs only.
+    banding and bucket cap are checked in tests to recover 100% of
+    fixture fuzzy pairs.
+  * One scorer, `fuzzy_edges`, decides every candidate pair as a
+    cascade: exact length and character-count bounds reject most
+    pairs before difflib runs, then the reference-exact difflib name
+    ratio, then the full reference score — in Arrow-batched pandas
+    UDFs over candidate pairs only. An optional TF-IDF cosine over
+    descriptions (hashed-bucket idf, numpy batch, cfg.tfidf_prune)
+    prunes the name-gate survivors before the full score.
 """
 
 from __future__ import annotations
@@ -137,9 +140,8 @@ def _shingle_col(padded, n: int):
 def _lsh_pair_ids(mentions: DataFrame, cfg: LinkConfig):
     """Banded MinHash-LSH blocking on char-3-gram sets of norm_name.
 
-    Returns ``(base, pairs)``: the shingled mention frame and the
-    NARROW candidate id pairs (ia, ib) as xxhash64 longs with ia < ib.
-    Same-norm_name pairs are filtered by the callers (those are covered
+    Returns the NARROW candidate id pairs (ia, ib) as xxhash64 longs
+    with ia < ib. Same-norm_name pairs are dropped (those are covered
     by J2/J3 or are legitimately distinct — reference skips the exact-
     name bucket in the fuzzy scan, deduplication.py:206-209).
 
@@ -253,9 +255,8 @@ def _lsh_pair_ids(mentions: DataFrame, cfg: LinkConfig):
     from pyspark.sql import Window
 
     kept = bands.withColumn(
-        "sz", F.count(F.lit(1)).over(Window.partitionBy("band")))
-    if cfg.lsh_bucket_cap is not None:
-        kept = kept.filter(F.col("sz") <= cfg.lsh_bucket_cap)
+        "sz", F.count(F.lit(1)).over(Window.partitionBy("band"))
+    ).filter(F.col("sz") <= cfg.lsh_bucket_cap)
     grouped = kept.groupBy("band").agg(
         F.collect_list(F.struct("idx", "nh")).alias("ms"))
     pair_arr = F.filter(
@@ -271,37 +272,11 @@ def _lsh_pair_ids(mentions: DataFrame, cfg: LinkConfig):
     # guarantee _cpu_partitioned gave, minus its extra round-robin
     # exchange.
     par = base.sparkSession.sparkContext.defaultParallelism
-    pairs = (
+    return (
         grouped.select(F.explode(pair_arr).alias("p"))
         .select(F.col("p.ia").alias("ia"), F.col("p.ib").alias("ib"))
         .repartition(2 * par, "ia", "ib")
         .dropDuplicates(["ia", "ib"])
-    )
-    return base, pairs
-
-
-def lsh_candidates(mentions: DataFrame, cfg: LinkConfig) -> DataFrame:
-    """Candidate pairs as (a struct, b struct) with a.mention_id <
-    b.mention_id — the struct surface used by the tests and ad-hoc
-    callers. The pipeline path (`fuzzy_edges`) stays narrow instead:
-    attaching two full structs to every one of ~10^2 x overgenerated
-    candidates is the single largest Arrow/shuffle cost in the link
-    phase, and ~99% of candidates die on the name gate anyway."""
-    base, pairs = _lsh_pair_ids(mentions, cfg)
-    dims = base.select(F.xxhash64("mention_id").alias("idx"),
-                        F.struct(*PAIR_COLS).alias("m"))
-    cands = (
-        pairs
-        .join(dims.select(F.col("idx").alias("ia"), F.col("m").alias("x")),
-              "ia")
-        .join(dims.select(F.col("idx").alias("ib"), F.col("m").alias("y")),
-              "ib")
-        .filter(F.col("x.norm_name") != F.col("y.norm_name"))
-    )
-    lt = F.col("x.mention_id") < F.col("y.mention_id")
-    return cands.select(
-        F.when(lt, F.col("x")).otherwise(F.col("y")).alias("a"),
-        F.when(lt, F.col("y")).otherwise(F.col("x")).alias("b"),
     )
 
 
@@ -309,22 +284,6 @@ def _ratio(x: str | None, y: str | None) -> float:
     if x is None or y is None:
         return 0.0
     return SequenceMatcher(None, x, y).ratio()
-
-
-def _ratio_above(x: str | None, y: str | None, floor: float) -> float:
-    """Exact ratio if it can exceed ``floor``, else -1 (rejected).
-
-    difflib's own documented cascade: quick_ratio (character-multiset
-    overlap, O(n)) is a proven upper bound on ratio (O(n^2)-ish), so a
-    pair whose quick_ratio <= floor is rejected without running the
-    full matcher — decision-identical, ~10x cheaper for the LSH
-    candidate bulk whose names share shingles but not characters."""
-    if x is None or y is None:
-        return -1.0
-    sm = SequenceMatcher(None, x, y)
-    if sm.quick_ratio() <= floor:
-        return -1.0
-    return sm.ratio()
 
 
 TFIDF_DIM = 1 << 14
@@ -373,24 +332,12 @@ def _min_gate(cfg: LinkConfig) -> float:
     return min(cfg.name_ratio_gate, min_name_high)
 
 
-def _gate(name_ratio: float, a_registry, b_registry,
-          cfg: LinkConfig) -> bool:
-    """True iff a pair with this name_ratio can still be accepted by
-    either branch (fuzzy_dup needs > name_ratio_gate outright; the
-    cross-registry high_merge branch only needs > (merge_threshold -
-    0.6) / 0.4). The name ratio is a ~15-char compare; the description
-    ratios in the full scorer are 100+-char quadratic difflib calls —
-    gating first removes them for the bulk of LSH candidates."""
-    if name_ratio <= _min_gate(cfg):
-        return False
-    if name_ratio <= cfg.name_ratio_gate and a_registry == b_registry:
-        return False
-    return True
-
-
-def _score_one(r, name_ratio: float, cfg: LinkConfig) -> tuple[bool, bool]:
-    """Full reference scoring for one gated pair (namedtuple with
-    a_*/b_* fields) -> (fuzzy_dup, high_merge). Symmetric in a/b."""
+def _score_one(r, name_ratio: float, cfg: LinkConfig) -> bool:
+    """Full reference decision for one gated pair (namedtuple with
+    a_*/b_* fields): fuzzy_dup (J4 + J5) OR high_merge (J6). Both need
+    the composite to clear its threshold, so the detailed score is
+    only computed for a cross-registry pair below the name gate.
+    Symmetric in a/b."""
     # --- composite (J5), deduplication.py:223-262
     comp = 0.0
     if r.a_author and r.b_author:
@@ -411,8 +358,12 @@ def _score_one(r, name_ratio: float, cfg: LinkConfig) -> tuple[bool, bool]:
         pb = str(r.b_repository).split("/")
         if len(pa) >= 4 and len(pb) >= 4 and pa[3] == pb[3]:
             comp += 0.2
-    similar = comp > cfg.composite_threshold
-    fuzzy_dup = name_ratio > cfg.name_ratio_gate and similar
+    if comp <= cfg.composite_threshold:
+        return False
+    if name_ratio > cfg.name_ratio_gate:
+        return True               # fuzzy_dup
+    if r.a_registry == r.b_registry:
+        return False
     # --- detailed (J6), deduplication.py:384-426
     det = name_ratio * 0.4
     if r.a_author and r.b_author:
@@ -426,9 +377,7 @@ def _score_one(r, name_ratio: float, cfg: LinkConfig) -> tuple[bool, bool]:
         det += _ratio(r.a_description.lower(), r.b_description.lower()) * 0.1
     if ca and cb and (ca | cb):
         det += (len(ca & cb) / len(ca | cb)) * 0.1
-    high = (similar and det > cfg.merge_threshold
-            and r.a_registry != r.b_registry)
-    return fuzzy_dup, high
+    return det > cfg.merge_threshold
 
 
 def _make_tfidf_cos(idf: dict[int, float] | None):
@@ -508,20 +457,20 @@ def _byte_bucket_lut():
 _BYTE_BUCKET = _byte_bucket_lut()
 
 
-def _np_quick_ratio(a: "pd.Series", b: "pd.Series") -> "object":
+def _np_quick_ratio(a: "pd.Series", b: "pd.Series") -> "np.ndarray":
     """difflib SequenceMatcher.quick_ratio computed EXACTLY for a whole
     Arrow batch in vectorized numpy: 2 * multiset-char-intersection /
     (|a|+|b|) — the same 2.0*M/T double difflib computes
-    (difflib.py _calculate_ratio), so rejecting `qr <= floor` here is
-    decision-identical to the per-row cascade in `_ratio_above` while
-    costing ~2.4us/pair instead of ~16-20us (microbenched on 1M pairs;
-    no SequenceMatcher object, no per-row Counter). norm_name's charset is closed ASCII (lower ->
-    strip [^a-z0-9\\s] -> collapse spaces), so utf-8 bytes == chars and
-    a 128-wide byte histogram is the exact multiset.
+    (difflib.py _calculate_ratio). quick_ratio is an upper bound on
+    ratio, so rejecting `qr <= floor` here never drops a pair whose
+    ratio clears the floor, at ~2.4us/pair instead of ~16-20us
+    (microbenched on 1M pairs; no SequenceMatcher object, no per-row
+    Counter). norm_name's charset is closed ASCII (lower -> strip
+    [^a-z0-9\\s] -> collapse spaces), so utf-8 bytes == chars and the
+    38-bucket `_BYTE_BUCKET` histogram is the exact multiset.
 
-    Returns (qr ndarray, lengths la+lb ndarray); rows where both
-    strings are empty get qr = 1.0 (difflib: two empty sequences have
-    ratio 1.0).
+    Returns the qr ndarray; rows where both strings are empty get
+    qr = 1.0 (difflib: two empty sequences have ratio 1.0).
 
     Two JVM-side variants of this gate were measured and REJECTED at a
     423k-mention corpus before landing here (identical decisions, worse
@@ -560,61 +509,10 @@ def _np_quick_ratio(a: "pd.Series", b: "pd.Series") -> "object":
     return qr
 
 
-def score_pairs(cands: DataFrame, cfg: LinkConfig,
-                idf: dict[int, float] | None = None) -> DataFrame:
-    """Arrow-batched exact rescoring of struct candidate pairs with the
-    reference's difflib formulas; returns pairs that are edges.
-
-    Test/ad-hoc surface over `lsh_candidates` structs; the pipeline
-    uses the two-stage `fuzzy_edges` (same helpers, same decisions —
-    parity asserted in tests) to avoid shipping full structs for
-    pairs the name gate rejects.
-
-    When ``cfg.tfidf_prune`` is set (the 100 TB path), a vectorized
-    TF-IDF cosine over the pair's descriptions runs FIRST (numpy over
-    the whole Arrow batch) and pairs below the prune threshold skip
-    the per-pair difflib scoring entirely — the quadratic-ish ratio
-    calls are the expensive part, the hashed cosine is a batch GEMV."""
-    flat = cands.select(
-        *[F.col(f"a.{c}").alias(f"a_{c}") for c in PAIR_COLS],
-        *[F.col(f"b.{c}").alias(f"b_{c}") for c in PAIR_COLS],
-    )
-    flat = _ratio_bound_filter(flat, "a_norm_name", "b_norm_name",
-                               _min_gate(cfg))
-    prune = cfg.tfidf_prune
-    tfidf_cos = _make_tfidf_cos(idf)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if prune is not None and len(pdf):
-                cos = tfidf_cos(pdf["a_description"], pdf["b_description"])
-                pdf = pdf[cos >= prune]
-            out = {"src": [], "dst": [], "fuzzy_dup": [], "high_merge": []}
-            min_gate = _min_gate(cfg)
-            for r in pdf.itertuples(index=False):
-                floor = (cfg.name_ratio_gate
-                         if r.a_registry == r.b_registry else min_gate)
-                name_ratio = _ratio_above(
-                    r.a_norm_name, r.b_norm_name, floor)
-                if name_ratio < 0 or not _gate(
-                        name_ratio, r.a_registry, r.b_registry, cfg):
-                    continue
-                fuzzy_dup, high = _score_one(r, name_ratio, cfg)
-                if fuzzy_dup or high:
-                    out["src"].append(r.a_mention_id)
-                    out["dst"].append(r.b_mention_id)
-                    out["fuzzy_dup"].append(fuzzy_dup)
-                    out["high_merge"].append(high)
-            yield pd.DataFrame(out)
-
-    return _cpu_partitioned(flat).mapInPandas(
-        run, schema="src string, dst string, fuzzy_dup boolean, high_merge boolean")
-
-
 def fuzzy_edges(mentions: DataFrame, cfg: LinkConfig,
                 idf: dict[int, float] | None = None) -> DataFrame:
-    """Pipeline fuzzy path: LSH narrow pairs -> batch-numpy name gate ->
-    full scoring, all in one lazy plan.
+    """The fuzzy scorer: LSH narrow pairs -> batch-numpy name gate ->
+    full scoring, all in one lazy plan -> (src, dst) with src < dst.
 
     Scale design: ~99% of LSH candidates die on the name-ratio gate
     (measured 0.75% pass rate at 21k mentions), so the gate stage
@@ -624,10 +522,11 @@ def fuzzy_edges(mentions: DataFrame, cfg: LinkConfig,
     stage the quick_ratio rejection runs EXACTLY but vectorized over
     the whole Arrow batch (`_np_quick_ratio`); per-row difflib only
     touches the few % of pairs whose quick_ratio clears the floor.
-    Emits the same (src, dst, fuzzy_dup, high_merge) decisions as
-    `score_pairs` on `lsh_candidates` (shared gate/scorer helpers;
-    parity-tested)."""
-    _, pairs = _lsh_pair_ids(mentions, cfg)
+
+    When ``cfg.tfidf_prune`` is set, a vectorized TF-IDF cosine over
+    the survivors' descriptions runs before the full scoring, and pairs
+    below the prune skip the quadratic-ish description ratios."""
+    pairs = _lsh_pair_ids(mentions, cfg)
     gate_dim = mentions.select(F.xxhash64("mention_id").alias("idx"),
                                "norm_name", "registry")
 
@@ -666,28 +565,25 @@ def fuzzy_edges(mentions: DataFrame, cfg: LinkConfig,
         for pdf in batches:
             if not len(pdf):
                 continue
-            # exact quick_ratio for the whole batch in numpy, with the
-            # per-pair floor (same-registry pairs must clear the
-            # name_ratio_gate, cross-registry only min_gate): the
-            # identical rejection `_ratio_above` makes per row, at
-            # ~2.4us/pair instead of ~16-20us (1M-pair microbench)
-            qr = _np_quick_ratio(pdf["a_norm_name"], pdf["b_norm_name"])
+            # per-pair floor: a same-registry pair can only be accepted
+            # as fuzzy_dup (name_ratio > name_ratio_gate), a cross-
+            # registry pair also as high_merge (> min_gate). The exact
+            # numpy quick_ratio bounds ratio from above, so only the
+            # pairs it lets through pay for difflib's ratio.
             floors = np.where(
                 pdf["a_registry"].to_numpy() == pdf["b_registry"].to_numpy(),
                 gate, min_gate)
-            pdf = pdf[qr > floors]
-            out = {"ia": [], "ib": [], "name_ratio": []}
-            for r in pdf.itertuples(index=False):
-                floor = (gate if r.a_registry == r.b_registry else min_gate)
-                name_ratio = _ratio_above(
-                    r.a_norm_name, r.b_norm_name, floor)
-                if name_ratio < 0 or not _gate(
-                        name_ratio, r.a_registry, r.b_registry, cfg):
-                    continue
-                out["ia"].append(r.ia)
-                out["ib"].append(r.ib)
-                out["name_ratio"].append(name_ratio)
-            yield pd.DataFrame(out)
+            keep = _np_quick_ratio(pdf["a_norm_name"],
+                                   pdf["b_norm_name"]) > floors
+            pdf, floors = pdf[keep], floors[keep]
+            ratios = np.fromiter(
+                (SequenceMatcher(None, a, b).ratio() for a, b in
+                 zip(pdf["a_norm_name"], pdf["b_norm_name"])),
+                dtype=np.float64, count=len(pdf))
+            hit = ratios > floors
+            yield pd.DataFrame({"ia": pdf["ia"].to_numpy()[hit],
+                                "ib": pdf["ib"].to_numpy()[hit],
+                                "name_ratio": ratios[hit]})
 
     survivors = gated.mapInPandas(
         gate_stage, schema="ia long, ib long, name_ratio double")
@@ -707,21 +603,17 @@ def fuzzy_edges(mentions: DataFrame, cfg: LinkConfig,
             if prune is not None and len(pdf):
                 cos = tfidf_cos(pdf["a_description"], pdf["b_description"])
                 pdf = pdf[cos >= prune]
-            out = {"src": [], "dst": [], "fuzzy_dup": [], "high_merge": []}
+            out = {"src": [], "dst": []}
             for r in pdf.itertuples(index=False):
-                fuzzy_dup, high = _score_one(r, r.name_ratio, cfg)
-                if fuzzy_dup or high:
+                if _score_one(r, r.name_ratio, cfg):
                     # orient by mention_id (scoring is symmetric in a/b)
                     lo, hi = sorted((r.a_mention_id, r.b_mention_id))
                     out["src"].append(lo)
                     out["dst"].append(hi)
-                    out["fuzzy_dup"].append(fuzzy_dup)
-                    out["high_merge"].append(high)
             yield pd.DataFrame(out)
 
     return _cpu_partitioned(full_in).mapInPandas(
-        full_stage,
-        schema="src string, dst string, fuzzy_dup boolean, high_merge boolean")
+        full_stage, schema="src string, dst string")
 
 
 def candidate_edges(mentions: DataFrame, cfg: LinkConfig | None = None) -> DataFrame:
@@ -730,5 +622,5 @@ def candidate_edges(mentions: DataFrame, cfg: LinkConfig | None = None) -> DataF
     exact = exact_edges(mentions)
     idf = (description_idf(mentions)[0]
            if cfg.tfidf_prune is not None else None)
-    fuzzy = fuzzy_edges(mentions, cfg, idf).select("src", "dst")
+    fuzzy = fuzzy_edges(mentions, cfg, idf)
     return exact.unionByName(fuzzy).dropDuplicates(["src", "dst"])

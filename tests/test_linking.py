@@ -8,7 +8,7 @@ from askg_spark.enrich import enrich_mentions
 from askg_spark.extract import extract_mentions
 from askg_spark.fixtures import generate_pages
 from askg_spark.linking import (LinkConfig, candidate_edges, exact_edges,
-                                lsh_candidates, score_pairs)
+                                fuzzy_edges)
 from tests import ref_oracle as O
 
 N_SERVERS = 24
@@ -75,40 +75,61 @@ def test_exact_edges_same_connectivity_as_oracle(spark):
 
 
 def test_fuzzy_pipeline_matches_oracle_decisions(spark):
-    """LSH blocking must recover 100% of the oracle's fuzzy pairs on the
-    fixture corpus (recall), and the rescoring UDF must accept exactly
-    the oracle-accepted set (precision of decisions)."""
+    """The pipeline's fuzzy scorer: LSH blocking must recover 100% of
+    the oracle's fuzzy pairs on the fixture corpus (recall), and the
+    gate + rescoring UDFs must accept exactly the oracle-accepted set
+    (precision of decisions)."""
     e = _enriched(spark)
-    cfg = LinkConfig()
-    cands = lsh_candidates(e, cfg)
     got = {frozenset((r["src"], r["dst"]))
-           for r in score_pairs(cands, cfg).collect()}
+           for r in fuzzy_edges(e, LinkConfig()).collect()}
     want = _oracle_pairs("fuzzy")
     assert want - got == set(), f"LSH/scorer missed {len(want - got)} oracle pairs"
     assert got - want == set(), f"scorer accepted {len(got - want)} extra pairs"
     assert len(want) > 0  # fixture must actually exercise the fuzzy path
 
 
-def test_fuzzy_edges_parity_with_struct_path(spark):
-    """The pipeline's two-stage narrow path (fuzzy_edges) must make
-    exactly the decisions of score_pairs over lsh_candidates — same
-    pairs, same fuzzy_dup/high_merge flags."""
-    from askg_spark.linking import fuzzy_edges
-    e = _enriched(spark)
-    cfg = LinkConfig()
-    via_structs = {(r["src"], r["dst"], r["fuzzy_dup"], r["high_merge"])
-                   for r in score_pairs(lsh_candidates(e, cfg), cfg).collect()}
-    via_fused = {(r["src"], r["dst"], r["fuzzy_dup"], r["high_merge"])
-                 for r in fuzzy_edges(e, cfg).collect()}
-    assert via_fused == via_structs
-    assert len(via_fused) > 0
+def test_registry_sets_the_name_floor(spark):
+    """Below the 0.85 name gate only a cross-registry pair can merge
+    (J6). Two pairs with name ratio ~0.82 and otherwise identical
+    attributes: the cross-registry pair links, the same-registry pair
+    does not — the oracle's decision for each. The fixture corpus has
+    no same-registry pair in that band, so this boundary is planted."""
+    def row(mid, registry, name, repo):
+        return {"mention_id": mid, "registry": registry, "name": name,
+                "author": "acme labs", "description": "maps and tiles",
+                "categories": ["geo"], "implementation_language": "python",
+                "repository": f"https://github.com/acme/{repo}",
+                "norm_name": O.norm_name(name),
+                "norm_author": O.norm_name("acme labs"),
+                "github_org": "acme"}
+
+    rows = [row("m1", "glama", "geo tiles", "a"),
+            row("m2", "glama", "geo tiles pro", "b"),
+            row("m3", "glama", "vector store", "c"),
+            row("m4", "mcpso", "vector store lite", "d")]
+    want = set()
+    for a, b in combinations(rows, 2):
+        ratio = O._ratio(a["norm_name"], b["norm_name"])
+        similar = O._composite(a, b) > 0.7
+        if similar and (ratio > 0.85 or (a["registry"] != b["registry"]
+                                         and O._detailed(a, b) > 0.9)):
+            want.add((a["mention_id"], b["mention_id"]))
+    assert want == {("m3", "m4")}
+    mentions = spark.createDataFrame(
+        rows, "mention_id string, registry string, name string, "
+              "author string, description string, categories array<string>, "
+              "implementation_language string, repository string, "
+              "norm_name string, norm_author string, github_org string")
+    got = {(r["src"], r["dst"])
+           for r in fuzzy_edges(mentions, LinkConfig()).collect()}
+    assert got == want
 
 
 def test_np_quick_ratio_is_exact():
     """The batched numpy quick_ratio must equal difflib's quick_ratio
     bit-for-bit on norm_name-charset strings, so the vectorized
-    `qr <= floor` rejection in the gate stage is decision-identical to
-    the per-row `_ratio_above` cascade."""
+    `qr <= floor` rejection in the gate stage is exactly difflib's own
+    quick_ratio-before-ratio cascade."""
     import random
     from difflib import SequenceMatcher
 

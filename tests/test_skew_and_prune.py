@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from askg_spark.enrich import enrich_mentions
 from askg_spark.extract import extract_mentions
 from askg_spark.fixtures import generate_pages
-from askg_spark.linking import LinkConfig, description_idf, lsh_candidates, score_pairs
+from askg_spark.linking import LinkConfig, description_idf, fuzzy_edges
 from askg_spark.relations import infer_relationship_edges
 
 
@@ -56,18 +56,17 @@ def test_tfidf_prune_preserves_fixture_decisions(spark):
     pages = generate_pages(spark, n_servers=16, seed=42)
     mentions, _ = extract_mentions(pages)
     e = enrich_mentions(mentions).persist()
-    cands = lsh_candidates(e, LinkConfig()).persist()
     base = {(r["src"], r["dst"])
-            for r in score_pairs(cands, LinkConfig()).collect()}
+            for r in fuzzy_edges(e, LinkConfig()).collect()}
     idf, n_docs = description_idf(e)
     assert n_docs > 0 and len(idf) > 0
     pruned_cfg = LinkConfig(tfidf_prune=0.5)
     pruned = {(r["src"], r["dst"])
-              for r in score_pairs(cands, pruned_cfg, idf).collect()}
+              for r in fuzzy_edges(e, pruned_cfg, idf).collect()}
     assert pruned == base
     # a prune above 1.0 kills every pair that has both descriptions
     killall = {(r["src"], r["dst"])
-               for r in score_pairs(cands, LinkConfig(tfidf_prune=1.01),
+               for r in fuzzy_edges(e, LinkConfig(tfidf_prune=1.01),
                                     idf).collect()}
     assert len(killall) < len(base) or not base
 

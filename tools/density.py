@@ -45,6 +45,8 @@ import time
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+from askg_spark.session import DEFAULT_CONFS  # noqa: E402
 
 
 def _zip_pkg() -> str:
@@ -99,7 +101,7 @@ def run_big(cores: int, servers: int, zip_path: str, pages: str,
     load, steal0, t0 = _load_avg(), _steal_ticks(), time.monotonic()
     proc = subprocess.run(
         _dense_cmd(0, cores, servers, zip_path, pages,
-                   os.environ.get("ASKG_DRIVER_MEM", "48g")),
+                   DEFAULT_CONFS["spark.driver.memory"]),
         capture_output=True, text=True, timeout=timeout, cwd=REPO)
     line = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
     if not line:
