@@ -248,16 +248,17 @@ def _parquet_footer_rows(path: str) -> int:
     return total
 
 
-def fingerprint(df: DataFrame, ts_col: str | None = "warc_ts") -> str:
-    """Cheap input fingerprint for stage-skip decisions (C1/C2): row
-    count + max event-time. Analog of the reference's mtime currency
-    check (master_data.py:58-91) on immutable snapshot inputs."""
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if ts_col and ts_col in df.columns:
-        aggs.append(F.max(ts_col).cast("string").alias("maxts"))
-    row = df.agg(*aggs).collect()[0]
-    parts = [str(row["n"])] + ([str(row["maxts"])] if len(row) > 1 else [])
-    return "|".join(parts)
+def fingerprint(df: DataFrame) -> str:
+    """Content fingerprint for stage-skip decisions (C1/C2): row count
+    and the order-independent sum of every row's xxhash64 over all its
+    columns, in one aggregate job. Any edit to any row changes it,
+    whatever it does to the count or the latest timestamp. Analog of
+    the reference's mtime currency check (master_data.py:58-91) on
+    immutable snapshot inputs."""
+    n, total = df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))).first()
+    return f"{n}|{total or 0}"
 
 
 def write_bucketed(df: DataFrame, table: str, key: str,

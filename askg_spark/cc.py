@@ -1,7 +1,20 @@
 """Connected components over the candidate-match edge graph.
 
-Partition-local union-find contraction, expressed as a SINGLE lazy
-DataFrame plan — zero driver-synchronized iterations:
+Three modes, chosen by size, all labelling every vertex with the
+lexicographic-min id of its component:
+
+  driver   up to ``_DRIVER_MAX_EDGES`` edges (an exact count: one
+           Arrow fetch of up to gate + 1 edges) — sorted factorize and
+           :func:`_min_label` in the driver, one checkpoint back; two
+           Spark jobs in all
+  serial   up to ``_LOOP_ABOVE`` matched vertices — the contraction
+           below, then one exact single-task union-find collapse
+  loop     above that — the contraction, then the distributed
+           min-label phase of :func:`_loop_collapse`
+
+The Spark modes are a partition-local union-find contraction,
+expressed as a SINGLE lazy DataFrame plan — zero driver-synchronized
+iterations:
 
   round k: repartition edges by hash of one endpoint (alternating
            src / dst across rounds) -> per-partition union-find
@@ -63,11 +76,21 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from askg_spark.session import checkpoint, operator_scope, release
 
+# Edges (self-loops and NULL endpoints dropped) at or below which the
+# labels are computed in the driver from one fetch. On random graphs
+# over 4 cores the whole driver path (fetch, labels, createDataFrame,
+# checkpoint) beat the Spark path 4.4x at 10^5 edges, 1.7x at 3*10^6
+# (6.6 s against 11.4 s, 0.57 GB driver peak RSS) and 1.15x at 10^7,
+# where the driver's RSS reached 1.7 GB (BENCH.md "CC in the driver").
+_DRIVER_MAX_EDGES = 3_000_000
 # Matched vertices above which the final collapse is the distributed
 # loop (:func:`_loop_collapse`) instead of the one serial task. That
 # task reads ~one 16-byte star row per matched vertex, which fits one
@@ -100,8 +123,6 @@ def _uf_stars_long(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     collapse's ~21s wall were pure string handling. np.unique returns
     codes indexed into the SORTED unique array, so min-over-code is
     min-over-code-value — deterministic for fixed codes."""
-    import numpy as np
-
     parts = [pdf for pdf in batches if len(pdf)]
     if not parts:
         yield pd.DataFrame({"u": pd.Series([], dtype="int64"),
@@ -135,8 +156,6 @@ def _min_label(n_ids: int, eu, ev):
     propagation hasn't converged after 64 rounds — never observed,
     but correctness must not depend on a convergence-speed argument.
     """
-    import numpy as np
-
     lab = np.arange(n_ids, dtype=np.int64)
     if len(eu) == 0:
         return lab
@@ -170,6 +189,22 @@ def _min_label(n_ids: int, eu, ev):
             parent[rb] = ra                  # attach under the min rank
     return np.fromiter((find(int(x)) for x in lab),
                        dtype=np.int64, count=n_ids)
+
+
+def _driver_labels(edges: pa.Table) -> tuple[pa.Array, np.ndarray]:
+    """(sorted distinct endpoints, index of each one's component root)
+    for the (u, v) edge table — no per-row Python objects. The ids are
+    factorized against their SORTED distinct values, so the min-label
+    root index is also the component's min id: Arrow orders strings by
+    their UTF-8 bytes, as Spark's ``min`` does."""
+    ends = pa.chunked_array(edges.column("u").chunks
+                            + edges.column("v").chunks,
+                            type=edges.schema.field("u").type)
+    uniq = pc.unique(ends)
+    uniq = uniq.take(pc.sort_indices(uniq))
+    codes = pc.index_in(ends, value_set=uniq).to_numpy().astype(np.int64)
+    n_edges = edges.num_rows
+    return uniq, _min_label(len(uniq), codes[:n_edges], codes[n_edges:])
 
 
 def _loop_collapse(cur: DataFrame, n_part: int) -> DataFrame | None:
@@ -263,10 +298,17 @@ def connected_components(edges: DataFrame,
 def component_labels(edges: DataFrame) -> DataFrame:
     """edges(src,dst) -> (id, component) for every vertex incident to
     an edge, where component is the lexicographic min id reachable.
+    Self-loops and edges with a NULL endpoint are dropped first.
 
     The result reads one checkpoint, which the caller owns and releases
     with ``session.release`` once its consumers are materialized; every
     intermediate frame is released here.
+
+    One job fetches up to ``_DRIVER_MAX_EDGES + 1`` edges as Arrow. At
+    or below the gate the labels are computed in the driver
+    (:func:`_driver_labels`) and the checkpoint is the second and last
+    job: a few hundred edges cost two jobs, not the ~16 of the Spark
+    path. Above it the fetch is dropped and the Spark path runs:
 
     ``_ROUNDS`` parallel contraction rounds (alternating endpoint
     hashing), then one exact final collapse — a linear plan executed
@@ -304,11 +346,20 @@ def component_labels(edges: DataFrame) -> DataFrame:
     # 17s of serial wall. Per-partition union-find memory is one int
     # pair per local vertex; on a real cluster defaultParallelism =
     # total executor cores, which scales with the data.
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
+    spark = edges.sparkSession
+    n_part = spark.sparkContext.defaultParallelism
     cur = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
+    fetched = cur.limit(_DRIVER_MAX_EDGES + 1).toArrow()
+    if fetched.num_rows <= _DRIVER_MAX_EDGES:
+        uniq, lab = _driver_labels(fetched)
+        dt = cur.schema["u"].dataType.simpleString()
+        return checkpoint(spark.createDataFrame(
+            pa.table({"id": uniq, "component": uniq.take(lab)}),
+            f"id {dt}, component {dt}"))
+    del fetched  # the Spark path reads the edges from Spark
     ends = cur.select(F.col("u").alias("id")).unionAll(
         cur.select(F.col("v").alias("id")))
     vmap = checkpoint(ends.groupBy(_code("id").alias("id_h")).agg(

@@ -14,16 +14,20 @@ across stage boundaries until a materialization point):
     build_triples        union + groupBy dedup       [triples.py]
 
 Resume contract (reference: master_data.py:58-91 / load_to_neo4j.py
-smart loader): when materializing, each stage records the input
-fingerprint in its table manifest; a re-run with an unchanged
-fingerprint reads the stage's snapshot instead of recomputing, so a
-killed run restarts after the last finished stage.
+smart loader): when materializing, every output table records in its
+manifest the input fingerprint — a digest of the pages' content and of
+the ``PipelineConfig`` — it was written from. A re-run whose
+fingerprint matches every table's current snapshot reads the snapshots
+instead of recomputing; if any table is missing or stale, the whole
+pipeline re-runs from extraction (there is no per-stage restart).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import logging
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -36,7 +40,8 @@ from askg_spark.extract import extract_mentions
 from askg_spark.linking import LinkConfig, candidate_edges
 from askg_spark.metrics import StageTimer, new_run_id, partition_lineage
 from askg_spark.relations import infer_relationship_edges
-from askg_spark.session import checkpoint, operator_scope, persist
+from askg_spark.session import (checkpoint, operator_scope, persist,
+                               release)
 from askg_spark.triples import build_triples
 
 log = logging.getLogger(__name__)
@@ -186,12 +191,17 @@ def run_pipeline_materialized(
     keep_snapshots: int = 5,
 ) -> dict:
     """Materialize every stage output into catalog tables under
-    ``out_root`` with per-partition lineage; skip stages whose input
-    fingerprint is unchanged (checkpointed resumability)."""
+    ``out_root`` with per-partition lineage. When every table's current
+    snapshot was written from the same input content and the same
+    ``cfg``, the run is skipped and the snapshots are read; otherwise
+    the whole pipeline re-runs. The result reads only the catalog
+    tables: the run's caches and checkpoints are released."""
     cfg = cfg or PipelineConfig()
     cat = Catalog(out_root)
     run_id = new_run_id()
-    fp = fingerprint(pages)
+    cfg_digest = hashlib.sha256(json.dumps(
+        asdict(cfg), sort_keys=True).encode()).hexdigest()[:16]
+    fp = f"{fingerprint(pages)}|cfg:{cfg_digest}"
 
     def current_ok(table: str) -> bool:
         if force or not cat.exists(table):
@@ -219,5 +229,8 @@ def run_pipeline_materialized(
         cat.expire_snapshots(name, keep=keep_snapshots)
     cat.write_snapshot(lineage, "lineage", properties=props)
     cat.expire_snapshots("lineage", keep=keep_snapshots)
+    # the snapshots hold every output now: free the mentions cache and
+    # the entities checkpoint the in-memory frames read
+    release(res.mentions, res.entities)
     return {t: cat.read(spark, t) for t in STAGES[:-1]} | {
         "skipped": False, "run_id": run_id}

@@ -6,7 +6,7 @@ import pytest
 
 from askg_spark.catalog import Catalog
 from askg_spark.fixtures import generate_pages
-from askg_spark.pipeline import run_pipeline_materialized
+from askg_spark.pipeline import PipelineConfig, run_pipeline_materialized
 
 
 def test_snapshot_append_read_timetravel(spark, tmp_path):
@@ -61,6 +61,48 @@ def test_materialized_resume_skips_unchanged_input(spark, tmp_path):
     pages2 = generate_pages(spark, n_servers=12, seed=7)
     r3 = run_pipeline_materialized(spark, pages2, out)
     assert r3["skipped"] is False
+
+
+def _triples(res) -> set:
+    return {(r["subj"], r["pred"], r["obj"])
+            for r in res["triples"].collect()}
+
+
+@pytest.mark.slow
+def test_materialized_resume_recomputes_on_config_change(spark, tmp_path):
+    pages = generate_pages(spark, n_servers=8, seed=7)
+    out = str(tmp_path / "kg")
+    first = _triples(run_pipeline_materialized(spark, pages, out))
+    capped = PipelineConfig(max_entities_per_key=1)
+    r2 = run_pipeline_materialized(spark, pages, out, capped)
+    assert r2["skipped"] is False
+    got = _triples(r2)
+    forced = run_pipeline_materialized(
+        spark, pages, str(tmp_path / "forced"), capped, force=True)
+    assert got == _triples(forced)
+    assert got != first  # the cap binds on this input
+    assert run_pipeline_materialized(spark, pages, out,
+                                     capped)["skipped"] is True
+
+
+@pytest.mark.slow
+def test_materialized_resume_recomputes_on_content_edit(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    pages = generate_pages(spark, n_servers=8, seed=7)
+    out = str(tmp_path / "kg")
+    run_pipeline_materialized(spark, pages, out)
+    # blank the html of one page that is not the latest: the row count
+    # and the max warc_ts stay as they were
+    latest = pages.agg(F.max("warc_ts")).first()[0]
+    url = pages.filter(F.col("warc_ts") < latest).first()["url"]
+    edited = pages.withColumn("html", F.when(
+        F.col("url") == url, F.lit(b"<html></html>")).otherwise(
+            F.col("html")))
+    assert edited.count() == pages.count()
+    r2 = run_pipeline_materialized(spark, edited, out)
+    assert r2["skipped"] is False
+    assert run_pipeline_materialized(spark, edited, out)["skipped"] is True
 
 
 def test_compact_snapshot_reduces_files_preserves_rows(spark, tmp_path):

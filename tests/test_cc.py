@@ -3,6 +3,7 @@ from __future__ import annotations
 
 from askg_spark import cc
 from askg_spark.cc import connected_components
+from askg_spark.session import release
 
 
 def _run(spark, edges, vertices):
@@ -52,6 +53,7 @@ def test_loop_collapse_known_shapes(spark, monkeypatch):
     # the distributed final phase (no serial task) on the same shapes,
     # selected by a size threshold below every graph here
     calls = _loop_calls(monkeypatch)
+    monkeypatch.setattr(cc, "_DRIVER_MAX_EDGES", 0)
     monkeypatch.setattr(cc, "_LOOP_ABOVE", 0)
     got = _run(spark, [("b", "a"), ("b", "c"), ("c", "d")], "abcd")
     assert got == {x: "a" for x in "abcd"}
@@ -70,6 +72,7 @@ def test_collapse_mode_follows_matched_vertex_count(spark, monkeypatch):
     calls = _loop_calls(monkeypatch)
     edges = [("b", "a"), ("b", "c"), ("q", "p"), ("q", "r")]
     verts = ["a", "b", "c", "p", "q", "r", "solo"]
+    monkeypatch.setattr(cc, "_DRIVER_MAX_EDGES", 0)
     monkeypatch.setattr(cc, "_LOOP_ABOVE", 6)
     serial = _run(spark, edges, verts)
     assert not calls
@@ -87,6 +90,7 @@ def test_loop_collapse_matches_serial_random_graphs(spark, monkeypatch):
     calls = _loop_calls(monkeypatch)
     # one contraction round leaves maximal cross-partition residue for
     # the final phase to resolve
+    monkeypatch.setattr(cc, "_DRIVER_MAX_EDGES", 0)
     monkeypatch.setattr(cc, "_ROUNDS", 1)
     rng = random.Random(11)
     for trial in range(3):
@@ -108,6 +112,7 @@ def test_loop_collapse_round_cap_falls_back_to_serial(spark, monkeypatch):
     # one contraction round and one loop round cannot settle a long
     # path: the loop gives up and the exact serial collapse labels it
     calls = _loop_calls(monkeypatch)
+    monkeypatch.setattr(cc, "_DRIVER_MAX_EDGES", 0)
     monkeypatch.setattr(cc, "_ROUNDS", 1)
     monkeypatch.setattr(cc, "_MAX_ITER", 1)
     monkeypatch.setattr(cc, "_LOOP_ABOVE", 0)
@@ -161,6 +166,7 @@ def test_code_collision_recodes_densely(spark, monkeypatch):
     edges = [("b", "a"), ("b", "c"), ("c", "d"), ("q", "p"),
              ("x", "y"), ("y", "z")]
     verts = list("abcdpqxyz") + ["solo"]
+    monkeypatch.setattr(cc, "_DRIVER_MAX_EDGES", 0)
     want = _run(spark, edges, verts)
     # three codes (-1, 0, 1) for nine ids: taken at face value, they
     # would merge components
@@ -169,3 +175,89 @@ def test_code_collision_recodes_densely(spark, monkeypatch):
     assert got == want == {"a": "a", "b": "a", "c": "a", "d": "a",
                            "p": "p", "q": "p", "x": "x", "y": "x",
                            "z": "x", "solo": "solo"}
+
+
+# ------------------------------------------------------- driver path
+
+def _labels_at(spark, monkeypatch, edges, gate) -> tuple[dict, int]:
+    """(id -> component, number of driver-path runs) of
+    ``component_labels`` under an edge gate of ``gate``."""
+    runs, real = [], cc._driver_labels
+
+    def spy(table):
+        runs.append(table.num_rows)
+        return real(table)
+    with monkeypatch.context() as mp:
+        mp.setattr(cc, "_driver_labels", spy)
+        mp.setattr(cc, "_DRIVER_MAX_EDGES", gate)
+        lab = cc.component_labels(
+            spark.createDataFrame(edges, "src string, dst string"))
+    got = {r["id"]: r["component"] for r in lab.collect()}
+    release(lab)
+    return got, len(runs)
+
+
+def _random_edges(rng, n_verts, n_edges):
+    """Seeded edges with self-loops, repeated and reversed edges and
+    NULL endpoints mixed in."""
+    verts = [f"r{rng.randrange(10**6):06d}" for _ in range(n_verts)]
+    edges = [(rng.choice(verts), rng.choice(verts))
+             for _ in range(n_edges)]
+    edges += [(a, a) for a, _ in edges[:3]]
+    edges += edges[3:6] + [(b, a) for a, b in edges[6:9]]
+    edges += [(None, verts[0]), (verts[1], None), (None, None)]
+    rng.shuffle(edges)
+    return edges
+
+
+def test_driver_labels_equal_spark_labels(spark, monkeypatch):
+    import random
+
+    fixtures = [
+        [("b", "a"), ("b", "c"), ("c", "d")],
+        [("z", "m"), ("z", "n"), ("z", "o")],
+        [(str(i), str(i + 1)) for i in range(1, 8)]
+        + [("x1", "x2"), ("x2", "x3"), ("x1", "x3")],
+    ]
+    rng = random.Random(5)
+    graphs = fixtures + [_random_edges(rng, rng.randrange(10, 80),
+                                       rng.randrange(10, 100))
+                         for _ in range(4)]
+    for edges in graphs:
+        driver, runs = _labels_at(spark, monkeypatch, edges, 10**6)
+        assert runs == 1
+        ref, runs = _labels_at(spark, monkeypatch, edges, 0)
+        assert runs == 0
+        assert driver == ref
+        want = {x for e in edges if e[0] != e[1] and None not in e
+                for x in e}
+        assert set(driver) == want
+
+
+def test_path_choice_at_the_gate(spark, monkeypatch):
+    # four edges once self-loops and NULL endpoints are dropped
+    edges = [("b", "a"), ("b", "c"), ("c", "d"), ("x", "y"),
+             ("q", "q"), (None, "a")]
+    want = {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
+    assert _labels_at(spark, monkeypatch, edges, 4) == (want, 1)
+    assert _labels_at(spark, monkeypatch, edges, 3) == (want, 0)
+
+
+def test_driver_path_runs_two_jobs(spark):
+    e = spark.createDataFrame([("b", "a"), ("b", "c"), ("c", "d")],
+                              "src string, dst string")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = sched.numTotalJobs()
+    lab = cc.component_labels(e)
+    # the edge fetch and the checkpoint
+    assert sched.numTotalJobs() - jobs <= 2
+    release(lab)
+
+
+def test_non_bmp_tie_takes_the_utf8_min(spark, monkeypatch):
+    # U+FF5A sorts below U+1D51E by code point and by UTF-8 bytes, but
+    # above it by UTF-16 units: both paths must take the UTF-8 min
+    edges = [("𝔞", "ｚ"), ("ｚ", "𝔞"), ("𝔞", "𝔟")]
+    want = {"ｚ": "ｚ", "𝔞": "ｚ", "𝔟": "ｚ"}
+    assert _labels_at(spark, monkeypatch, edges, 10**6) == (want, 1)
+    assert _labels_at(spark, monkeypatch, edges, 0) == (want, 0)

@@ -81,7 +81,7 @@ def _docs(spark):
         "doc_id long, text string")
 
 
-def _labels(loop):
+def _labels(mode):
     want = {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
 
     def build(spark):
@@ -89,7 +89,10 @@ def _labels(loop):
             [("b", "a"), ("b", "c"), ("c", "d"), ("x", "y")],
             "src string, dst string")
         with pytest.MonkeyPatch.context() as mp:
-            if loop:
+            if mode != "driver":
+                # an edge gate below this graph selects the Spark path
+                mp.setattr(cc, "_DRIVER_MAX_EDGES", 0)
+            if mode == "loop":
                 # a size threshold below this graph selects the loop
                 mp.setattr(cc, "_LOOP_ABOVE", 0)
             return cc.component_labels(e)
@@ -152,8 +155,9 @@ CASES = {
         None),
     "train_bpe_spark": (lambda spark: _spark_bpe(
         bpe.word_type_counts(_docs(spark)), n_merges=4), None),
-    "component_labels_serial": _labels(loop=False),
-    "component_labels_loop": _labels(loop=True),
+    "component_labels_driver": _labels("driver"),
+    "component_labels_serial": _labels("serial"),
+    "component_labels_loop": _labels("loop"),
     "run_pipeline": _pipeline(),
 }
 
@@ -193,6 +197,19 @@ def test_result_reads_all_that_stays_persisted(spark, name):
     assert _cache_entries(spark) == caches0
 
 
+def test_materialized_run_leaves_nothing_stored(spark, tmp_path):
+    from askg_spark.pipeline import run_pipeline_materialized
+
+    rdds0, caches0 = _persisted(spark), _cache_entries(spark)
+    out = run_pipeline_materialized(
+        spark, generate_pages(spark, n_servers=6, seed=42), str(tmp_path))
+    assert out["skipped"] is False
+    assert out["triples"].count() > 0
+    # the result reads only the catalog's parquet snapshots
+    assert not _persisted(spark) - rdds0
+    assert _cache_entries(spark) == caches0
+
+
 # ------------------------------------------------------ bounded lineage
 
 def _tailed(spark, n, a, b):
@@ -222,6 +239,7 @@ ROUNDS = {
 
 def _loop_labels(edges):
     with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cc, "_DRIVER_MAX_EDGES", 0)
         mp.setattr(cc, "_LOOP_ABOVE", 0)
         return cc.component_labels(edges)
 
