@@ -37,7 +37,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from askg_spark.session import shared_view, view
+from askg_spark.session import local_frame, shared_view, view
 
 # --------------------------------------------------------------- helpers
 
@@ -863,8 +863,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tail = F.regexp_extract(F.col("subj"), r"([0-9]+)$", 1) \
             .try_cast("bigint")
         old = tr.where(tail.isNotNull() & (tail % 2 == 0)) \
-            .unionByName(spark.createDataFrame(
-                [("ghost", "HAS_CATEGORY", "other")],
+            .unionByName(local_frame(
+                spark, [("ghost", "HAS_CATEGORY", "other")],
                 "subj string, pred string, obj string"))
         return snapshot_diff(old, tr)
 
@@ -994,8 +994,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from askg_spark import bpe
         wc = bpe.word_type_counts(_t(spark, sf, "documents"))
         merges = bpe.train_bpe(wc, n_merges=10, min_freq=2)
-        return spark.createDataFrame(
-            [(i, a, b, f) for i, (a, b, f) in enumerate(merges)],
+        return local_frame(
+            spark, [(i, a, b, f) for i, (a, b, f) in enumerate(merges)],
             "rank int, left string, right string, freq long")
 
     def doc_dsir_scores(spark, sf):

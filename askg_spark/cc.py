@@ -191,20 +191,26 @@ def _min_label(n_ids: int, eu, ev):
                        dtype=np.int64, count=n_ids)
 
 
-def _driver_labels(edges: pa.Table) -> tuple[pa.Array, np.ndarray]:
-    """(sorted distinct endpoints, index of each one's component root)
-    for the (u, v) edge table — no per-row Python objects. The ids are
-    factorized against their SORTED distinct values, so the min-label
-    root index is also the component's min id: Arrow orders strings by
-    their UTF-8 bytes, as Spark's ``min`` does."""
-    ends = pa.chunked_array(edges.column("u").chunks
-                            + edges.column("v").chunks,
-                            type=edges.schema.field("u").type)
+def _sorted_codes(*cols: pa.ChunkedArray) -> tuple[pa.Array, list]:
+    """(sorted distinct values of ``cols``, each column as int64 indexes
+    into them) — no per-row Python objects. Arrow orders strings by
+    their UTF-8 bytes, as Spark does, so a smaller index is a smaller
+    id in Spark's order too."""
+    ends = pa.chunked_array([ch for c in cols for ch in c.chunks],
+                            type=cols[0].type)
     uniq = pc.unique(ends)
     uniq = uniq.take(pc.sort_indices(uniq))
     codes = pc.index_in(ends, value_set=uniq).to_numpy().astype(np.int64)
-    n_edges = edges.num_rows
-    return uniq, _min_label(len(uniq), codes[:n_edges], codes[n_edges:])
+    return uniq, np.split(codes, np.cumsum([len(c) for c in cols[:-1]]))
+
+
+def _driver_labels(edges: pa.Table) -> tuple[pa.Array, np.ndarray]:
+    """(sorted distinct endpoints, index of each one's component root)
+    for the (u, v) edge table. The ids are factorized against their
+    sorted distinct values, so the min-label root index is also the
+    component's min id in Spark's ``min`` order."""
+    uniq, (cu, cv) = _sorted_codes(edges.column("u"), edges.column("v"))
+    return uniq, _min_label(len(uniq), cu, cv)
 
 
 def _loop_collapse(cur: DataFrame, n_part: int) -> DataFrame | None:

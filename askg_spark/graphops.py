@@ -15,10 +15,16 @@ guard that makes the two equi-joins survive a web-scale graph.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from askg_spark.session import checkpoint, operator_scope, persist, release
+from askg_spark import cc
+from askg_spark.session import (checkpoint, local_frame, operator_scope,
+                                persist, release)
 
 
 def cooccurrence_edges(df: DataFrame, group_col: str,
@@ -100,9 +106,8 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     if n_edges <= 8_000_000:
         e2, e3 = F.broadcast(e2), F.broadcast(e3)
     n_triangles = e1.join(e2, "b").join(e3, ["a", "c"]).count()
-    return spark.createDataFrame(
-        [(n_nodes, n_edges, n_triangles)],
-        "n_nodes long, n_edges long, n_triangles long")
+    return local_frame(spark, [(n_nodes, n_edges, n_triangles)],
+                       "n_nodes long, n_edges long, n_triangles long")
 
 
 @operator_scope
@@ -111,7 +116,19 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
     """Multi-source BFS: minimum hop distance (<= max_depth) from any
     seed, over an undirected edge set. -> (node, depth).
 
-    Level-synchronous frontier expansion — the textbook distributed
+    `edges` (src, dst) is treated as undirected; `seeds` is one
+    column of node ids, depth 0. NULL is not a node: edges with a NULL
+    endpoint and NULL seeds are dropped first.
+
+    When the endpoints and the seeds share one type, one job fetches
+    up to ``cc._DRIVER_MAX_EDGES + 1`` edges as Arrow (the gate of
+    ``cc.component_labels``) and one more the seeds. At or below the
+    gate the BFS runs in the driver (:func:`_driver_depths`) and the
+    result is a frame built from Arrow, which stores nothing: a
+    request costs the two fetches, not a few jobs per hop.
+
+    Above the gate (or with mixed types, which Spark widens) runs the
+    level-synchronous frontier expansion — the textbook distributed
     BFS: each round joins the CURRENT frontier (small) against the
     edge frame on the frontier's node key, anti-joins already-visited
     nodes, and advances. Per round that is one equi-join shuffle
@@ -119,20 +136,34 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
     total work is O(edges touched). Each round checkpoints the small
     visited set (every node reached so far, with its depth) and
     releases the previous one, so the plan stays flat and at most two
-    rounds are held. Web-scale BFS (friend-of-friend audiences,
-    link-distance features) runs this exact shape; hub-node skew lands
-    on the edge join's build side where AQE's skew split handles it.
-
-    `edges` (src, dst) is treated as undirected; `seeds` is one
-    column of node ids, depth 0."""
+    rounds are held. Hub-node skew lands on the edge join's build side
+    where AQE's skew split handles it."""
+    und = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+           .filter(F.col("u").isNotNull() & F.col("v").isNotNull()))
+    node_col = seeds.columns[0]
+    seeds = seeds.select(F.col(node_col).alias("node")) \
+        .filter(F.col("node").isNotNull())
+    node, dst = seeds.schema["node"], und.schema["v"]
+    if und.schema["u"].dataType == dst.dataType == node.dataType:
+        gate = cc._DRIVER_MAX_EDGES
+        fetched = und.limit(gate + 1).toArrow()
+        starts = seeds.limit(gate + 1).toArrow() \
+            if fetched.num_rows <= gate else None
+        if starts is not None and starts.num_rows <= gate:
+            # the Spark path's schema: its first round unions the seeds
+            # with edge endpoints
+            nullable = node.nullable or (max_depth > 0 and dst.nullable)
+            return edges.sparkSession.createDataFrame(
+                _driver_depths(fetched, starts.column("node"), max_depth),
+                StructType([StructField("node", node.dataType, nullable),
+                            StructField("depth", IntegerType(), False)]))
+        del fetched, starts  # the Spark path reads the edges from Spark
     # scanned once per round — without this the doubled+distinct edge
     # shuffle re-runs every hop
-    bidir = persist(edges.selectExpr("src AS u", "dst AS v")
-                    .unionByName(edges.selectExpr("dst AS u", "src AS v"))
-                    .distinct())
-    node_col = seeds.columns[0]
-    visited = seeds.select(
-        F.col(node_col).alias("node"), F.lit(0).alias("depth")).distinct()
+    bidir = persist(und.unionByName(
+        und.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .distinct())
+    visited = seeds.select("node", F.lit(0).alias("depth")).distinct()
     for d in range(1, max_depth + 1):
         frontier = visited.filter(F.col("depth") == d - 1)
         nxt = (frontier.join(bidir, frontier["node"] == bidir["u"])
@@ -145,6 +176,43 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
         if d < max_depth and visited.filter(F.col("depth") == d).isEmpty():
             break
     return visited
+
+
+def _driver_depths(edges: pa.Table, seeds: pa.ChunkedArray,
+                   max_depth: int) -> pa.Table:
+    """(node, depth) of the multi-source BFS over the undirected (u, v)
+    edge table: a level-synchronous numpy BFS over a CSR adjacency of
+    the sorted-factorized endpoints. Seeds outside the graph keep
+    depth 0."""
+    uniq, (cu, cv) = cc._sorted_codes(edges.column("u"), edges.column("v"))
+    n = len(uniq)
+    src, dst = np.concatenate([cu, cv]), np.concatenate([cv, cu])
+    nbrs = dst[np.argsort(src, kind="stable")]
+    deg = np.bincount(src, minlength=n)
+    indptr = np.zeros(n + 1, np.int64)
+    np.cumsum(deg, out=indptr[1:])
+    seeds = pc.unique(seeds)
+    at = pc.index_in(seeds, value_set=uniq)
+    inside = pc.is_valid(at)
+    depth = np.full(n, -1, np.int32)
+    frontier = at.filter(inside).to_numpy().astype(np.int64)
+    depth[frontier] = 0
+    for d in range(1, max_depth + 1):
+        if not len(frontier):
+            break
+        lo, cnt = indptr[frontier], deg[frontier]
+        # positions lo[i] .. lo[i] + cnt[i] - 1 of every frontier node
+        pos = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt) \
+            + np.arange(cnt.sum())
+        reached = np.unique(nbrs[pos])
+        frontier = reached[depth[reached] < 0]
+        depth[frontier] = d
+    hit = np.flatnonzero(depth >= 0)
+    outside = seeds.filter(pc.invert(inside))
+    return pa.table({
+        "node": pa.concat_arrays([uniq.take(hit), outside]),
+        "depth": np.concatenate([depth[hit],
+                                 np.zeros(len(outside), np.int32)])})
 
 
 @operator_scope

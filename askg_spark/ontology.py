@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from askg_spark.session import local_frame
+
 # --- enum value sets (models.py:8-38) ---------------------------------------
 
 SERVER_CATEGORIES = [
@@ -220,9 +222,10 @@ _ONTOLOGY_SCHEMA = (
 
 def ontology_categories(spark) -> DataFrame:
     """The static category dimension as a DataFrame — 12 rows, always
-    broadcast-joined by consumers (a literal local relation; Catalyst
-    plans LocalTableScan, no shuffle can originate here)."""
+    broadcast-joined by consumers (a local relation built through
+    Arrow; Catalyst plans LocalTableScan, it collects without a job and
+    no shuffle can originate here)."""
     rows = [(c["id"], c["name"], c["parent_category_id"],
              c["data_domains"], c["operational_patterns"],
              c["integration_patterns"]) for c in ONTOLOGY_CATEGORIES]
-    return spark.createDataFrame(rows, _ONTOLOGY_SCHEMA)
+    return local_frame(spark, rows, _ONTOLOGY_SCHEMA)

@@ -16,17 +16,39 @@
                       2*|∩cats| + |∩ops| + same_author + same_lang > 0
                       (/root/reference/src/neo4j_integration.py:468-488)
 
-All are plain DataFrame queries; similar_servers generates pairs with
-the salted equi-joins from relations.py (the reference runs one O(n)
-Cypher scan per query server — here the all-servers variant is a
-single distributed job).
+The two request scorers serve from a driver-side copy of a stored
+entity frame at or below ``_DRIVER_MAX_ROWS`` rows: the reference
+answers them from a Neo4j index (mcp/server.py:237-471), and a Spark
+job per request is almost all fixed cost. The first request on a
+stored frame fetches the copy (:func:`session.driver_table`) with
+Spark computing the lowered text, the popularity as a double and the
+distinct category and operation lists, so lowering, casting and
+``array_intersect``'s dedup stay Spark's; the driver only tests byte
+substrings, adds float64 in the Spark expression's order and sorts by
+(score desc, id asc). Later requests run no job. Larger or unstored
+frames, and every other query here, run as DataFrame queries;
+similar_servers generates pairs with the salted equi-joins from
+relations.py (the reference runs one O(n) Cypher scan per query
+server — here the all-servers variant is a single distributed job).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from askg_spark.session import operator_scope, persist
+from askg_spark.session import driver_table, operator_scope, persist
+
+# Entities at or below which search_entities and semantic_search score
+# a driver-side copy. Median request over 4 cores, copy against Spark
+# path: 27 vs 141 ms at 10^4 entities, 55 vs 243 ms at 10^5, 353 vs
+# 941 ms at 10^6, where the copy took the driver's peak RSS from 141 to
+# 401 MB and its fetch made the first request 6.6 s against 3.8 s
+# (BENCH.md "Serving from the driver").
+_DRIVER_MAX_ROWS = 1_000_000
 
 
 def clean_cypher(q: Column) -> Column:
@@ -47,10 +69,73 @@ def clean_cypher(q: Column) -> Column:
                             r"\s+$", "")
 
 
+def _index(entities: DataFrame) -> DataFrame:
+    """The columns the driver-side scorers read, computed by Spark."""
+    cols = [F.col("id"), F.col("name"),
+            F.lower(F.coalesce(F.col("name"), F.lit(""))).alias("name_lc"),
+            F.lower(F.coalesce(F.col("description"), F.lit("")))
+            .alias("desc_lc"),
+            F.coalesce(F.col("popularity_score"), F.lit(0))
+            .cast("double").alias("pop")]
+    for c in ("categories", "operations"):
+        if c in entities.columns:
+            cols.append(F.array_distinct(F.coalesce(
+                F.col(c), F.array().cast("array<string>"))).alias(c))
+    return entities.select(*cols)
+
+
+def _hits(col: pa.ChunkedArray, t: str) -> np.ndarray:
+    """Rows of the lowered text column that contain ``t`` as bytes."""
+    return pc.match_substring(col, t).to_numpy()
+
+
+def _matched(col: pa.ChunkedArray, wanted: list[str]) -> np.ndarray:
+    """Per row, how many of its distinct list values are in ``wanted``:
+    ``size(array_intersect(col, wanted))``."""
+    col = col.combine_chunks()
+    flat = pc.list_flatten(col)
+    rows = pc.list_parent_indices(col).to_numpy()
+    hit = pc.is_in(flat, value_set=pa.array(wanted, flat.type)).to_numpy(
+        zero_copy_only=False)
+    return np.bincount(rows[hit], minlength=len(col)).astype(np.float64)
+
+
+def _top(entities: DataFrame, idx: pa.Table, score: np.ndarray,
+         keep: np.ndarray, limit: int) -> DataFrame:
+    """The kept rows' top ``limit`` by (score desc, id asc) as an
+    Arrow-built frame with the Spark path's schema. NaN sorts above
+    every number and passes every threshold, as in Spark."""
+    nan = np.isnan(score)
+    keep = keep | nan
+    kept = score[keep]
+    if 0 < limit < len(kept):
+        # the limit-th best score: only rows at or above it can rank
+        cut = np.partition(kept, len(kept) - limit)[len(kept) - limit]
+        keep &= (score >= cut) | nan
+    rows = pa.table({"id": idx.column("id"), "name": idx.column("name"),
+                     "score": score, "nan": nan}).filter(keep)
+    order = pc.sort_indices(rows, [("nan", "descending"),
+                                   ("score", "descending"),
+                                   ("id", "ascending")],
+                            null_placement="at_start")
+    schema = StructType([entities.schema["id"], entities.schema["name"],
+                         StructField("score", DoubleType(), False)])
+    return entities.sparkSession.createDataFrame(
+        rows.take(order[:max(limit, 0)]).select(["id", "name", "score"]),
+        schema)
+
+
 def search_entities(entities: DataFrame, term: str,
                     min_confidence: float = 0.0, limit: int = 10) -> DataFrame:
     """-> (id, name, score) for entities matching `term`, ranked."""
     t = term.lower()
+    idx = driver_table(entities, _DRIVER_MAX_ROWS, _index)
+    if idx is not None:
+        score = (np.where(_hits(idx.column("name_lc"), t), 10.0, 0.0)
+                 + np.where(_hits(idx.column("desc_lc"), t), 8.0, 0.0)
+                 ) + idx.column("pop").to_numpy() * 0.001
+        return _top(entities, idx, score,
+                    (score > 0) & (score >= min_confidence), limit)
     name_hit = F.lower(F.coalesce(F.col("name"), F.lit(""))).contains(t)
     desc_hit = F.lower(F.coalesce(F.col("description"), F.lit(""))).contains(t)
     score = (
@@ -124,6 +209,18 @@ def semantic_search(entities: DataFrame, prompt: str,
     + top-k with a deterministic id tie-break."""
     terms = extract_search_terms(prompt)
     low = prompt.lower()
+    idx = driver_table(entities, _DRIVER_MAX_ROWS, _index)
+    if idx is not None and "operations" in idx.column_names \
+            and "categories" in idx.column_names:
+        text = np.where(_hits(idx.column("name_lc"), low), 3.0,
+                        np.where(_hits(idx.column("desc_lc"), low), 2.0,
+                                 0.0))
+        score = ((text + _matched(idx.column("categories"),
+                                  terms["categories"]) * 2.0)
+                 + _matched(idx.column("operations"),
+                            terms["operations"]) * 1.5) \
+            + idx.column("pop").to_numpy() * 0.1
+        return _top(entities, idx, score, score >= min_confidence, limit)
     cats = F.array(*[F.lit(c) for c in terms["categories"]]) \
         if terms["categories"] else F.array().cast("array<string>")
     ops = F.array(*[F.lit(o) for o in terms["operations"]]) \

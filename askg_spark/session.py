@@ -40,6 +40,12 @@ directory, inside its own operator scope, and each frame it exports is
 stored once by one rule: a frame that is itself a cache or checkpoint
 is kept as it is, any other is coalesced to ``defaultParallelism`` and
 persisted MEMORY_AND_DISK. :func:`release_views` frees them all.
+
+Frames that serve many small requests are also copied to the driver
+(:func:`driver_table`): one Arrow fetch of a stored frame at or below a
+row gate, kept exactly as long as the frame object lives. Driver rows
+become frames through Arrow (:func:`local_frame`), whose plan is a
+``LocalRelation`` that collects without a job.
 """
 
 from __future__ import annotations
@@ -48,10 +54,14 @@ import contextlib
 import functools
 import os
 import threading
+import weakref
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def _default_heap(meminfo: str | None) -> str:
@@ -418,3 +428,42 @@ def release_views() -> None:
         if frames and _built_in._jsc is not None:
             with _unscoped():
                 release(*frames)
+
+
+# ---------------------------------------------------------- driver copies
+
+# frame -> {(project, max_rows): its Arrow copy, or None above the gate}
+_COPIES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def driver_table(df: DataFrame, max_rows: int,
+                 project: Callable[[DataFrame], DataFrame]
+                 ) -> pa.Table | None:
+    """``project(df)`` as an Arrow table in the driver, or None when
+    ``df`` is not stored (a cache or a live checkpoint) or
+    ``project(df)`` holds more than ``max_rows`` rows. The first request
+    for a stored frame runs one ``limit(max_rows + 1)`` fetch; the
+    answer, copy or None, is kept per frame object and dies with it, so
+    it needs no release. An unstored frame is never fetched: each
+    request would recompute it."""
+    copies = _COPIES.setdefault(df, {})
+    key = (project, max_rows)
+    if key not in copies:
+        if not _is_stored(df):
+            return None
+        table = project(df).limit(max_rows + 1).toArrow()
+        copies[key] = table if table.num_rows <= max_rows else None
+    return copies[key]
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType
+                ) -> DataFrame:
+    """The driver-side ``rows`` (tuples in ``schema``'s column order)
+    as a frame built through Arrow: its plan is a ``LocalRelation``,
+    which collects without a job. ``createDataFrame`` of a list is a
+    Python-RDD scan, and reading it runs a Python-worker job."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=arrow), schema)

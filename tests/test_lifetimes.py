@@ -132,11 +132,21 @@ def _pipeline():
                                        PipelineConfig())), check
 
 
+def _bfs(spark_path):
+    def build(spark):
+        with pytest.MonkeyPatch.context() as mp:
+            if spark_path:
+                # an edge gate below this graph selects the Spark path
+                mp.setattr(cc, "_DRIVER_MAX_EDGES", 0)
+            return graphops.bfs_depths(
+                _graph(spark, "src", "dst"),
+                spark.createDataFrame([("7",)], "node string"), max_depth=3)
+    return build, None
+
+
 CASES = {
-    "bfs_depths": (lambda spark: graphops.bfs_depths(
-        _graph(spark, "src", "dst"),
-        spark.createDataFrame([("7",)], "node string"), max_depth=3),
-        None),
+    "bfs_depths": _bfs(spark_path=False),
+    "bfs_depths_spark": _bfs(spark_path=True),
     "kcore": (lambda spark: graphops.kcore(_graph(spark), k=2), None),
     "random_walks": (lambda spark: graphops.random_walks(
         _graph(spark), spark.createDataFrame([("1",), ("10",)], "n string"),
@@ -221,9 +231,9 @@ def _tailed(spark, n, a, b):
 
 
 ROUNDS = {
-    "bfs_depths": lambda spark, n: graphops.bfs_depths(
+    "bfs_depths": lambda spark, n: _bfs_spark(
         _tailed(spark, n, "src", "dst"),
-        spark.createDataFrame([(f"c{n}",)], "node string"), max_depth=n),
+        spark.createDataFrame([(f"c{n}",)], "node string"), n),
     "kcore": lambda spark, n: graphops.kcore(_tailed(spark, n, "u", "v"),
                                              k=2),
     "pagerank": lambda spark, n: webgraph.pagerank(
@@ -235,6 +245,12 @@ ROUNDS = {
     "component_labels_loop": lambda spark, n: _loop_labels(
         _tailed(spark, n, "src", "dst")),
 }
+
+
+def _bfs_spark(edges, seeds, max_depth):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cc, "_DRIVER_MAX_EDGES", 0)
+        return graphops.bfs_depths(edges, seeds, max_depth=max_depth)
 
 
 def _loop_labels(edges):
@@ -272,6 +288,44 @@ def test_bpe_spark_rounds_read_a_flat_plan(spark, monkeypatch):
     # the frame the 16th round reads, against the one the 8th reads:
     # a plan that stacks a round per round would far more than double
     assert sizes[15] <= 2 * sizes[7], sizes
+
+
+# ------------------------------------------------------ driver copies
+
+def test_driver_search_stores_nothing(spark):
+    from askg_spark import search
+
+    ents = session.checkpoint(spark.createDataFrame(
+        [("a", "db one", "a database", 3, ["database"], ["read"]),
+         ("b", "two", None, None, None, None)],
+        "id string, name string, description string, "
+        "popularity_score long, categories array<string>, "
+        "operations array<string>"))
+    rdds0, caches0 = _persisted(spark), _cache_entries(spark)
+    for _ in range(2):  # the fetch, then the copy
+        hits = search.search_entities(ents, "db")
+        ranked = search.semantic_search(ents, "find database servers")
+        assert hits.count() == 1 and ranked.count() == 2
+    assert _persisted(spark) == rdds0
+    assert _cache_entries(spark) == caches0
+    session.release(ents)
+
+
+def test_driver_copy_dies_with_its_frame(spark):
+    import gc
+
+    from askg_spark import search
+
+    ents = session.checkpoint(spark.createDataFrame(
+        [("a", "db", "x", 1)],
+        "id string, name string, description string, popularity_score long"))
+    search.search_entities(ents, "db").collect()
+    n = len(session._COPIES)
+    assert session._COPIES.get(ents)
+    session.release(ents)
+    del ents
+    gc.collect()
+    assert len(session._COPIES) == n - 1
 
 
 # -------------------------------------------------------- shared views
