@@ -24,7 +24,17 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from askg_spark import cc
 from askg_spark.session import (checkpoint, local_frame, operator_scope,
-                                persist, release)
+                                persist, release, row_bound)
+
+# Edges (NULL endpoints dropped) at or below which bfs_depths runs in
+# the driver. Per request over 4 cores, with the edges a filter over
+# cached triples as perfbench serves them, the driver path against the
+# Spark path: 0.50 vs 1.46 s at 10^5 edges, 1.23 vs 4.82 s at 10^6,
+# 3.3 vs 8.1 s at 3*10^6 (0.5 GB driver peak RSS) and 6.0 s at 5*10^6
+# (0.7 GB). Every request fetches afresh, so the gate holds the
+# driver's memory to cc._DRIVER_MAX_EDGES's budget (BENCH.md "Serving
+# from the driver").
+_BFS_DRIVER_MAX_EDGES = 3_000_000
 
 
 def cooccurrence_edges(df: DataFrame, group_col: str,
@@ -120,12 +130,14 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
     column of node ids, depth 0. NULL is not a node: edges with a NULL
     endpoint and NULL seeds are dropped first.
 
-    When the endpoints and the seeds share one type, one job fetches
-    up to ``cc._DRIVER_MAX_EDGES + 1`` edges as Arrow (the gate of
-    ``cc.component_labels``) and one more the seeds. At or below the
-    gate the BFS runs in the driver (:func:`_driver_depths`) and the
-    result is a frame built from Arrow, which stores nothing: a
-    request costs the two fetches, not a few jobs per hop.
+    When the endpoints and the seeds share one type, the edges are
+    counted (:func:`_at_most`: no job when they filter a built cache
+    of at most ``_BFS_DRIVER_MAX_EDGES`` rows, else one). At or below
+    that gate two more jobs fetch the seeds and the edges as Arrow,
+    the BFS runs in the driver (:func:`_driver_depths`) and the result
+    is a frame built from Arrow, which stores nothing: a request costs
+    two or three jobs, not a few per hop. Above the gate nothing is
+    fetched.
 
     Above the gate (or with mixed types, which Spark widens) runs the
     level-synchronous frontier expansion — the textbook distributed
@@ -144,20 +156,19 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
     seeds = seeds.select(F.col(node_col).alias("node")) \
         .filter(F.col("node").isNotNull())
     node, dst = seeds.schema["node"], und.schema["v"]
-    if und.schema["u"].dataType == dst.dataType == node.dataType:
-        gate = cc._DRIVER_MAX_EDGES
-        fetched = und.limit(gate + 1).toArrow()
-        starts = seeds.limit(gate + 1).toArrow() \
-            if fetched.num_rows <= gate else None
-        if starts is not None and starts.num_rows <= gate:
+    gate = _BFS_DRIVER_MAX_EDGES
+    if und.schema["u"].dataType == dst.dataType == node.dataType \
+            and _at_most(und, gate):
+        starts = seeds.limit(gate + 1).toArrow()
+        if starts.num_rows <= gate:
             # the Spark path's schema: its first round unions the seeds
             # with edge endpoints
             nullable = node.nullable or (max_depth > 0 and dst.nullable)
             return edges.sparkSession.createDataFrame(
-                _driver_depths(fetched, starts.column("node"), max_depth),
+                _driver_depths(und.toArrow(), starts.column("node"),
+                               max_depth),
                 StructType([StructField("node", node.dataType, nullable),
                             StructField("depth", IntegerType(), False)]))
-        del fetched, starts  # the Spark path reads the edges from Spark
     # scanned once per round — without this the doubled+distinct edge
     # shuffle re-runs every hop
     bidir = persist(und.unionByName(
@@ -176,6 +187,15 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame,
         if d < max_depth and visited.filter(F.col("depth") == d).isEmpty():
             break
     return visited
+
+
+def _at_most(df: DataFrame, n: int) -> bool:
+    """Whether ``df`` holds at most ``n`` rows: free when
+    :func:`session.row_bound` shows it, else one job (an RDD count; a
+    DataFrame count is two under AQE)."""
+    bound = row_bound(df)
+    return bound is not None and bound <= n \
+        or df._jdf.queryExecution().toRdd().count() <= n
 
 
 def _driver_depths(edges: pa.Table, seeds: pa.ChunkedArray,

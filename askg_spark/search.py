@@ -210,8 +210,7 @@ def semantic_search(entities: DataFrame, prompt: str,
     terms = extract_search_terms(prompt)
     low = prompt.lower()
     idx = driver_table(entities, _DRIVER_MAX_ROWS, _index)
-    if idx is not None and "operations" in idx.column_names \
-            and "categories" in idx.column_names:
+    if idx is not None:
         text = np.where(_hits(idx.column("name_lc"), low), 3.0,
                         np.where(_hits(idx.column("desc_lc"), low), 2.0,
                                  0.0))

@@ -43,9 +43,10 @@ persisted MEMORY_AND_DISK. :func:`release_views` frees them all.
 
 Frames that serve many small requests are also copied to the driver
 (:func:`driver_table`): one Arrow fetch of a stored frame at or below a
-row gate, kept exactly as long as the frame object lives. Driver rows
-become frames through Arrow (:func:`local_frame`), whose plan is a
-``LocalRelation`` that collects without a job.
+row gate, kept while the frame object lives and until :func:`release`
+frees what it copied. Driver rows become frames through Arrow
+(:func:`local_frame`), whose plan is a ``LocalRelation`` that collects
+without a job.
 """
 
 from __future__ import annotations
@@ -277,6 +278,9 @@ def _same(a, b) -> bool:
 
 
 def _drop(jspark, leaf) -> None:
+    for df, (root, _) in list(_COPIES.items()):
+        if _same(root, leaf):
+            _COPIES.pop(df, None)  # a driver copy goes with what it copied
     if _kind(leaf) == "LogicalRDD":
         leaf.rdd().unpersist(False)
     else:
@@ -391,6 +395,19 @@ def _is_stored(df: DataFrame) -> bool:
         and root.rdd().getStorageLevel().isValid())
 
 
+def row_bound(df: DataFrame) -> int | None:
+    """An upper bound on ``df``'s rows known without a job, or None:
+    the row count of the built cache that ``df`` only filters and
+    projects (Spark counts a cache's rows as it builds it)."""
+    node = _plan(df)
+    while _kind(node) in ("Project", "Filter"):
+        node = node.child()
+    if _kind(node) != "InMemoryRelation" \
+            or not node.cacheBuilder().isCachedColumnBuffersLoaded():
+        return None
+    return node.cacheBuilder().rowCountStats().value()
+
+
 @operator_scope
 def _build(spark: SparkSession, name: str, sf: str) -> dict[str, DataFrame]:
     frames = VIEWS[name](spark, sf)
@@ -432,7 +449,8 @@ def release_views() -> None:
 
 # ---------------------------------------------------------- driver copies
 
-# frame -> {(project, max_rows): its Arrow copy, or None above the gate}
+# stored frame -> (the cache or checkpoint it reads, its Arrow copy or
+# None above the gate)
 _COPIES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -443,17 +461,21 @@ def driver_table(df: DataFrame, max_rows: int,
     ``df`` is not stored (a cache or a live checkpoint) or
     ``project(df)`` holds more than ``max_rows`` rows. The first request
     for a stored frame runs one ``limit(max_rows + 1)`` fetch; the
-    answer, copy or None, is kept per frame object and dies with it, so
-    it needs no release. An unstored frame is never fetched: each
-    request would recompute it."""
-    copies = _COPIES.setdefault(df, {})
-    key = (project, max_rows)
-    if key not in copies:
+    answer, copy or None, is kept per frame object (one per frame: the
+    first request's ``project`` and ``max_rows`` make it) until the
+    frame dies or what it reads is released. A later request with a
+    smaller ``max_rows`` than the copy's rows gets None. An unstored
+    frame is never fetched: each request would recompute it."""
+    copy = _COPIES.get(df)
+    if copy is None:
         if not _is_stored(df):
             return None
         table = project(df).limit(max_rows + 1).toArrow()
-        copies[key] = table if table.num_rows <= max_rows else None
-    return copies[key]
+        copy = _COPIES[df] = (_plan(df), table if table.num_rows <= max_rows
+                              else None)
+    table = copy[1]
+    return table if table is not None and table.num_rows <= max_rows \
+        else None
 
 
 def local_frame(spark: SparkSession, rows, schema: str | StructType

@@ -137,7 +137,7 @@ def _bfs(spark_path):
         with pytest.MonkeyPatch.context() as mp:
             if spark_path:
                 # an edge gate below this graph selects the Spark path
-                mp.setattr(cc, "_DRIVER_MAX_EDGES", 0)
+                mp.setattr(graphops, "_BFS_DRIVER_MAX_EDGES", 0)
             return graphops.bfs_depths(
                 _graph(spark, "src", "dst"),
                 spark.createDataFrame([("7",)], "node string"), max_depth=3)
@@ -249,7 +249,7 @@ ROUNDS = {
 
 def _bfs_spark(edges, seeds, max_depth):
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(cc, "_DRIVER_MAX_EDGES", 0)
+        mp.setattr(graphops, "_BFS_DRIVER_MAX_EDGES", 0)
         return graphops.bfs_depths(edges, seeds, max_depth=max_depth)
 
 
@@ -319,13 +319,36 @@ def test_driver_copy_dies_with_its_frame(spark):
     ents = session.checkpoint(spark.createDataFrame(
         [("a", "db", "x", 1)],
         "id string, name string, description string, popularity_score long"))
+    reader = ents.select("*")  # frees the checkpoint once ents is gone
     search.search_entities(ents, "db").collect()
     n = len(session._COPIES)
-    assert session._COPIES.get(ents)
-    session.release(ents)
+    assert session._COPIES[ents][1] is not None
     del ents
     gc.collect()
     assert len(session._COPIES) == n - 1
+    session.release(reader)
+
+
+@pytest.mark.parametrize("store", ["checkpoint", "persist"])
+def test_release_drops_the_driver_copy(spark, store):
+    from askg_spark import search
+
+    ents = getattr(session, store)(spark.createDataFrame(
+        [("a", "db", "x", 1)],
+        "id string, name string, description string, popularity_score long"))
+    ents.count()
+    search.search_entities(ents, "db").collect()
+    assert session._COPIES[ents][1] is not None
+    # released through another frame that reads the same storage
+    session.release(ents.select("id"))
+    assert ents not in session._COPIES
+    assert not session._is_stored(ents)
+    if store == "persist":  # recomputed by Spark, not read from a copy
+        hits = search.search_entities(ents, "db")
+        leaf = hits._jdf.queryExecution().analyzed().collectLeaves().head()
+        assert leaf.getClass().getSimpleName() != "LocalRelation"
+        assert [r.id for r in hits.collect()] == ["a"]
+        assert ents not in session._COPIES
 
 
 # -------------------------------------------------------- shared views

@@ -8,9 +8,9 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from askg_spark import cc, graphops, search, session
+from askg_spark import graphops, search, session
 from askg_spark.fixtures import generate_pages
 from askg_spark.pipeline import PipelineConfig, run_pipeline
 from perfbench.inputs import SEARCH_TERMS
@@ -143,7 +143,7 @@ def test_unstored_frame_takes_the_spark_path_without_a_fetch(spark):
     sem = search.semantic_search(ents, "find database servers")
     assert _jobs(spark) == jobs  # plans only: nothing was fetched
     assert not _is_local(got) and not _is_local(sem)
-    assert not session._COPIES.get(ents)
+    assert ents not in session._COPIES
 
 
 def test_search_path_choice_at_the_gate(spark, monkeypatch):
@@ -161,7 +161,7 @@ def _bfs_both(monkeypatch, edges, seeds, max_depth):
     got = graphops.bfs_depths(edges, seeds, max_depth=max_depth)
     assert _is_local(got)
     with monkeypatch.context() as mp:
-        mp.setattr(cc, "_DRIVER_MAX_EDGES", 0)
+        mp.setattr(graphops, "_BFS_DRIVER_MAX_EDGES", 0)
         want = graphops.bfs_depths(edges, seeds, max_depth=max_depth)
     assert not _is_local(want)
     assert got.schema == want.schema
@@ -237,9 +237,9 @@ def test_bfs_path_choice_at_the_gate(spark, monkeypatch):
         "src string, dst string")
     seeds = spark.createDataFrame([("a",)], "node string")
     # 3 edges once the NULL endpoint is dropped
-    monkeypatch.setattr(cc, "_DRIVER_MAX_EDGES", 3)
+    monkeypatch.setattr(graphops, "_BFS_DRIVER_MAX_EDGES", 3)
     assert _is_local(graphops.bfs_depths(edges, seeds, max_depth=2))
-    monkeypatch.setattr(cc, "_DRIVER_MAX_EDGES", 2)
+    monkeypatch.setattr(graphops, "_BFS_DRIVER_MAX_EDGES", 2)
     out = graphops.bfs_depths(edges, seeds, max_depth=2)
     assert not _is_local(out)
     assert {(r.node, r.depth) for r in out.collect()} == {
@@ -247,13 +247,53 @@ def test_bfs_path_choice_at_the_gate(spark, monkeypatch):
     session.release(out)
     # int seeds against long endpoints: Spark widens the types, so the
     # Spark path runs whatever the gate
-    monkeypatch.setattr(cc, "_DRIVER_MAX_EDGES", 10**6)
+    monkeypatch.setattr(graphops, "_BFS_DRIVER_MAX_EDGES", 10**6)
     out = graphops.bfs_depths(
         spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long"),
         spark.createDataFrame([(1,)], "node int"), max_depth=1)
     assert not _is_local(out)
     assert {(r.node, r.depth) for r in out.collect()} == {(1, 0), (2, 1)}
     session.release(out)
+
+
+def test_bfs_above_the_gate_fetches_nothing(spark, monkeypatch):
+    fetched = []
+    to_arrow = DataFrame.toArrow
+    monkeypatch.setattr(DataFrame, "toArrow",
+                        lambda df: fetched.append(df) or to_arrow(df))
+    monkeypatch.setattr(graphops, "_BFS_DRIVER_MAX_EDGES", 2)
+    out = graphops.bfs_depths(
+        spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "d")],
+                              "src string, dst string"),
+        spark.createDataFrame([("a",)], "node string"), max_depth=1)
+    assert not _is_local(out) and not fetched
+    assert {(r.node, r.depth) for r in out.collect()} == {("a", 0), ("b", 1)}
+    session.release(out)
+
+
+def test_bfs_skips_the_count_over_a_built_cache(spark, monkeypatch):
+    triples = spark.createDataFrame(
+        [("a", "e", "b"), ("b", "e", "c"), ("c", "x", "d"), ("d", "e", "e")],
+        "subj string, pred string, obj string").persist()
+    edges = triples.filter(F.col("pred") == "e").select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst"))
+    assert session.row_bound(edges) is None  # not built yet
+    triples.count()
+    assert session.row_bound(edges) == 4
+    seeds = spark.createDataFrame([("b",)], "node string")
+    jobs = {}
+    # 3 edges: at gate 4 the cache's 4 rows bound them, at gate 3 the
+    # edges are counted
+    for gate in (4, 3):
+        monkeypatch.setattr(graphops, "_BFS_DRIVER_MAX_EDGES", gate)
+        before = _jobs(spark)
+        got = graphops.bfs_depths(edges, seeds, max_depth=1)
+        jobs[gate] = _jobs(spark) - before
+        assert _is_local(got)
+        assert {(r.node, r.depth) for r in got.collect()} == {
+            ("b", 0), ("a", 1), ("c", 1)}
+    assert jobs[3] == jobs[4] + 1
+    triples.unpersist()
 
 
 def test_bfs_below_the_gate_runs_at_most_three_jobs(spark):
