@@ -26,9 +26,14 @@ co-occurrence graph) are named views, registered below with
 ``askg_spark.session.shared_view`` and requested with
 ``askg_spark.session.view``: each is built once per SparkContext and
 sf, its frames stored once by the session's view rule, and all of them
-freed by ``askg_spark.session.release_views``. No query stores a frame
-itself. bench.py times each view build in its own ``build:<view>`` row,
-so no query row depends on which query ran first.
+freed by ``askg_spark.session.release_views``. A query may store
+frames of its own, and some return frames that read them, so callers
+run each query inside ``askg_spark.session.operator_scope`` and consume
+its rows there; the scope then frees what the query stored, as bench.py
+and tools/check_oracles.py do (pinned by
+tests/test_lifetimes.py::test_contract_queries_leave_no_storage_behind).
+bench.py times each view build in its own ``build:<view>`` row, so no
+query row depends on which query ran first.
 """
 
 from __future__ import annotations

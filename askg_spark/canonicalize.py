@@ -21,12 +21,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 from askg_spark import normalize as N
 
 
-def _first_nonempty(col: str, ord_col: str = "ord"):
+def _first_nonempty(col: str):
     """first non-null/non-empty value in (completeness desc, url asc)
     order — min_by ignores rows whose ordering expression is NULL."""
     c = F.col(col)
     valid = c.isNotNull() & (c.cast("string") != "")
-    return F.min_by(c, F.when(valid, F.col(ord_col)))
+    return F.min_by(c, F.when(valid, F.col("ord")))
 
 
 def canonical_entities(enriched_with_component: DataFrame) -> DataFrame:

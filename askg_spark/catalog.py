@@ -52,19 +52,13 @@ class Catalog:
 
     # -- writes ---------------------------------------------------------
 
-    def write_snapshot(
-        self, df: DataFrame, table: str, *,
-        partition_by: list[str] | None = None,
-        properties: dict | None = None,
-    ) -> int:
+    def write_snapshot(self, df: DataFrame, table: str, *,
+                       properties: dict | None = None) -> int:
         """Append a new snapshot (becomes current); returns snapshot id."""
         man = self.manifest(table)
         snap_id = (man["current"] or 0) + 1
         path = os.path.join(self._tdir(table), f"snap-{snap_id:06d}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        df.write.mode("overwrite").parquet(path)
         man["snapshots"].append({
             "id": snap_id, "path": path, "ts": time.time(),
             "properties": properties or {},
@@ -114,8 +108,7 @@ class Catalog:
         compaction targets exactly the large fragmented tables where
         a count() pre-scan would double the I/O."""
         import math
-        man = self.manifest(table)
-        snap = next(s for s in man["snapshots"] if s["id"] == man["current"])
+        man, snap = self._current(table)
         n = _parquet_footer_rows(snap["path"])
         df = self.read(spark, table)
         files = max(1, math.ceil(n / max(1, int(target_rows_per_file))))
@@ -124,10 +117,15 @@ class Catalog:
             properties={"compacted_from": man["current"],
                         "rows": n, "files": files})
 
-    def collect_file_stats(self, table: str,
-                           stats_cols: list[str],
-                           snapshot_id: int | None = None) -> int:
-        """Record per-FILE column min/max in the manifest — the
+    def _current(self, table: str) -> tuple[dict, dict]:
+        """(manifest, its current snapshot entry)."""
+        man = self.manifest(table)
+        return man, next(s for s in man["snapshots"]
+                         if s["id"] == man["current"])
+
+    def collect_file_stats(self, table: str, stats_cols: list[str]) -> int:
+        """Record per-FILE column min/max of the current snapshot in the
+        manifest — the
         Iceberg manifest-entry `lower_bounds`/`upper_bounds` analog,
         harvested from the parquet footers already on disk
         (metadata-only: O(files) footer reads, zero row scan).
@@ -137,43 +135,40 @@ class Catalog:
         [min, max] can overlap it (`scan_pruned`). Returns the number
         of files annotated."""
         import pyarrow.parquet as pq
-        man = self.manifest(table)
-        sid = snapshot_id or man["current"]
-        snap = next(s for s in man["snapshots"] if s["id"] == sid)
+        man, snap = self._current(table)
         entries = []
-        for root, _dirs, files in os.walk(snap["path"]):
-            for f in sorted(files):
-                if not f.endswith(".parquet"):
+        for f in sorted(os.listdir(snap["path"])):
+            if not f.endswith(".parquet"):
+                continue
+            fp = os.path.join(snap["path"], f)
+            meta = pq.ParquetFile(fp).metadata
+            names = {meta.schema.column(i).name: i
+                     for i in range(meta.num_columns)}
+            stats: dict[str, list] = {}
+            for col in stats_cols:
+                if col not in names:
                     continue
-                fp = os.path.join(root, f)
-                meta = pq.ParquetFile(fp).metadata
-                names = {meta.schema.column(i).name: i
-                         for i in range(meta.num_columns)}
-                stats: dict[str, list] = {}
-                for col in stats_cols:
-                    if col not in names:
-                        continue
-                    lo = hi = None
-                    for g in range(meta.num_row_groups):
-                        st = meta.row_group(g).column(names[col]).statistics
-                        if st is None or not st.has_min_max:
-                            lo = hi = None
-                            break
-                        mn, mx = _json_scalar(st.min), _json_scalar(st.max)
-                        lo = mn if lo is None else min(lo, mn)
-                        hi = mx if hi is None else max(hi, mx)
-                    if lo is not None:
-                        stats[col] = [lo, hi]
-                entries.append({"path": fp, "rows": meta.num_rows,
-                                "stats": stats})
+                lo = hi = None
+                for g in range(meta.num_row_groups):
+                    st = meta.row_group(g).column(names[col]).statistics
+                    if st is None or not st.has_min_max:
+                        lo = hi = None
+                        break
+                    mn, mx = _json_scalar(st.min), _json_scalar(st.max)
+                    lo = mn if lo is None else min(lo, mn)
+                    hi = mx if hi is None else max(hi, mx)
+                if lo is not None:
+                    stats[col] = [lo, hi]
+            entries.append({"path": fp, "rows": meta.num_rows,
+                            "stats": stats})
         snap["files"] = entries
         self._save_manifest(table, man)
         return len(entries)
 
     def scan_pruned(self, spark: SparkSession, table: str, col: str,
-                    lo, hi, snapshot_id: int | None = None
-                    ) -> tuple[DataFrame, dict]:
-        """Range scan `lo <= col <= hi` that opens ONLY files whose
+                    lo, hi) -> tuple[DataFrame, dict]:
+        """Range scan `lo <= col <= hi` of the current snapshot that
+        opens ONLY files whose
         manifest [min, max] overlaps the range (files without stats
         for `col` are conservatively kept), then applies the exact
         predicate to the survivors. Returns (df, report) where report
@@ -185,27 +180,20 @@ class Catalog:
         O(range) one BEFORE Spark's own row-group pushdown sees a
         single footer; it composes with that pushdown, not replaces
         it."""
-        man = self.manifest(table)
-        sid = snapshot_id or man["current"]
-        snap = next(s for s in man["snapshots"] if s["id"] == sid)
+        _man, snap = self._current(table)
         entries = snap.get("files")
         if entries is None:
             raise ValueError(
-                f"no file stats for {table}@{sid}; run collect_file_stats")
+                f"no file stats for {table}@{snap['id']}; "
+                f"run collect_file_stats")
         lo_j, hi_j = _json_scalar(lo), _json_scalar(hi)
         keep = [e["path"] for e in entries
                 if col not in e["stats"]
                 or (e["stats"][col][0] <= hi_j
                     and e["stats"][col][1] >= lo_j)]
         report = {"files_total": len(entries), "files_read": len(keep)}
-        if not keep:
-            df = self.read(spark, table, sid).limit(0)
-        else:
-            # basePath keeps hive partition columns alive when the
-            # snapshot was written with partition_by (leaf-file reads
-            # would otherwise silently drop them)
-            df = (spark.read.option("basePath", snap["path"])
-                  .parquet(*keep))
+        df = (spark.read.parquet(*keep) if keep
+              else self.read(spark, table).limit(0))
         c = F.col(col)
         return df.filter((c >= F.lit(lo)) & (c <= F.lit(hi))), report
 
@@ -236,16 +224,11 @@ def _json_scalar(v):
 
 
 def _parquet_footer_rows(path: str) -> int:
-    """Sum num_rows from parquet footers under `path` (recursive, so
-    partitioned snapshots count too) — metadata-only, no row scan."""
+    """Sum num_rows from the parquet footers in snapshot directory
+    `path` — metadata-only, no row scan."""
     import pyarrow.parquet as pq
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(root, f)) \
-                    .metadata.num_rows
-    return total
+    return sum(pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+               for f in os.listdir(path) if f.endswith(".parquet"))
 
 
 def fingerprint(df: DataFrame) -> str:
@@ -262,9 +245,7 @@ def fingerprint(df: DataFrame) -> str:
 
 
 def write_bucketed(df: DataFrame, table: str, key: str,
-                   n_buckets: int = 32, sort: bool = True,
-                   mode: str = "overwrite",
-                   path: str | None = None) -> None:
+                   n_buckets: int = 32, path: str | None = None) -> None:
     """Bucketed parquet sink: co-locates rows by ``hash(key) %
     n_buckets`` at WRITE time so every later equi-join or aggregation
     on ``key`` between same-bucketed tables plans with NO exchange —
@@ -276,14 +257,12 @@ def write_bucketed(df: DataFrame, table: str, key: str,
     the node/edge tables a KG serves are joined by entity id by every
     downstream query, so bucketing them by id at materialization
     amortizes the dominant exchange across the whole workload.
-    ``sortBy(key)`` additionally pre-sorts within buckets, letting
+    ``sortBy(key)`` also pre-sorts within buckets, letting
     sort-merge joins skip their sort when Spark reads one file per
     bucket. Iceberg analog: a `bucket(n_buckets, key)` partition
     transform on the table spec."""
-    w = (df.write.mode(mode).format("parquet")
-         .bucketBy(int(n_buckets), key))
-    if sort:
-        w = w.sortBy(key)
+    w = (df.write.mode("overwrite").format("parquet")
+         .bucketBy(int(n_buckets), key).sortBy(key))
     if path is not None:
         # external table: bucketed data lands at `path`, metadata (incl.
         # bucket spec) in the session catalog — the warehouse dir is a

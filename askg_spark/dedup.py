@@ -29,6 +29,9 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from askg_spark.session import operator_scope, persist
 from askg_spark.textops import fingerprints, ngrams_from_tokens, tokens
 
+# word n-gram (shingle) size of the near-duplicate paths
+GRAM = 3
+
 
 # ---------------------------------------------------------------- exact
 
@@ -55,16 +58,15 @@ def exact_dedup(df: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------- n-grams
 
-def ngram_jaccard_pairs(df: DataFrame, n: int = 3,
-                        threshold: float = 0.5) -> DataFrame:
-    """Near-duplicate pairs by exact n-gram Jaccard >= threshold.
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Near-duplicate pairs by exact word-3-gram Jaccard >= threshold.
 
     Inverted-index plan: explode grams -> self equi-join on gram ->
     per-pair intersection count -> join per-doc set sizes. Shuffles on
     (gram) then (pair) — linear in posting-list mass, never |docs|².
     """
     g = (df.select("doc_id", tokens(F.col("text")).alias("toks"))
-         .select("doc_id", F.explode(ngrams_from_tokens(F.col("toks"), n))
+         .select("doc_id", F.explode(ngrams_from_tokens(F.col("toks"), GRAM))
                  .alias("gram")))
     sizes = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     # posting lists join on 8-byte xxhash64 gram keys, not strings —
@@ -159,8 +161,7 @@ def duplicate_span_stats(df: DataFrame, w: int = 15) -> DataFrame:
                      .alias("dup_tokens")))
 
 
-def incremental_dedup_flags(base: DataFrame, inc: DataFrame,
-                            n: int = 3, threshold: float = 0.5) -> DataFrame:
+def incremental_dedup_flags(base: DataFrame, inc: DataFrame) -> DataFrame:
     """Incremental-crawl dedup: flag each INCREMENT document against
     an existing BASE corpus — the shape every rolling web pipeline
     runs per snapshot (dedup the new crawl against the index, never
@@ -169,8 +170,8 @@ def incremental_dedup_flags(base: DataFrame, inc: DataFrame,
     -> (doc_id, exact_dup, n_near_dups) per increment doc:
        exact_dup   1 iff the doc's canonical fingerprint already
                    exists in base (0/1 BIGINT),
-       n_near_dups how many base docs share n-gram Jaccard >=
-                   threshold with it.
+       n_near_dups how many base docs share word-3-gram Jaccard >=
+                   0.5 with it.
 
     Plan: the exact arm is a left_semi of increment fingerprints
     against the base fingerprint dimension (one shuffle on the hash —
@@ -187,7 +188,7 @@ def incremental_dedup_flags(base: DataFrame, inc: DataFrame,
     def grams_of(df: DataFrame) -> DataFrame:
         return (df.select("doc_id", tokens(F.col("text")).alias("toks"))
                 .select("doc_id",
-                        F.explode(ngrams_from_tokens(F.col("toks"), n))
+                        F.explode(ngrams_from_tokens(F.col("toks"), GRAM))
                         .alias("gram"))
                 .select("doc_id", F.xxhash64("gram").alias("gram")))
 
@@ -201,7 +202,7 @@ def incremental_dedup_flags(base: DataFrame, inc: DataFrame,
     near = (inter
             .join(sizes_i.withColumnRenamed("doc_id", "inc_id"), "inc_id")
             .join(sizes_b.withColumnRenamed("doc_id", "base_id"), "base_id")
-            .filter(F.col("n_common") >= F.lit(threshold) *
+            .filter(F.col("n_common") >= F.lit(0.5) *
                     (F.col("n_i") + F.col("n_b") - F.col("n_common")))
             .groupBy("inc_id")
             .agg(F.count(F.lit(1)).alias("n_near_dups"))
@@ -256,12 +257,11 @@ def contamination_check(train: DataFrame, eval_df: DataFrame,
 
 # ---------------------------------------------------------------- clusters
 
-def near_dup_clusters(df: DataFrame, n: int = 3,
-                      threshold: float = 0.5) -> DataFrame:
+def near_dup_clusters(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Transitive near-duplicate clusters -> (doc_id, cluster_id).
 
     Connected components over the union of exact-fingerprint edges
-    (doc -> min doc of its fingerprint group) and n-gram Jaccard >=
+    (doc -> min doc of its fingerprint group) and word-3-gram Jaccard >=
     threshold edges — the canonical "collapse each near-dup family to
     one survivor" step after pairwise detection: pairwise output alone
     under-merges chains (A~B, B~C but A!~C), exactly the greedy-merge
@@ -279,7 +279,7 @@ def near_dup_clusters(df: DataFrame, n: int = 3,
     def enc(c: Column) -> Column:
         return F.lpad(c.cast("string"), 20, "0")
 
-    ng = ngram_jaccard_pairs(df, n=n, threshold=threshold)
+    ng = ngram_jaccard_pairs(df, threshold=threshold)
     fp = fingerprints(df)
     fp_min = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("canon"))
     fp_edges = (
@@ -301,8 +301,7 @@ def near_dup_clusters(df: DataFrame, n: int = 3,
 # ---------------------------------------------------------------- minhash
 
 @operator_scope
-def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
-                  num_hashes: int = 32, band_rows: int = 2) -> DataFrame:
+def minhash_pairs(df: DataFrame) -> DataFrame:
     """Banded MinHash blocking + exact Jaccard rescore on hashed gram
     sets — entirely JVM-side column expressions, no MLlib.
 
@@ -314,16 +313,17 @@ def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     separation (J >= 0.8, see BENCH.md) is 1-(1-0.64)^16 ~ 1-8e-8,
     while background pairs (J well under 0.3 — the 0.35..0.5 band is
     EMPTY in the testdata) almost never collide. The reported pair set
-    is exact Jaccard >= threshold on xxhash64-hashed distinct gram sets
-    (collision error ~|grams|/2^64, negligible)."""
+    is exact Jaccard >= 0.5 on xxhash64-hashed distinct word-3-gram
+    sets (collision error ~|grams|/2^64, negligible)."""
     # filter on token count, not size(grams) > 0 (equivalent: grams is
-    # empty iff < n tokens): Catalyst pushes a grams-based predicate
+    # empty iff < GRAM tokens): Catalyst pushes a grams-based predicate
     # below the token projection, re-inlining the whole gram expression
     # into the filter — measured 8.8s of pure re-evaluation at sf0.1
     base = (
         df.select("doc_id", tokens(F.col("text")).alias("toks"))
-        .filter(F.size("toks") >= n)
-        .select("doc_id", ngrams_from_tokens(F.col("toks"), n).alias("grams"))
+        .filter(F.size("toks") >= GRAM)
+        .select("doc_id",
+                ngrams_from_tokens(F.col("toks"), GRAM).alias("grams"))
         .select("doc_id",
                 F.array_distinct(F.transform(
                     "grams", lambda g: F.xxhash64(g))).alias("hg"))
@@ -337,10 +337,9 @@ def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     # read it and the band cache below: both are the caller's.
     base = persist(base, StorageLevel.MEMORY_AND_DISK)
     base.count()
-    n_bands = num_hashes // band_rows
     mh = F.array(*[
         F.array_min(F.transform("hg", lambda h: F.xxhash64(F.lit(j), h)))
-        for j in range(num_hashes)
+        for j in range(32)
     ])
     # long band keys (xxhash64 over the band's minhashes) — same
     # rationale as linking._lsh_pair_ids: string-keyed self-joins
@@ -349,11 +348,9 @@ def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     bands = base.withColumn("_mh", mh).select(
         "doc_id",
         F.explode(F.array(*[
-            F.xxhash64(F.lit(i), *[
-                F.element_at("_mh", i * band_rows + r + 1)
-                for r in range(band_rows)
-            ])
-            for i in range(n_bands)
+            F.xxhash64(F.lit(i), F.element_at("_mh", 2 * i + 1),
+                       F.element_at("_mh", 2 * i + 2))
+            for i in range(16)
         ])).alias("band"),
     )
     # Both sides of the band self-join re-evaluate the 32-hash minhash
@@ -374,7 +371,7 @@ def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
         .withColumn("n_common", F.size(F.array_intersect("hg_a", "hg_b")))
         .withColumn("n_union",
                     F.size("hg_a") + F.size("hg_b") - F.col("n_common"))
-        .filter(F.col("n_common") >= F.lit(threshold) * F.col("n_union"))
+        .filter(F.col("n_common") >= F.lit(0.5) * F.col("n_union"))
         .select("doc_a", "doc_b")
     )
 
@@ -384,9 +381,9 @@ def minhash_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
 SIMHASH_BITS = 60
 
 
-def simhash_sketches(df: DataFrame, n: int = 3) -> DataFrame:
+def simhash_sketches(df: DataFrame) -> DataFrame:
     """-> (doc_id, simhash): 60-bit sign-sum sketch over DISTINCT word
-    n-gram shingles; shingle hash = first 60 bits of md5 (stable across
+    3-gram shingles; shingle hash = first 60 bits of md5 (stable across
     engines and platforms — no JVM/Python hash seeding).
 
     Shingles, not unigrams: on corpora sharing a vocabulary, distinct
@@ -409,8 +406,8 @@ def simhash_sketches(df: DataFrame, n: int = 3) -> DataFrame:
             out_ids, out_sh = [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 ws = (text or "").split()
-                toks = {" ".join(ws[i:i + n])
-                        for i in range(len(ws) - n + 1)}
+                toks = {" ".join(ws[i:i + GRAM])
+                        for i in range(len(ws) - GRAM + 1)}
                 if not toks:
                     out_ids.append(doc_id); out_sh.append(0)
                     continue
@@ -428,8 +425,7 @@ def simhash_sketches(df: DataFrame, n: int = 3) -> DataFrame:
     return df.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
-def simhash_pairs(df: DataFrame, band_bits: int = 10,
-                  max_hamming: int = 5) -> DataFrame:
+def simhash_pairs(df: DataFrame) -> DataFrame:
     """Near-dup pairs by simhash banding: 6 bands of 10 bits; pairs
     agreeing on >=1 band are candidates (catches ALL pairs with
     Hamming distance <= 5 by pigeonhole), then exact Hamming filter."""
@@ -437,9 +433,9 @@ def simhash_pairs(df: DataFrame, band_bits: int = 10,
     bands = sh.select(
         "doc_id", "simhash",
         F.explode(F.array(*[
-            F.concat_ws(":", F.lit(i), F.shiftright("simhash", i * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1)))
-            for i in range(60 // band_bits)
+            F.concat_ws(":", F.lit(i), F.shiftright("simhash", i * 10)
+                        .bitwiseAND(F.lit((1 << 10) - 1)))
+            for i in range(SIMHASH_BITS // 10)
         ])).alias("band"),
     )
     a = bands.select(F.col("doc_id").alias("doc_a"),
@@ -453,21 +449,20 @@ def simhash_pairs(df: DataFrame, band_bits: int = 10,
     return (
         cands.withColumn("hamming", F.bit_count(
             F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 5)
         .select("doc_a", "doc_b", "hamming")
     )
 
 
 # ---------------------------------------------------------------- embeddings
 
-def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.4,
-                        n_blocks: int = 32) -> DataFrame:
+def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Pairs with cosine >= threshold over `embedding: array<float>`.
 
     EXACT all-pairs cosine as a distributed block-pair GEMM (round-2
     rewrite of the driver-collect + broadcast plan):
 
-      * each vector lands in ONE of ``n_blocks`` hash blocks; a block
+      * each vector lands in ONE of B = 32 hash blocks; a block
         is one row holding (ids, vectors) arrays
       * block pairs (bi <= bj) come from a self non-equi join of the
         B-row block frame — B(B+1)/2 rows, broadcast-nested-loop on a
@@ -477,9 +472,8 @@ def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.4,
 
     No `.collect()` anywhere: the corpus never touches the driver, and
     the O(n²) dot-product work — inherent to the EXACT threshold
-    semantics — is spread evenly over B(B+1)/2 independent tasks.
-    Size ``n_blocks`` ~ sqrt(n·d·8B / 32MB) so a block pair fits a
-    task comfortably.
+    semantics — is spread evenly over B(B+1)/2 independent tasks; a
+    block pair fits a task while B ~ sqrt(n·d·8 bytes / 32 MB).
 
     Why not hyperplane-LSH banding here (measured, BENCH.md): the
     corpus's qualifying pairs sit in a continuum right at the 0.4
@@ -493,7 +487,7 @@ def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.4,
 
     blocks = (
         emb.select(
-            F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
+            F.pmod(F.xxhash64("vec_id"), F.lit(32)).cast("int")
             .alias("blk"),
             "vec_id", "embedding")
         .groupBy("blk")

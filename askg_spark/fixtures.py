@@ -307,15 +307,17 @@ def _n_pages_for_server(seed: int, k: int) -> int:
     return n
 
 
-def count_pages(spark: SparkSession, n_servers: int, seed: int = 42,
-                partitions: int | None = None) -> int:
+def _partitions(n_servers: int) -> int:
+    return max(2, min(n_servers // 50 + 1, 256))
+
+
+def count_pages(spark: SparkSession, n_servers: int, seed: int = 42) -> int:
     """Exact row count of ``generate_pages(...)`` at ~zero cost: a
     distributed sum of the per-server page count, skipping the HTML
     renderer entirely. (Counting the rendered frame re-executes the
     mapInPandas renderer — measured 792 core-s at 200k servers for a
     number that is pure profile arithmetic.) Verified against the
     rendered count in tests."""
-    parts = partitions or max(2, min(n_servers // 50 + 1, 256))
 
     def cnt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -323,21 +325,19 @@ def count_pages(spark: SparkSession, n_servers: int, seed: int = 42,
                 _n_pages_for_server(seed, int(k))
                 for k in pdf["id"].tolist())]})
 
-    rng = spark.range(0, n_servers, numPartitions=parts)
+    rng = spark.range(0, n_servers, numPartitions=_partitions(n_servers))
     row = rng.mapInPandas(cnt, schema="n long").agg(F.sum("n")).collect()
     return int(row[0][0])
 
 
 def generate_pages(
     spark: SparkSession, n_servers: int = 40, seed: int = 42,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Distributed generation: one task range per slice of server ids.
 
     Scale knob is ``n_servers`` (each yields ~2.3 pages). Pure in
     (seed, k): identical output at any partitioning/parallelism.
     """
-    parts = partitions or max(2, min(n_servers // 50 + 1, 256))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -347,5 +347,5 @@ def generate_pages(
             yield pd.DataFrame(
                 rows, columns=["url", "warc_ts", "html", "text", "lang"])
 
-    rng = spark.range(0, n_servers, numPartitions=parts)
+    rng = spark.range(0, n_servers, numPartitions=_partitions(n_servers))
     return rng.mapInPandas(gen, schema=schemas.PAGES)

@@ -235,9 +235,12 @@ def _driver_depths(edges: pa.Table, seeds: pa.ChunkedArray,
                                  np.zeros(len(outside), np.int32)])})
 
 
+# Surviving edges above which kcore stops hinting its node broadcast
+_KCORE_BROADCAST_MAX_EDGES = 100_000_000
+
+
 @operator_scope
-def kcore(edges: DataFrame, k: int, max_rounds: int = 16,
-          broadcast_limit: int = 100_000_000) -> DataFrame:
+def kcore(edges: DataFrame, k: int, max_rounds: int = 16) -> DataFrame:
     """k-core of an undirected graph — the maximal subgraph where
     every node keeps degree >= k — by the standard iterative peel:
     drop all nodes of degree < k, recompute degrees (removals cascade),
@@ -262,9 +265,9 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 16,
     Spark attempts it regardless of size and OOMs the driver rather
     than falling back): the loop already holds each round's edge
     count as a driver-side int, and nodes <= 2*edges, so when the
-    surviving edge count exceeds
-    ``broadcast_limit`` the hint is SKIPPED and the semi-joins run as
-    ordinary shuffled joins — same plan shape, automatic degradation.
+    surviving edge count exceeds ``_KCORE_BROADCAST_MAX_EDGES`` the
+    hint is SKIPPED and the semi-joins run as ordinary shuffled joins
+    — same plan shape, automatic degradation.
     Rounds are data-bounded: peel cascades are shallow in
     practice (<= 7 on the co-occurrence graphs here; max_rounds is a
     runaway backstop and the oracle unrolls the same bound — a graph
@@ -277,7 +280,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 16,
     n_edges = cur.count()
     for _ in range(max_rounds):
         keep = _degrees(cur, "c").filter(F.col("c") >= k).select("n")
-        if n_edges <= broadcast_limit:
+        if n_edges <= _KCORE_BROADCAST_MAX_EDGES:
             keep = F.broadcast(keep)
         nxt = checkpoint(
             cur.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")

@@ -44,33 +44,37 @@ from pyspark.sql import DataFrame, functions as F
 
 @dataclass(frozen=True)
 class LinkConfig:
-    lsh_num_hashes: int = 16             # minhash functions
-    lsh_band_rows: int = 2               # hashes per band (r); b = n/r
-    # Drop band buckets larger than this outright (skew guard AND the
-    # linear-growth bound: with any fixed cap, candidate pairs are
-    # O(cap x bands x n) = O(n); uncapped they grow quadratically with
-    # corpus size as same-vocabulary name cliques fatten every bucket —
-    # measured 6.7M pairs at 42k mentions, 600M at 423k). Hot buckets
-    # are stop-shingle artifacts: true variant pairs co-occur in SMALL
-    # rare-shingle buckets too (the minhash of a near-identical shingle
-    # set lands on the pair's server-unique shingles in at least one of
-    # the 8 bands with high probability), so dropping hot buckets costs
-    # ~no recall: cap 2000 -> 256 -> 64 left the accepted edge set
-    # bit-identical at 20k servers (28,717 edges) with candidates cut
-    # 6.7M -> 2.1M -> 1.0M, and fixture recall stays 100% (tests).
-    # 64 -> 32: bit-identical triples at 40k servers (count AND
-    # (s,p,o) hash-sum); at 800k servers (2M pages) the two caps
-    # diverge by 2,111 of 60.8M triples (0.003% — buckets grow with
-    # the corpus, so a fixed cap trims more pairs at larger scale)
-    # while cutting the link phase 263s -> 152s at pinned local[8].
-    # That loss/cost point is the documented skew policy; raise the
-    # cap where recall of rare name variants outweighs join cost.
-    lsh_bucket_cap: int = 32
-    shingle_size: int = 3
     tfidf_prune: float | None = None     # e.g. 0.05 at 100TB scale; None = off
-    name_ratio_gate: float = 0.85        # deduplication.py:215
-    composite_threshold: float = 0.7     # deduplication.py:262
-    merge_threshold: float = 0.9         # deduplication.py:382
+
+
+# Reference decision thresholds (J4-J6)
+NAME_RATIO_GATE = 0.85       # deduplication.py:215
+COMPOSITE_THRESHOLD = 0.7    # deduplication.py:262
+MERGE_THRESHOLD = 0.9        # deduplication.py:382
+
+# LSH blocking: 16 minhashes in bands of 2 over char 3-gram shingles
+LSH_NUM_HASHES = 16
+LSH_BAND_ROWS = 2
+SHINGLE_SIZE = 3
+# Drop band buckets larger than this outright (skew guard AND the
+# linear-growth bound: with any fixed cap, candidate pairs are
+# O(cap x bands x n) = O(n); uncapped they grow quadratically with
+# corpus size as same-vocabulary name cliques fatten every bucket —
+# measured 6.7M pairs at 42k mentions, 600M at 423k). Hot buckets
+# are stop-shingle artifacts: true variant pairs co-occur in SMALL
+# rare-shingle buckets too (the minhash of a near-identical shingle
+# set lands on the pair's server-unique shingles in at least one of
+# the 8 bands with high probability), so dropping hot buckets costs
+# ~no recall: cap 2000 -> 256 -> 64 left the accepted edge set
+# bit-identical at 20k servers (28,717 edges) with candidates cut
+# 6.7M -> 2.1M -> 1.0M, and fixture recall stays 100% (tests).
+# 64 -> 32: bit-identical triples at 40k servers (count AND
+# (s,p,o) hash-sum); at 800k servers (2M pages) the two caps
+# diverge by 2,111 of 60.8M triples (0.003% — buckets grow with
+# the corpus, so a fixed cap trims more pairs at larger scale)
+# while cutting the link phase 263s -> 152s at pinned local[8].
+# That loss/cost point is the documented skew policy.
+LSH_BUCKET_CAP = 32
 
 
 PAIR_COLS = [
@@ -114,18 +118,19 @@ def exact_edges(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _padded_for_shingles(col, n: int):
+def _padded_for_shingles(col):
     """despace + pad-short-names projection; MUST be materialized as a
     real column before :func:`_shingle_col` (see that docstring).
 
     NB: rpad TRUNCATES strings longer than its length argument — pad
     only the short-name case (so 1-2 char names still yield a shingle)."""
     d = F.regexp_replace(col, " ", "")
+    n = SHINGLE_SIZE
     return F.when(F.length(d) < n, F.rpad(d, n, "_")).otherwise(d)
 
 
-def _shingle_col(padded, n: int):
-    """char n-grams of a pre-padded string COLUMN -> array<string>.
+def _shingle_col(padded):
+    """char 3-grams of a pre-padded string COLUMN -> array<string>.
 
     `padded` must be a plain column reference (project
     :func:`_padded_for_shingles` first): Catalyst inlines a
@@ -133,11 +138,12 @@ def _shingle_col(padded, n: int):
     regexp_replace/rpad tree here would re-run once per shingle —
     measured 5.7s -> 1.4s per 1M names at local[8] with the projection
     (the same pathology as dedup.ngrams_from_tokens)."""
+    n = SHINGLE_SIZE
     idx = F.sequence(F.lit(1), F.length(padded) - (n - 1))
     return F.array_distinct(F.transform(idx, lambda i: padded.substr(i, F.lit(n))))
 
 
-def _lsh_pair_ids(mentions: DataFrame, cfg: LinkConfig):
+def _lsh_pair_ids(mentions: DataFrame):
     """Banded MinHash-LSH blocking on char-3-gram sets of norm_name.
 
     Returns the NARROW candidate id pairs (ia, ib) as xxhash64 longs
@@ -158,7 +164,7 @@ def _lsh_pair_ids(mentions: DataFrame, cfg: LinkConfig):
       r=2 squares the background rate (j²·b) while keeping recall at
       the match range: P(candidate | J=0.5) = 1-(1-0.25)^8 = 0.90,
       J=0.8 -> 0.9998; fixture recall stays 100% (tests).
-    * `lsh_bucket_cap` drops hotter buckets outright — the explicit,
+    * `LSH_BUCKET_CAP` drops hotter buckets outright — the explicit,
       logged skew guard: a pair supported ONLY by a stop-shingle bucket
       is lost, everything else keeps its other 7 bands.
     * No exact-distance post-filter: the scorer's cheap name-ratio gate
@@ -180,20 +186,18 @@ def _lsh_pair_ids(mentions: DataFrame, cfg: LinkConfig):
     base = (
         mentions.filter(F.col("norm_name").isNotNull() & (F.length("norm_name") >= 2))
         .select(*PAIR_COLS)
-        .withColumn("_padded", _padded_for_shingles(F.col("norm_name"),
-                                                    cfg.shingle_size))
-        .withColumn("shingles", _shingle_col(F.col("_padded"),
-                                             cfg.shingle_size))
+        .withColumn("_padded", _padded_for_shingles(F.col("norm_name")))
+        .withColumn("shingles", _shingle_col(F.col("_padded")))
         .drop("_padded")
     )
-    n_bands = cfg.lsh_num_hashes // cfg.lsh_band_rows
+    n_bands = LSH_NUM_HASHES // LSH_BAND_ROWS
     # NB: F.transform invokes the lambda eagerly while the Column is
     # being built, so `i` is captured by value here (same pattern as
     # dedup.minhash_pairs).
     mh = F.array(*[
         F.array_min(F.transform("shingles",
                                 lambda s: F.xxhash64(F.lit(i), s)))
-        for i in range(cfg.lsh_num_hashes)
+        for i in range(LSH_NUM_HASHES)
     ])
     # NARROW pair generation (same scale pattern as relations.py): the
     # band explode, the band exchange and the pair dropDuplicates all
@@ -230,8 +234,8 @@ def _lsh_pair_ids(mentions: DataFrame, cfg: LinkConfig):
         F.xxhash64("norm_name").alias("nh"),
         F.explode(F.array(*[
             F.xxhash64(F.lit(i), *[
-                F.element_at("_mh", i * cfg.lsh_band_rows + r + 1)
-                for r in range(cfg.lsh_band_rows)
+                F.element_at("_mh", i * LSH_BAND_ROWS + r + 1)
+                for r in range(LSH_BAND_ROWS)
             ])
             for i in range(n_bands)
         ])).alias("band"),
@@ -256,7 +260,7 @@ def _lsh_pair_ids(mentions: DataFrame, cfg: LinkConfig):
 
     kept = bands.withColumn(
         "sz", F.count(F.lit(1)).over(Window.partitionBy("band"))
-    ).filter(F.col("sz") <= cfg.lsh_bucket_cap)
+    ).filter(F.col("sz") <= LSH_BUCKET_CAP)
     grouped = kept.groupBy("band").agg(
         F.collect_list(F.struct("idx", "nh")).alias("ms"))
     pair_arr = F.filter(
@@ -322,17 +326,17 @@ def description_idf(mentions: DataFrame) -> tuple[dict[int, float], int]:
     return idf, n_docs
 
 
-def _min_gate(cfg: LinkConfig) -> float:
+def _min_gate() -> float:
     """Floor any accepted pair's name_ratio must exceed.
 
     detailed = 0.4*name + (terms summing to <= 0.6): the cross-registry
-    branch can only fire when 0.4*name_ratio > merge_threshold - 0.6;
-    the same-registry branch needs name_ratio > name_ratio_gate."""
-    min_name_high = max(0.0, (cfg.merge_threshold - 0.6) / 0.4)
-    return min(cfg.name_ratio_gate, min_name_high)
+    branch can only fire when 0.4*name_ratio > MERGE_THRESHOLD - 0.6;
+    the same-registry branch needs name_ratio > NAME_RATIO_GATE."""
+    min_name_high = max(0.0, (MERGE_THRESHOLD - 0.6) / 0.4)
+    return min(NAME_RATIO_GATE, min_name_high)
 
 
-def _score_one(r, name_ratio: float, cfg: LinkConfig) -> bool:
+def _score_one(r, name_ratio: float) -> bool:
     """Full reference decision for one gated pair (namedtuple with
     a_*/b_* fields): fuzzy_dup (J4 + J5) OR high_merge (J6). Both need
     the composite to clear its threshold, so the detailed score is
@@ -358,9 +362,9 @@ def _score_one(r, name_ratio: float, cfg: LinkConfig) -> bool:
         pb = str(r.b_repository).split("/")
         if len(pa) >= 4 and len(pb) >= 4 and pa[3] == pb[3]:
             comp += 0.2
-    if comp <= cfg.composite_threshold:
+    if comp <= COMPOSITE_THRESHOLD:
         return False
-    if name_ratio > cfg.name_ratio_gate:
+    if name_ratio > NAME_RATIO_GATE:
         return True               # fuzzy_dup
     if r.a_registry == r.b_registry:
         return False
@@ -377,7 +381,7 @@ def _score_one(r, name_ratio: float, cfg: LinkConfig) -> bool:
         det += _ratio(r.a_description.lower(), r.b_description.lower()) * 0.1
     if ca and cb and (ca | cb):
         det += (len(ca & cb) / len(ca | cb)) * 0.1
-    return det > cfg.merge_threshold
+    return det > MERGE_THRESHOLD
 
 
 def _make_tfidf_cos(idf: dict[int, float] | None):
@@ -526,7 +530,7 @@ def fuzzy_edges(mentions: DataFrame, cfg: LinkConfig,
     When ``cfg.tfidf_prune`` is set, a vectorized TF-IDF cosine over
     the survivors' descriptions runs before the full scoring, and pairs
     below the prune skip the quadratic-ish description ratios."""
-    pairs = _lsh_pair_ids(mentions, cfg)
+    pairs = _lsh_pair_ids(mentions)
     gate_dim = mentions.select(F.xxhash64("mention_id").alias("idx"),
                                "norm_name", "registry")
 
@@ -555,24 +559,23 @@ def fuzzy_edges(mentions: DataFrame, cfg: LinkConfig,
         .filter(F.col("a_norm_name") != F.col("b_norm_name"))
     )
     gated = _ratio_bound_filter(gated, "a_norm_name", "b_norm_name",
-                                _min_gate(cfg))
+                                _min_gate())
 
     def gate_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        min_gate = _min_gate(cfg)
-        gate = cfg.name_ratio_gate
+        min_gate = _min_gate()
         for pdf in batches:
             if not len(pdf):
                 continue
             # per-pair floor: a same-registry pair can only be accepted
-            # as fuzzy_dup (name_ratio > name_ratio_gate), a cross-
+            # as fuzzy_dup (name_ratio > NAME_RATIO_GATE), a cross-
             # registry pair also as high_merge (> min_gate). The exact
             # numpy quick_ratio bounds ratio from above, so only the
             # pairs it lets through pay for difflib's ratio.
             floors = np.where(
                 pdf["a_registry"].to_numpy() == pdf["b_registry"].to_numpy(),
-                gate, min_gate)
+                NAME_RATIO_GATE, min_gate)
             keep = _np_quick_ratio(pdf["a_norm_name"],
                                    pdf["b_norm_name"]) > floors
             pdf, floors = pdf[keep], floors[keep]
@@ -605,7 +608,7 @@ def fuzzy_edges(mentions: DataFrame, cfg: LinkConfig,
                 pdf = pdf[cos >= prune]
             out = {"src": [], "dst": []}
             for r in pdf.itertuples(index=False):
-                if _score_one(r, r.name_ratio, cfg):
+                if _score_one(r, r.name_ratio):
                     # orient by mention_id (scoring is symmetric in a/b)
                     lo, hi = sorted((r.a_mention_id, r.b_mention_id))
                     out["src"].append(lo)
@@ -616,9 +619,8 @@ def fuzzy_edges(mentions: DataFrame, cfg: LinkConfig,
         full_stage, schema="src string, dst string")
 
 
-def candidate_edges(mentions: DataFrame, cfg: LinkConfig | None = None) -> DataFrame:
+def candidate_edges(mentions: DataFrame, cfg: LinkConfig) -> DataFrame:
     """Full edge set for canonicalization: exact-key stars + fuzzy pairs."""
-    cfg = cfg or LinkConfig()
     exact = exact_edges(mentions)
     idf = (description_idf(mentions)[0]
            if cfg.tfidf_prune is not None else None)

@@ -45,12 +45,12 @@ class StageTimer:
         return out
 
 
-def source_manifest(mentions: DataFrame, registry: str = "glama") -> DataFrame:
+def source_manifest(mentions: DataFrame) -> DataFrame:
     """S13 manifest lineage: the reference's glama downloader tracks
     every fetched glama.json in a CSV manifest with header
     (org, repo, filename) written incrementally as provenance
     (/root/reference/src/glama_downloader.py:113-131). Distributed
-    analog: one row per mention from ``registry`` with (org, repo)
+    analog: one row per glama mention with (org, repo)
     parsed from the repository URL, the source file name from the page
     url's last path segment, and the page url itself as lineage.
 
@@ -61,7 +61,7 @@ def source_manifest(mentions: DataFrame, registry: str = "glama") -> DataFrame:
     repo_id = extract_repository_id(F.col("repository"))
     parts = F.split(repo_id, "/")
     return (
-        mentions.filter(F.col("registry") == registry)
+        mentions.filter(F.col("registry") == "glama")
         .select(
             F.element_at(parts, 1).alias("org"),
             F.element_at(parts, 2).alias("repo"),

@@ -41,15 +41,16 @@ DECODED_SCHEMA = StructType([
 ])
 
 
-def attach_payload(df: DataFrame, payload_col: str = "text") -> DataFrame:
-    """Demo adapter: wrap a column as an opaque binary payload with
+def attach_payload(df: DataFrame) -> DataFrame:
+    """Demo adapter: wrap ``text`` as an opaque binary payload with
     metadata — the shape a crawl with image/audio attachments has."""
+    payload = F.col("text").cast("binary")
     return df.select(
         "doc_id",
-        F.col(payload_col).cast("binary").alias("payload"),
+        payload.alias("payload"),
         F.struct(
             F.lit("image/png").alias("content_type"),
-            F.length(F.col(payload_col).cast("binary")).cast("long").alias("n_bytes"),
+            F.length(payload).cast("long").alias("n_bytes"),
         ).alias("media_meta"),
     )
 

@@ -7,7 +7,8 @@ across stage boundaries until a materialization point):
     extract_mentions     mapInPandas (Arrow)         [extract.py]
     enrich_mentions      Column exprs only           [enrich.py]
     candidate_edges      equi-joins + LSH + pandas UDF  [linking.py]
-    component_labels     union-find contraction (one lazy plan) [cc.py]
+    component_labels     in the driver up to cc._DRIVER_MAX_EDGES
+                         edges, else union-find contraction [cc.py]
     canonical_entities   groupBy aggs                [canonicalize.py]
     assign_global_ids    window rank                 [canonicalize.py]
     infer_relationship_edges  equi-joins, skew-capped [relations.py]
@@ -15,8 +16,9 @@ across stage boundaries until a materialization point):
 
 Resume contract (reference: master_data.py:58-91 / load_to_neo4j.py
 smart loader): when materializing, every output table records in its
-manifest the input fingerprint — a digest of the pages' content and of
-the ``PipelineConfig`` — it was written from. A re-run whose
+manifest the input fingerprint — a digest of the pages' content, of the
+``PipelineConfig`` and of the engine's source (:func:`code_digest`) —
+it was written from. A re-run whose
 fingerprint matches every table's current snapshot reads the snapshots
 instead of recomputing; if any table is missing or stale, the whole
 pipeline re-runs from extraction (there is no per-stage restart).
@@ -24,7 +26,9 @@ pipeline re-runs from extraction (there is no per-stage restart).
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import importlib.resources
 import json
 import logging
 from dataclasses import asdict, dataclass, field
@@ -85,12 +89,11 @@ class PipelineResult:
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
-    cfg: PipelineConfig | None = None,
+    cfg: PipelineConfig,
 ) -> PipelineResult:
     """Pure in-memory run (tests, small scale). Every frame the run
     stores is released before it returns, except the two the result
     reads (``PipelineResult``)."""
-    cfg = cfg or PipelineConfig()
     timer = StageTimer()
 
     mentions_raw, rejects = extract_mentions(pages)
@@ -182,26 +185,41 @@ def run_pipeline(
 STAGES = ["mentions", "rejects", "entities", "rel_edges", "triples", "lineage"]
 
 
+@functools.lru_cache(maxsize=None)
+def code_digest() -> str:
+    """Digest of every module of the ``askg_spark`` package, so that a
+    change to the engine's code invalidates the stored snapshots. The
+    source is read through ``importlib.resources``: the same bytes from
+    a source tree and from the zip that ``spark-submit --py-files``
+    ships."""
+    h = hashlib.sha256()
+    files = importlib.resources.files("askg_spark").iterdir()
+    for f in sorted((f for f in files if f.name.endswith(".py")),
+                    key=lambda f: f.name):
+        h.update(f"{f.name}\0".encode() + f.read_bytes() + b"\0")
+    return h.hexdigest()[:16]
+
+
 def run_pipeline_materialized(
     spark: SparkSession,
     pages: DataFrame,
     out_root: str,
     cfg: PipelineConfig | None = None,
     force: bool = False,
-    keep_snapshots: int = 5,
 ) -> dict:
     """Materialize every stage output into catalog tables under
     ``out_root`` with per-partition lineage. When every table's current
-    snapshot was written from the same input content and the same
-    ``cfg``, the run is skipped and the snapshots are read; otherwise
-    the whole pipeline re-runs. The result reads only the catalog
-    tables: the run's caches and checkpoints are released."""
+    snapshot was written from the same input content, the same ``cfg``
+    and the same engine code, the run is skipped and the snapshots are
+    read; otherwise the whole pipeline re-runs. Each table keeps its 5
+    latest snapshots. The result reads only the catalog tables: the
+    run's caches and checkpoints are released."""
     cfg = cfg or PipelineConfig()
     cat = Catalog(out_root)
     run_id = new_run_id()
     cfg_digest = hashlib.sha256(json.dumps(
         asdict(cfg), sort_keys=True).encode()).hexdigest()[:16]
-    fp = f"{fingerprint(pages)}|cfg:{cfg_digest}"
+    fp = f"{fingerprint(pages)}|cfg:{cfg_digest}|code:{code_digest()}"
 
     def current_ok(table: str) -> bool:
         if force or not cat.exists(table):
@@ -226,9 +244,9 @@ def run_pipeline_materialized(
         cat.write_snapshot(df, name, properties=props)
         lin = partition_lineage(cat.read(spark, name), name, run_id)
         lineage = lin if lineage is None else lineage.unionByName(lin)
-        cat.expire_snapshots(name, keep=keep_snapshots)
+        cat.expire_snapshots(name)
     cat.write_snapshot(lineage, "lineage", properties=props)
-    cat.expire_snapshots("lineage", keep=keep_snapshots)
+    cat.expire_snapshots("lineage")
     # the snapshots hold every output now: free the mentions cache and
     # the entities checkpoint the in-memory frames read
     release(res.mentions, res.entities)

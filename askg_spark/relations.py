@@ -31,11 +31,11 @@ Scale design (round-2 rewrite of the round-1 struct-join):
   * SALTED self-join: the category/operation domains are small (11 and
     8 values), so pair generation for a hot key lands on ONE reducer —
     2 of 32 cores did all the quadratic work in round 1. Each left row
-    gets salt s = hash(id) % n_salt; the right side is replicated to
-    every salt; the join key is (key, salt), giving n_salt-way
+    gets salt s = hash(id) % N_SALT; the right side is replicated to
+    every salt; the join key is (key, salt), giving N_SALT-way
     parallelism per hot key while every unordered pair still meets
     exactly once (at the left member's salt). Replication cost is
-    n_salt x the small keyed frame, paid before the quadratic blowup.
+    N_SALT x the small keyed frame, paid before the quadratic blowup.
   * Per-entity attributes needed for confidence (|cats|, |ops|, lang,
     author) are attached AFTER aggregation via a narrow dims join
     (AQE broadcasts it at any realistic entity count).
@@ -81,19 +81,19 @@ def _capped(df: DataFrame, key_col: str, max_per_key: int | None) -> DataFrame:
     return out
 
 
-def _salted_pairs(keyed: DataFrame, key: str, n_salt: int = N_SALT) -> DataFrame:
+def _salted_pairs(keyed: DataFrame, key: str) -> DataFrame:
     """keyed(key, idx) self-join -> (ia, ib, key) with ia < ib (longs).
 
     Left side salted by idx, right side replicated across all salts;
-    every unordered pair within a key meets exactly once, on n_salt
+    every unordered pair within a key meets exactly once, on N_SALT
     reducers per key instead of one."""
     a = keyed.select(
         F.col(key).alias("_k"),
-        F.pmod(F.col("idx"), F.lit(n_salt)).cast("int").alias("_s"),
+        F.pmod(F.col("idx"), F.lit(N_SALT)).cast("int").alias("_s"),
         F.col("idx").alias("ia"))
     b = keyed.select(
         F.col(key).alias("_k"), F.col("idx").alias("ib")) \
-        .withColumn("_s", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+        .withColumn("_s", F.explode(F.sequence(F.lit(0), F.lit(N_SALT - 1))))
     return (
         a.join(b, ["_k", "_s"])
         .filter(F.col("ia") < F.col("ib"))
@@ -103,7 +103,6 @@ def _salted_pairs(keyed: DataFrame, key: str, n_salt: int = N_SALT) -> DataFrame
 
 def infer_relationship_edges(
     entities: DataFrame, max_entities_per_key: int | None = None,
-    n_salt: int = N_SALT,
 ) -> DataFrame:
     """-> edges(src, dst, rel_type, confidence, description, evidence)."""
     ent = entities.select(
@@ -142,7 +141,7 @@ def infer_relationship_edges(
         .select("author", "idx", "id", "popularity_score"),
         "author", max_entities_per_key)
     same_author = (
-        _salted_pairs(by_author, "author", n_salt)
+        _salted_pairs(by_author, "author")
         # author rides through the repartition (it feeds the payload
         # strings); same explicit-width rebalance as the cat/op
         # branches — without it the payload compute inherits the
@@ -179,7 +178,7 @@ def infer_relationship_edges(
     # coalescing; 4 waves bound the straggler tail at ~25% of the
     # stage. The extra shuffle moves only the narrow pairs.
     cat_pairs = (
-        _salted_pairs(cat_keyed, "category", n_salt)
+        _salted_pairs(cat_keyed, "category")
         .select("ia", "ib").dropDuplicates()
         .repartition(pair_width, "ia", "ib")
         .join(dims_a, "ia").join(dims_b, "ib")
@@ -239,7 +238,7 @@ def infer_relationship_edges(
                 F.explode("operations").alias("op")),
         "op", max_entities_per_key)
     op_pairs = (
-        _salted_pairs(op_keyed, "op", n_salt)
+        _salted_pairs(op_keyed, "op")
         .select("ia", "ib").dropDuplicates()
         .repartition(pair_width, "ia", "ib")
         .join(dims_a.select("ia", "id_a", "ops_a"), "ia")

@@ -103,16 +103,14 @@ def parse_robots_txt(txt: str, agent: str = "askg-spark"
     return groups.get("*", [])
 
 
-def robots_rules(robots: DataFrame, agent: str = "askg-spark",
-                 domain_col: str = "domain",
-                 txt_col: str = "robots_txt") -> DataFrame:
-    """(domain, allow, like_pat, rule_len) — one row per applicable
-    rule. Python runs once per DOMAIN row; output is broadcast-sized
-    (a handful of rules per domain)."""
+def robots_rules(robots: DataFrame, agent: str = "askg-spark") -> DataFrame:
+    """(domain, robots_txt) -> (domain, allow, like_pat, rule_len) —
+    one row per applicable rule. Python runs once per DOMAIN row;
+    output is broadcast-sized (a handful of rules per domain)."""
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             doms, allows, pats, lens = [], [], [], []
-            for dom, txt in zip(pdf[domain_col], pdf[txt_col]):
+            for dom, txt in zip(pdf["domain"], pdf["robots_txt"]):
                 if txt is None:
                     continue
                 for allow, pat, rlen in parse_robots_txt(str(txt), agent):
@@ -128,10 +126,9 @@ def robots_rules(robots: DataFrame, agent: str = "askg-spark",
                     "rule_len int")
 
 
-def apply_robots(urls: DataFrame, rules: DataFrame,
-                 domain_col: str = "domain",
-                 path_col: str = "path") -> DataFrame:
-    """`urls` plus an ``allowed`` int column (1 fetchable, 0 blocked).
+def apply_robots(urls: DataFrame, rules: DataFrame) -> DataFrame:
+    """`urls` (domain, path, ...) plus an ``allowed`` int column (1
+    fetchable, 0 blocked).
 
     Plan shape: broadcast hash join urls×rules on domain with the
     LIKE predicate evaluated JVM-side (column-valued pattern), then
@@ -145,8 +142,8 @@ def apply_robots(urls: DataFrame, rules: DataFrame,
     urls = urls.withColumn("_rid", F.monotonically_increasing_id())
     matched = (urls.join(
         F.broadcast(rules),
-        (urls[domain_col] == rules["domain"]) &
-        F.like(urls[path_col], rules["like_pat"]),
+        (urls["domain"] == rules["domain"]) &
+        F.like(urls["path"], rules["like_pat"]),
         "left")
         .drop(rules["domain"]))
     decided = (matched

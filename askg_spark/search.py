@@ -50,6 +50,9 @@ from askg_spark.session import driver_table, operator_scope, persist
 # (BENCH.md "Serving from the driver").
 _DRIVER_MAX_ROWS = 1_000_000
 
+# Signature classes above which similar_servers takes the all-pairs plan
+_MAX_CLASSES = 4096
+
 
 def clean_cypher(q: Column) -> Column:
     """P13: strip markdown code fences + surrounding whitespace from a
@@ -125,9 +128,17 @@ def _top(entities: DataFrame, idx: pa.Table, score: np.ndarray,
         schema)
 
 
+def _check_limit(limit: int) -> None:
+    """A request's ``limit`` comes from outside the program: refuse a
+    negative one on either path, before the path is chosen."""
+    if limit < 0:
+        raise ValueError(f"limit must be >= 0, got {limit}")
+
+
 def search_entities(entities: DataFrame, term: str,
                     min_confidence: float = 0.0, limit: int = 10) -> DataFrame:
     """-> (id, name, score) for entities matching `term`, ranked."""
+    _check_limit(limit)
     t = term.lower()
     idx = driver_table(entities, _DRIVER_MAX_ROWS, _index)
     if idx is not None:
@@ -207,6 +218,7 @@ def semantic_search(entities: DataFrame, prompt: str,
     (name-contains 3.0 elif description-contains 2.0) + 2.0 per matched
     category + 1.5 per matched operation + popularity * 0.1; threshold
     + top-k with a deterministic id tie-break."""
+    _check_limit(limit)
     terms = extract_search_terms(prompt)
     low = prompt.lower()
     idx = driver_table(entities, _DRIVER_MAX_ROWS, _index)
@@ -251,9 +263,7 @@ def semantic_search(entities: DataFrame, prompt: str,
 # --- W3: similar-servers top-k (neo4j_integration.py:468-488) ---------------
 
 def similar_servers(entities: DataFrame, limit: int = 10,
-                    n_salt: int = 32,
                     max_entities_per_key: int | None = None,
-                    max_classes: int = 4096,
                     author_cap: int | None = None) -> DataFrame:
     """Top-`limit` similar servers for EVERY server:
     score = 2*|∩categories| + |∩operations| + same_author + same_lang,
@@ -290,7 +300,7 @@ def similar_servers(entities: DataFrame, limit: int = 10,
 
     Measured vs the all-pairs plan at sf0.1 (5,000 entities, C=2):
     identical output, 25M pair rows -> ~1.4M pooled rows. Falls back
-    to the salted all-pairs plan when C > `max_classes` (an
+    to the salted all-pairs plan when C > ``_MAX_CLASSES`` (an
     adversarial signature-cardinality corpus — there every key gets
     the ``author_cap`` truncation, the skew policy such a corpus
     needs) or when ``max_entities_per_key`` explicitly requests
@@ -305,12 +315,11 @@ def similar_servers(entities: DataFrame, limit: int = 10,
                         .alias("o"),
                         F.col("implementation_language").alias("lang"))
                 .distinct().count())
-        if ncls <= max_classes:
+        if ncls <= _MAX_CLASSES:
             return _similar_servers_classes(entities, limit,
                                             author_cap=author_cap)
         max_entities_per_key = author_cap
-    return _similar_servers_allpairs(entities, limit, n_salt,
-                                     max_entities_per_key)
+    return _similar_servers_allpairs(entities, limit, max_entities_per_key)
 
 
 @operator_scope
@@ -346,7 +355,7 @@ def _similar_servers_classes(entities: DataFrame, limit: int,
     ).withColumn("cls", F.xxhash64(
         F.to_json(F.struct("cats", "ops", "lang"))))
     # class key = xxhash64 of the canonical signature JSON; a collision
-    # would merge two signature classes, but with C <= max_classes=4096
+    # would merge two signature classes, but with C <= _MAX_CLASSES=4096
     # classes the birthday bound is ~C²/2^65 ≈ 5e-13 — far below the
     # accepted xxhash64 tolerances elsewhere in this repo (gram keys,
     # band keys), and the fallback threshold caps C by construction.
@@ -438,7 +447,6 @@ def _similar_servers_classes(entities: DataFrame, limit: int,
 
 
 def _similar_servers_allpairs(entities: DataFrame, limit: int = 10,
-                              n_salt: int = 32,
                               max_entities_per_key: int | None = None,
                               ) -> DataFrame:
     """All-pairs plan via four salted equi-joins (category / operation /
@@ -464,21 +472,21 @@ def _similar_servers_allpairs(entities: DataFrame, limit: int = 10,
     cat_keyed = keyed(ent.select("idx", "id", "popularity_score",
                                  F.explode("categories").alias("category")),
                       "category")
-    contribs.append(_salted_pairs(cat_keyed, "category", n_salt)
+    contribs.append(_salted_pairs(cat_keyed, "category")
                     .select("ia", "ib", F.lit(2).alias("w")))
     op_keyed = keyed(ent.select("idx", "id", "popularity_score",
                                 F.explode("operations").alias("op")), "op")
-    contribs.append(_salted_pairs(op_keyed, "op", n_salt)
+    contribs.append(_salted_pairs(op_keyed, "op")
                     .select("ia", "ib", F.lit(1).alias("w")))
     auth_keyed = keyed(ent.filter(
         F.col("author").isNotNull() & (F.col("author") != ""))
         .select("idx", "id", "popularity_score", "author"), "author")
-    contribs.append(_salted_pairs(auth_keyed, "author", n_salt)
+    contribs.append(_salted_pairs(auth_keyed, "author")
                     .select("ia", "ib", F.lit(1).alias("w")))
     lang_keyed = keyed(ent.filter(F.col("lang").isNotNull())
                        .select("idx", "id", "popularity_score", "lang"),
                        "lang")
-    contribs.append(_salted_pairs(lang_keyed, "lang", n_salt)
+    contribs.append(_salted_pairs(lang_keyed, "lang")
                     .select("ia", "ib", F.lit(1).alias("w")))
     undirected = contribs[0]
     for c in contribs[1:]:

@@ -67,9 +67,9 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFram
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42):
+def _hyperplanes(dim: int, n_planes: int):
     """Deterministic pseudo-random unit hyperplanes (pure function of
-    (seed, plane, dim) via md5 — identical on every executor/run)."""
+    (plane, dim) via md5 — identical on every executor/run)."""
     import hashlib
 
     import numpy as np
@@ -77,12 +77,12 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42):
     planes = np.empty((n_planes, dim))
     for p in range(n_planes):
         for d in range(dim):
-            h = hashlib.md5(f"{seed}:{p}:{d}".encode()).digest()
+            h = hashlib.md5(f"42:{p}:{d}".encode()).digest()
             planes[p, d] = int.from_bytes(h[:8], "big") / 2**63 - 1.0
     return planes
 
 
-def lsh_signatures(emb: DataFrame, n_planes: int = 16, seed: int = 42,
+def lsh_signatures(emb: DataFrame, n_planes: int = 16,
                    id_col: str = "vec_id") -> DataFrame:
     """Sign-pattern signature: bit p = (v . plane_p) >= 0. Arrow-batched
     numpy matmul — one GEMV per batch, no per-row Python."""
@@ -97,7 +97,7 @@ def lsh_signatures(emb: DataFrame, n_planes: int = 16, seed: int = 42,
                 continue
             mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             if planes is None:
-                planes = _hyperplanes(mat.shape[1], n_planes, seed)
+                planes = _hyperplanes(mat.shape[1], n_planes)
             bits = (mat @ planes.T) >= 0
             sig = (bits * (1 << np.arange(n_planes, dtype=np.uint64))).sum(axis=1)
             yield pd.DataFrame({id_col: pdf[id_col],
@@ -108,8 +108,7 @@ def lsh_signatures(emb: DataFrame, n_planes: int = 16, seed: int = 42,
     return emb.select(id_col, "embedding").mapInPandas(run, schema=schema)
 
 
-def kmeans_centroids(emb: DataFrame, n_cells: int = 16, n_iter: int = 5,
-                     id_col: str = "vec_id"):
+def kmeans_centroids(emb: DataFrame, n_cells: int = 16, n_iter: int = 5):
     """Spherical k-means centroids (unit-norm rows, numpy array
     n_cells x dim) trained distributed:
 
@@ -133,8 +132,8 @@ def kmeans_centroids(emb: DataFrame, n_cells: int = 16, n_iter: int = 5,
     from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
                                    LongType, StructField, StructType)
 
-    seeds = (emb.select(id_col, "embedding")
-             .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+    seeds = (emb.select("vec_id", "embedding")
+             .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
              .limit(n_cells).collect())
     cent = np.array([list(r["embedding"]) for r in seeds], dtype=np.float64)
     cent /= np.linalg.norm(cent, axis=1, keepdims=True)
@@ -224,7 +223,7 @@ def ivf_assign(emb: DataFrame, centroids, nprobe: int = 1,
 
 
 def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
-             n_cells: int = 16, nprobe: int = 4, n_iter: int = 5,
+             n_cells: int = 16, nprobe: int = 4,
              centroids=None) -> DataFrame:
     """Approximate top-k via an inverted-file index: candidates = corpus
     vectors whose cell is among the query's `nprobe` nearest cells,
@@ -237,7 +236,7 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     batches (the 100 TB pattern: train once, assign once into a
     cell-bucketed table, probe forever)."""
     if centroids is None:
-        centroids = kmeans_centroids(emb, n_cells, n_iter)
+        centroids = kmeans_centroids(emb, n_cells)
     corpus_cells = ivf_assign(emb, centroids, nprobe=1)
     query_cells = ivf_assign(queries, centroids, nprobe=nprobe,
                              id_col="query_id")
@@ -267,9 +266,7 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     )
 
 
-def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
-             n_planes: int = 24, band_bits: int = 2,
-             seed: int = 42, multiprobe: bool = True) -> DataFrame:
+def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Approximate top-k: candidates = corpus vectors sharing >=1
     signature band with the query (banded random-hyperplane LSH), exact
     cosine rescore + top-k within candidates.
@@ -278,22 +275,19 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     shuffle on the band key only; at 100 TB the corpus side is
     pre-bucketed by band so probes are map-side.
 
-    Default banding is recall-first (2-bit x 12 bands): the driver's
+    Banding is recall-first (24 planes in 2-bit x 12 bands): the driver's
     embeddings corpus has top-k neighbors at cosine ~0.33-0.45
     (measured, BENCH.md) — per-plane agreement p~0.61, so a 2-bit band
     hits with p^2~0.37 and 12 bands miss a true neighbor with
     (1-0.37)^12 ~ 0.4%. With 40 benched pairs that still loses ~1-2
-    pairs some seeds (measured 0.95 at sf0.1), so `multiprobe` also
-    probes each band's single-bit flips ON THE QUERY SIDE ONLY: the
-    band hits when <=1 of its bits disagrees, p^2 + 2p(1-p) ~ 0.85 per
-    band, miss ~ (0.15)^12 ~ 2e-10. Cost: 1+band_bits rows per query
-    band (queries are small by construction); the CORPUS index is
-    unchanged — at scale the pre-bucketed corpus table is shared by
-    probed and unprobed reads alike. Raise band_bits to 3-4 when the
-    corpus has margin and candidate volume matters more than the last
-    few recall points."""
-    n_bands = n_planes // band_bits
-    mask = (1 << band_bits) - 1
+    pairs some seeds (measured 0.95 at sf0.1), so the QUERY side also
+    probes each band's single-bit flips: the band hits when <=1 of its
+    bits disagrees, p^2 + 2p(1-p) ~ 0.85 per band, miss ~ (0.15)^12 ~
+    2e-10. Cost: 3 rows per query band (queries are small by
+    construction); the CORPUS index is unchanged — at scale the
+    pre-bucketed corpus table is shared by probed and unprobed reads
+    alike."""
+    n_planes, band_bits = 24, 2
 
     def banded(sig_df, id_alias, probe=False):
         # per band i: value v = bits [i*band_bits, (i+1)*band_bits);
@@ -301,9 +295,9 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
         # Hamming<=1 neighborhood of the band value.
         def band_val(i):
             return (F.shiftright("signature", i * band_bits)
-                    .bitwiseAND(F.lit(mask)))
+                    .bitwiseAND(F.lit((1 << band_bits) - 1)))
         vals = []
-        for i in range(n_bands):
+        for i in range(n_planes // band_bits):
             flips = [0] + ([1 << j for j in range(band_bits)]
                            if probe else [])
             for flip in flips:
@@ -315,10 +309,9 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
             F.explode(F.array(*vals)).alias("band"),
         ).dropDuplicates()
 
-    corpus_sig = banded(lsh_signatures(emb, n_planes, seed), "neighbor_id")
-    query_sig = banded(
-        lsh_signatures(queries, n_planes, seed, id_col="query_id"),
-        "query_id", probe=multiprobe)
+    corpus_sig = banded(lsh_signatures(emb, n_planes), "neighbor_id")
+    query_sig = banded(lsh_signatures(queries, n_planes, id_col="query_id"),
+                       "query_id", probe=True)
     cands = (
         corpus_sig.join(F.broadcast(query_sig), "band")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -344,13 +337,11 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     )
 
 
-def label_centroids(emb: DataFrame, label_col: str = "label",
-                    vec_col: str = "embedding",
-                    scale: int = 1_000_000) -> DataFrame:
+def label_centroids(emb: DataFrame) -> DataFrame:
     """Per-label embedding centroid SUMS as exact scaled integers,
     one row per (label, dimension): -> (label, pos, n_vecs,
     sum_scaled) with sum_scaled = sum over the group of
-    floor(vec[pos] * scale), pos 0-based.
+    floor(embedding[pos] * 10^6), pos 0-based.
 
     The grouped `applyInPandas` surface (one Arrow batch per group,
     numpy matrix sum — the §2.9 family member the rest of the engine
@@ -367,20 +358,18 @@ def label_centroids(emb: DataFrame, label_col: str = "label",
     import numpy as np
     import pandas as pd
 
-    s = float(scale)
-
     def agg(pdf: "pd.DataFrame") -> "pd.DataFrame":
         m = np.floor(
-            np.stack(pdf[vec_col].to_numpy()).astype("float64") * s
+            np.stack(pdf["embedding"].to_numpy()).astype("float64") * 1e6
         ).astype("int64")
         sums = m.sum(axis=0)
         d = len(sums)
         return pd.DataFrame({
-            label_col: [pdf[label_col].iloc[0]] * d,
+            "label": [pdf["label"].iloc[0]] * d,
             "pos": np.arange(d, dtype="int64"),
             "n_vecs": np.full(d, len(pdf), dtype="int64"),
             "sum_scaled": sums,
         })
 
-    return emb.groupBy(label_col).applyInPandas(
-        agg, f"{label_col} int, pos long, n_vecs long, sum_scaled long")
+    return emb.groupBy("label").applyInPandas(
+        agg, "label int, pos long, n_vecs long, sum_scaled long")

@@ -3,15 +3,19 @@
 The reference's freshness-gated re-scrape (scrapers.py:1301-1308) and
 master-data currency check (master_data.py:58-91) are batch-incremental
 semantics: process only input that arrived since the last successful
-run. Two equivalent Spark expressions of that contract:
+run. Two Spark expressions of it, which are NOT equivalent:
 
   * the manifest-fingerprint skip in pipeline.run_pipeline_materialized
-    (pure batch, used by the CLI), and
+    (pure batch, used by the CLI) re-uses a whole earlier run: it
+    skips only when the pages, the config and the engine code all
+    match the stored snapshots, and any difference re-runs the whole
+    pipeline over all the pages;
   * this module: `readStream` over the pages directory with
     `Trigger.AvailableNow` + a checkpoint — Spark's own file-source
     tracking replaces the manifest; each invocation drains exactly the
-    unseen files and stops. On a cluster the same job with a processing-
-    time trigger is a continuous ingest, no code change.
+    unseen files and stops, so new pages cost only their own work. On
+    a cluster the same job with a processing-time trigger is a
+    continuous ingest, no code change.
 
 Watermarking note: `warc_ts` is event time; the windowed-count demo
 keeps a 1-day watermark so late crawl records fold into the right

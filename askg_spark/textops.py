@@ -74,32 +74,28 @@ def bpe_token_count(text: Column) -> Column:
                           F.lit(BPE_TOKEN_RE)).cast("long")
 
 
-def quality_counts(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def quality_counts(df: DataFrame) -> DataFrame:
     """Per-document quality signals as exact integer counts:
     n_tokens, n_stopword_tokens, n_long_tokens (len>20, a gibberish
     signal), n_chars, n_alpha_chars. Ratios are the consumer's division.
     """
-    toks = tokens(F.col(text_col))
+    text = F.coalesce(F.col("text"), F.lit(""))
+    toks = tokens(F.col("text"))
     stop = F.array([F.lit(w) for _, ws in LANG_MARKERS for w in ws])
     return df.select(
-        F.col(id_col),
+        "doc_id",
         F.size(toks).cast("long").alias("n_tokens"),
         F.size(F.filter(toks, lambda t: F.array_contains(stop, t))
                ).cast("long").alias("n_stopword_tokens"),
         F.size(F.filter(toks, lambda t: F.length(t) > 20)
                ).cast("long").alias("n_long_tokens"),
-        F.length(F.coalesce(F.col(text_col), F.lit(""))
-                 ).cast("long").alias("n_chars"),
-        F.length(F.regexp_replace(
-            F.coalesce(F.col(text_col), F.lit("")), r"[^A-Za-z]", "")
-        ).cast("long").alias("n_alpha_chars"),
+        F.length(text).cast("long").alias("n_chars"),
+        F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
+        .cast("long").alias("n_alpha_chars"),
         # explicit whitespace set: Java \s and RE2 \s differ on \x0B
-        F.length(F.regexp_replace(
-            F.coalesce(F.col(text_col), F.lit("")),
-            r"[A-Za-z0-9 \t\n\r\f]", "")
-        ).cast("long").alias("n_punct_chars"),
-        bpe_token_count(F.col(text_col)).alias("n_bpe_tokens"),
+        F.length(F.regexp_replace(text, r"[A-Za-z0-9 \t\n\r\f]", ""))
+        .cast("long").alias("n_punct_chars"),
+        bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
     )
 
 
@@ -108,7 +104,7 @@ def quality_counts(df: DataFrame, text_col: str = "text",
 # exactly. Fixed emission order = list order.
 QUALITY_RULES: list[tuple[str, str]] = [
     ("too_short", "n_tokens < {min_tokens}"),
-    ("too_long", "n_tokens > {max_tokens}"),
+    ("too_long", "n_tokens > 100000"),
     # mean word length outside [3, 10]: alpha chars per token, cross-
     # multiplied to stay integral
     ("bad_mean_word_len",
@@ -122,31 +118,30 @@ QUALITY_RULES: list[tuple[str, str]] = [
 ]
 
 
-def quality_filter(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", min_tokens: int = 25,
-                   max_tokens: int = 100_000) -> DataFrame:
+def _keep_reasons(signals: DataFrame, rules: list[tuple[str, str]],
+                  min_tokens: int) -> DataFrame:
+    """(doc_id, keep 0/1, reasons comma-joined in ``rules`` order)."""
+    reasons = F.concat_ws(",", *[
+        F.when(F.expr(tmpl.format(min_tokens=min_tokens)), F.lit(name))
+        for name, tmpl in rules])
+    return signals.select(
+        "doc_id",
+        (reasons == "").cast("long").alias("keep"),
+        reasons.alias("reasons"),
+    )
+
+
+def quality_filter(df: DataFrame, min_tokens: int = 25) -> DataFrame:
     """Gopher-style document quality filter for training-data curation:
     -> (doc_id, keep 0/1, reasons comma-joined in QUALITY_RULES order).
 
     Every rule is an integer comparison over :func:`quality_counts`
     signals (whole-stage codegen; one scan, no shuffle), so the filter
     costs one projection at any corpus size and the exact SQL oracle
-    reproduces it bit-for-bit. Thresholds are args, defaults tuned so
+    reproduces it bit-for-bit. The default ``min_tokens`` is tuned so
     the synthetic corpus (10-99-token docs) splits instead of
     degenerating to all-keep/all-reject."""
-    qc = quality_counts(df, text_col=text_col, id_col=id_col)
-    flags = [
-        (name, F.expr(tmpl.format(min_tokens=min_tokens,
-                                  max_tokens=max_tokens)))
-        for name, tmpl in QUALITY_RULES
-    ]
-    reasons = F.concat_ws(
-        ",", *[F.when(cond, F.lit(name)) for name, cond in flags])
-    return qc.select(
-        F.col(id_col),
-        (reasons == "").cast("long").alias("keep"),
-        reasons.alias("reasons"),
-    )
+    return _keep_reasons(quality_counts(df), QUALITY_RULES, min_tokens)
 
 
 def _run_scan(arr: Column) -> Column:
@@ -202,8 +197,7 @@ def _run_scan(arr: Column) -> Column:
     return F.aggregate(F.array_sort(arr), init, merge, fin)
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021 §A1.1) as exact
     integers: duplicate-line counts/chars and duplicate / most-frequent
     word-2-gram and 3-gram counts. Ratios (dup-line fraction, top-gram
@@ -225,19 +219,19 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
     Reference analog: none (training-data curation operator); rule
     thresholds (e.g. dup-line fraction > 0.30 -> reject) belong to the
     caller, composing with :func:`quality_filter`."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     base = df.select(
-        F.col(id_col),
+        "doc_id",
         F.split(t, "\n", -1).alias("_lines"),
-        tokens(F.col(text_col)).alias("_toks"),
+        tokens(F.col("text")).alias("_toks"),
     )
     staged = base.select(
-        F.col(id_col), "_lines",
+        "doc_id", "_lines",
         ngrams_from_tokens(F.col("_toks"), 2, distinct=False).alias("_g2"),
         ngrams_from_tokens(F.col("_toks"), 3, distinct=False).alias("_g3"),
     )
     scanned = staged.select(
-        F.col(id_col),
+        "doc_id",
         F.size("_lines").cast("long").alias("n_lines"),
         F.size("_g2").cast("long").alias("n_2grams"),
         F.size("_g3").cast("long").alias("n_3grams"),
@@ -246,7 +240,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
         _run_scan(F.col("_g3")).alias("_s3"),
     )
     return scanned.select(
-        F.col(id_col),
+        "doc_id",
         "n_lines",
         F.col("_ls")["n_dup"].alias("n_dup_lines"),
         F.col("_ls")["n_dup_chars"].alias("n_dup_line_chars"),
@@ -273,8 +267,7 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def pii_scan(df: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def pii_scan(df: DataFrame) -> DataFrame:
     """PII detection + redaction for training-data curation:
     -> (doc_id, n_email, n_ipv4, n_phone, redacted_md5).
 
@@ -285,7 +278,7 @@ def pii_scan(df: DataFrame, text_col: str = "text",
     keeps the output narrow for the cross-engine value compare; a real
     pipeline would project the redacted text itself. One scan, no
     shuffle, whole-stage codegen."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     counts = [
         F.regexp_count(t, F.lit(pat)).cast("long").alias(f"n_{name}")
         for name, pat, _ in PII_PATTERNS
@@ -293,25 +286,25 @@ def pii_scan(df: DataFrame, text_col: str = "text",
     red = t
     for _, pat, rep in PII_PATTERNS:
         red = F.regexp_replace(red, pat, rep)
-    return df.select(F.col(id_col), *counts, F.md5(red).alias("redacted_md5"))
+    return df.select("doc_id", *counts, F.md5(red).alias("redacted_md5"))
 
 
 def stratified_sample(df: DataFrame, rates: dict[str, float],
-                      strata_col: str = "lang", key_col: str = "doc_id",
                       default_rate: float = 0.0) -> DataFrame:
     """Deterministic hash-based stratified sampling — the mixture-
     weighting step of a training-data pipeline (e.g. downsample Common
     Crawl, upweight curated sources), reproducible across runs,
     engines, and partitionings.
 
-    A row is kept iff the first 4 hex digits of md5(key) — a uniform
+    A row is kept iff the first 4 hex digits of md5(doc_id) — a uniform
     16-bit value, compared lexicographically, which for fixed-width hex
-    IS numeric order — fall below round(rate * 65536) for its stratum.
+    IS numeric order — fall below round(rate * 65536) for its ``lang``
+    stratum.
     Per-key deterministic: no RNG state, no seed plumbing, identical
     results on any cluster layout, and a row's fate never changes when
     other rows appear (stable under incremental reruns). Pure filter:
     no shuffle, codegen, pushes down past column pruning."""
-    h = F.substring(F.md5(F.col(key_col).cast("string")), 1, 4)
+    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4)
 
     def thr_lit(rate: float):
         # rate >= 1.0 -> "g", one char above the hex alphabet, so every
@@ -322,7 +315,7 @@ def stratified_sample(df: DataFrame, rates: dict[str, float],
 
     thr = thr_lit(default_rate)
     for stratum, rate in sorted(rates.items()):
-        thr = F.when(F.col(strata_col) == stratum, thr_lit(rate)) \
+        thr = F.when(F.col("lang") == stratum, thr_lit(rate)) \
             .otherwise(thr)
     return df.filter(h < thr)
 
@@ -367,9 +360,7 @@ REPETITION_RULES: list[tuple[str, str]] = [
 ]
 
 
-def quality_filter_extended(df: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id", min_tokens: int = 25,
-                            max_tokens: int = 100_000) -> DataFrame:
+def quality_filter_extended(df: DataFrame) -> DataFrame:
     """Full Gopher-style filter: the :data:`QUALITY_RULES` signal rules
     plus the :data:`REPETITION_RULES` repetition rules, one keep/reject
     row per document with comma-joined reasons in fixed order.
@@ -381,20 +372,20 @@ def quality_filter_extended(df: DataFrame, text_col: str = "text",
 
     `n_line_chars` (denominator of dup_line_chars) = total characters
     across lines = n_chars minus the n_lines-1 newline separators."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     stop = F.array([F.lit(w) for _, ws in LANG_MARKERS for w in ws])
     base = df.select(
-        F.col(id_col),
+        "doc_id",
         F.length(t).cast("long").alias("n_chars"),
         F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
         .cast("long").alias("n_alpha_chars"),
         F.length(F.regexp_replace(t, r"[A-Za-z0-9 \t\n\r\f]", ""))
         .cast("long").alias("n_punct_chars"),
         F.split(t, "\n", -1).alias("_lines"),
-        tokens(F.col(text_col)).alias("_toks"),
+        tokens(F.col("text")).alias("_toks"),
     )
     staged = base.select(
-        F.col(id_col), "n_chars", "n_alpha_chars", "n_punct_chars",
+        "doc_id", "n_chars", "n_alpha_chars", "n_punct_chars",
         F.size("_toks").cast("long").alias("n_tokens"),
         F.size(F.filter("_toks", lambda x: F.array_contains(stop, x)))
         .cast("long").alias("n_stopword_tokens"),
@@ -405,7 +396,7 @@ def quality_filter_extended(df: DataFrame, text_col: str = "text",
         ngrams_from_tokens(F.col("_toks"), 3, distinct=False).alias("_g3"),
     )
     scanned = staged.select(
-        F.col(id_col), "n_chars", "n_alpha_chars", "n_punct_chars",
+        "doc_id", "n_chars", "n_alpha_chars", "n_punct_chars",
         "n_tokens", "n_stopword_tokens", "n_long_tokens",
         F.size("_lines").cast("long").alias("n_lines"),
         F.size("_g2").cast("long").alias("n_2grams"),
@@ -415,7 +406,7 @@ def quality_filter_extended(df: DataFrame, text_col: str = "text",
         _run_scan(F.col("_g3")).alias("_s3"),
     )
     signals = scanned.select(
-        F.col(id_col), "n_chars", "n_alpha_chars", "n_punct_chars",
+        "doc_id", "n_chars", "n_alpha_chars", "n_punct_chars",
         "n_tokens", "n_stopword_tokens", "n_long_tokens",
         "n_lines", "n_2grams", "n_3grams",
         F.col("_ls")["n_dup"].alias("n_dup_lines"),
@@ -425,26 +416,14 @@ def quality_filter_extended(df: DataFrame, text_col: str = "text",
         F.col("_s2")["top_count"].alias("top_2gram_count"),
         F.col("_s3")["n_dup"].alias("n_dup_3grams"),
     )
-    flags = [
-        (name, F.expr(tmpl.format(min_tokens=min_tokens,
-                                  max_tokens=max_tokens)))
-        for name, tmpl in QUALITY_RULES + REPETITION_RULES
-    ]
-    reasons = F.concat_ws(
-        ",", *[F.when(cond, F.lit(name)) for name, cond in flags])
-    return signals.select(
-        F.col(id_col),
-        (reasons == "").cast("long").alias("keep"),
-        reasons.alias("reasons"),
-    )
+    return _keep_reasons(signals, QUALITY_RULES + REPETITION_RULES, 25)
 
 
-def lang_id(df: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Marker-token language ID: per language, count matching tokens;
     argmax with first-listed-language tie-break; 'und' when no marker
     hits. Deterministic, SQL-expressible, vocabulary-driven."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
 
     def marker_score(ws: list[str]):
         arr = F.array(*[F.lit(w) for w in ws])
@@ -461,31 +440,28 @@ def lang_id(df: DataFrame, text_col: str = "text",
         for i, lang in enumerate(langs)
     ])
     best = F.when(top["s"] > 0, top["l"]).otherwise(F.lit("und"))
-    return df.select(F.col(id_col), best.alias("lang_pred"))
+    return df.select("doc_id", best.alias("lang_pred"))
 
 
-def fingerprints(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Canonical content fingerprint: md5 over lowercased,
     whitespace-collapsed text — the exact-dedup key."""
     norm = F.trim(F.regexp_replace(
-        F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+", " "))
-    return df.select(F.col(id_col), F.md5(norm).alias("fingerprint"))
+        F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", " "))
+    return df.select("doc_id", F.md5(norm).alias("fingerprint"))
 
 
-def categorize_documents(df: DataFrame, text_col: str = "text",
-                         name_col: Column | None = None) -> DataFrame:
-    """Ontology mention detection (P2 classifier) over free text:
-    -> (doc_id, category) one row per matched category."""
-    name = name_col if name_col is not None else F.lit(None).cast("string")
+def categorize_documents(df: DataFrame) -> DataFrame:
+    """Ontology mention detection (P2 classifier) over free text, with
+    no name: -> (doc_id, category) one row per matched category."""
     return df.select(
         "doc_id",
-        F.explode(classify_categories(name, F.col(text_col))).alias("category"),
+        F.explode(classify_categories(F.lit(None).cast("string"),
+                                      F.col("text"))).alias("category"),
     )
 
 
-def line_dedup(df: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id", min_docs: int = 3) -> DataFrame:
+def line_dedup(df: DataFrame, min_docs: int = 3) -> DataFrame:
     """C4-style cross-document line-level deduplication (Raffel et al.
     2020 §2.2): a line that occurs in >= ``min_docs`` DISTINCT
     documents is corpus boilerplate (nav bars, cookie banners, license
@@ -509,8 +485,8 @@ def line_dedup(df: DataFrame, text_col: str = "text",
     shuffle carries 16 bytes instead of the line — at ~2^-96 collision
     odds. min_docs counts documents, not occurrences, so a single page
     repeating its own header never loses it."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    lines = df.select(F.col(id_col), F.split(t, "\n", -1).alias("_lines"))
+    t = F.coalesce(F.col("text"), F.lit(""))
+    lines = df.select("doc_id", F.split(t, "\n", -1).alias("_lines"))
 
     boiler = (
         lines.select(F.explode(F.array_distinct("_lines")).alias("line"))
@@ -521,19 +497,19 @@ def line_dedup(df: DataFrame, text_col: str = "text",
     )
 
     occ = lines.select(
-        F.col(id_col),
+        "doc_id",
         F.posexplode("_lines").alias("idx", "line"),
     )
     marked = (
         occ.join(boiler.withColumn("_boiler", F.lit(True)),
                  on="line", how="left")
-        .select(id_col, "idx", "line",
+        .select("doc_id", "idx", "line",
                 F.coalesce("_boiler", F.lit(False)).alias("_rm"))
     )
     kept_struct = F.array_sort(F.collect_list(
         F.when(~F.col("_rm"), F.struct(F.col("idx"), F.col("line")))))
     return (
-        marked.groupBy(id_col)
+        marked.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(F.col("_rm").cast("long")).alias("n_removed_lines"),
@@ -542,7 +518,7 @@ def line_dedup(df: DataFrame, text_col: str = "text",
             kept_struct.alias("_kept"),
         )
         .select(
-            F.col(id_col), "n_lines", "n_removed_lines", "n_removed_chars",
+            "doc_id", "n_lines", "n_removed_lines", "n_removed_chars",
             F.md5(F.array_join(
                 F.transform("_kept", lambda s: s["line"]), "\n"))
              .alias("cleaned_md5"),
@@ -550,9 +526,7 @@ def line_dedup(df: DataFrame, text_col: str = "text",
     )
 
 
-def token_vocabulary(df: DataFrame, k: int = 100, text_col: str = "text",
-                     min_count: int = 1,
-                     id_col: str = "doc_id") -> DataFrame:
+def token_vocabulary(df: DataFrame, k: int = 100) -> DataFrame:
     """Corpus-wide token vocabulary: top-``k`` whitespace tokens by
     total occurrence count (ties broken token-ascending for a total
     order). -> (token, n_occurrences, n_docs).
@@ -563,44 +537,41 @@ def token_vocabulary(df: DataFrame, k: int = 100, text_col: str = "text",
     token), not per occurrence; the final top-k is a TakeOrdered over
     the aggregated frame (no global sort materialization).
 
-    ``n_docs`` counts distinct ``id_col`` values (count(DISTINCT
+    ``n_docs`` counts distinct ``doc_id`` values (count(DISTINCT
     doc_id), the oracle definition — stable under task retry and
     duplicate doc rows); a frame without that column falls back to a
     synthetic per-row id, which is retry-deterministic only for
     deterministic single-stage inputs."""
     # n_docs needs a per-source-row id; project it before the explode
-    rid = (F.col(id_col) if id_col in df.columns
+    rid = (F.col("doc_id") if "doc_id" in df.columns
            else F.monotonically_increasing_id())
-    toks = df.select(F.col(text_col), rid.alias("_rid")) \
-        .select(F.explode(tokens(F.col(text_col))).alias("token"), "_rid")
+    toks = df.select("text", rid.alias("_rid")) \
+        .select(F.explode(tokens(F.col("text"))).alias("token"), "_rid")
     return (toks.groupBy("token")
             .agg(F.count(F.lit(1)).alias("n_occurrences"),
                  F.countDistinct("_rid").alias("n_docs"))
-            .where(F.col("n_occurrences") >= int(min_count))
             .orderBy(F.desc("n_occurrences"), F.asc("token"))
             .limit(int(k)))
 
 
-def length_quantiles(df: DataFrame, value_col: str = "n_chars",
-                     strata_col: str = "lang") -> DataFrame:
-    """Per-stratum length distribution for corpus curation: exact
+def length_quantiles(df: DataFrame) -> DataFrame:
+    """Per-``lang`` distribution of ``n_chars`` for corpus curation: exact
     linear-interpolation percentiles (Spark `percentile`, not the
     approximate sketch) plus min/max/count. Exact-oracle-able against
     DuckDB `quantile_cont` — both implement the same interpolated
     quantile definition."""
-    v = F.col(value_col).cast("double")
+    v = F.col("n_chars").cast("double")
     pcts = [0.25, 0.5, 0.75, 0.9, 0.99]
     qcols = [F.percentile(v, F.lit(p)).alias(f"p{int(p * 100)}")
              for p in pcts]
-    return (df.groupBy(strata_col)
+    return (df.groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n"),
-                 F.min(F.col(value_col)).alias("min_len"),
-                 F.max(F.col(value_col)).alias("max_len"),
+                 F.min("n_chars").alias("min_len"),
+                 F.max("n_chars").alias("max_len"),
                  *qcols))
 
 
-def oov_stats(df: DataFrame, vocab_k: int = 100, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
+def oov_stats(df: DataFrame, vocab_k: int = 100) -> DataFrame:
     """Out-of-vocabulary rate per document against the corpus top-k
     vocabulary: -> (doc_id, n_tokens, n_oov). High OOV fraction vs a
     corpus-level vocabulary is a standard gibberish/encoding-noise
@@ -609,24 +580,23 @@ def oov_stats(df: DataFrame, vocab_k: int = 100, text_col: str = "text",
     exploded tokens against it — the vocab is k rows, so the join is
     map-side at any corpus size. Zero-token docs are re-attached with
     (0, 0) via a left join on the source frame."""
-    vocab = (token_vocabulary(df, k=vocab_k, text_col=text_col)
+    vocab = (token_vocabulary(df, k=vocab_k)
              .select("token").withColumn("_in", F.lit(True)))
-    toks = df.select(F.col(id_col),
-                     F.explode(tokens(F.col(text_col))).alias("token"))
+    toks = df.select("doc_id",
+                     F.explode(tokens(F.col("text"))).alias("token"))
     per_doc = (toks.join(F.broadcast(vocab), "token", "left")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_tokens"),
                     F.sum(F.when(F.col("_in").isNull(), 1).otherwise(0))
                      .cast("long").alias("n_oov")))
-    return (df.select(id_col).join(per_doc, id_col, "left")
-            .select(F.col(id_col),
+    return (df.select("doc_id").join(per_doc, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
                     F.coalesce("n_oov", F.lit(0)).alias("n_oov")))
 
 
-def pack_assignments(df: DataFrame, budget: int = 2048, shards: int = 32,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def pack_assignments(df: DataFrame, budget: int = 2048,
+                     shards: int = 32) -> DataFrame:
     """GPT-style sequence-packing assignment: documents are
     concatenated in deterministic order and split into fixed
     ``budget``-token training sequences; each doc gets the pack it
@@ -643,22 +613,21 @@ def pack_assignments(df: DataFrame, budget: int = 2048, shards: int = 32,
     output partition) and the window state is a single running sum."""
     from pyspark.sql import Window
     t = df.select(
-        F.col(id_col),
-        F.pmod(F.col(id_col), F.lit(int(shards))).cast("int").alias("shard"),
-        token_count(F.col(text_col)).alias("n_tokens"),
+        "doc_id",
+        F.pmod(F.col("doc_id"), F.lit(int(shards))).cast("int").alias("shard"),
+        token_count(F.col("text")).alias("n_tokens"),
     )
-    w = Window.partitionBy("shard").orderBy(id_col)
+    w = Window.partitionBy("shard").orderBy("doc_id")
     start = (F.sum("n_tokens").over(w) - F.col("n_tokens"))
     return t.select(
-        id_col, "shard", "n_tokens",
+        "doc_id", "shard", "n_tokens",
         F.floor(start / int(budget)).cast("long").alias("pack_id"),
         F.pmod(start, F.lit(int(budget))).cast("long")
          .alias("offset_in_pack"),
     )
 
 
-def normalize_text(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """Unicode normalization for multilingual training corpora:
     NFC-compose, normalize line endings (\\r\\n and \\r -> \\n), strip
     C0 control characters (except \\t and \\n).
@@ -683,41 +652,43 @@ def normalize_text(df: DataFrame, text_col: str = "text",
 
     def run(batches):
         for pdf in batches:
-            raw = pdf[text_col].fillna("")
+            raw = pdf["text"].fillna("")
             norm = []
             for s in raw:
                 s2 = unicodedata.normalize("NFC", s)
                 s2 = s2.replace("\r\n", "\n").replace("\r", "\n")
                 norm.append(ctrl.sub("", s2))
             yield pd.DataFrame({
-                id_col: pdf[id_col],
+                "doc_id": pdf["doc_id"],
                 "n_chars_before": [len(s) for s in raw],
                 "n_chars_after": [len(s) for s in norm],
                 "norm_md5": [hashlib.md5(s.encode()).hexdigest()
                              for s in norm],
             })
 
-    return df.select(id_col, text_col).mapInPandas(
-        run, f"{id_col} long, n_chars_before long, n_chars_after long, "
+    return df.select("doc_id", "text").mapInPandas(
+        run, "doc_id long, n_chars_before long, n_chars_after long, "
              "norm_md5 string")
 
 
-def _dsir_features(df: DataFrame, text_col: str,
-                   id_col: str) -> DataFrame:
+# fixed-point scale of every exact integer score here: a ratio r is
+# reported as floor(r * 10^6)
+_SCALE = 1_000_000
+
+
+def _dsir_features(df: DataFrame) -> DataFrame:
     """Per-doc hashed-n-gram feature stream for DSIR scoring: unigrams
     + bigrams WITH multiplicity (the paper's bag-of-ngrams model) ->
-    (id_col, feat). One projection, no UDF."""
-    toks = tokens(F.col(text_col))
-    t = df.select(F.col(id_col), toks.alias("_toks"))
+    (doc_id, feat). One projection, no UDF."""
+    toks = tokens(F.col("text"))
+    t = df.select("doc_id", toks.alias("_toks"))
     feats = F.concat(
         F.col("_toks"),
         ngrams_from_tokens(F.col("_toks"), n=2, distinct=False))
-    return (t.select(F.col(id_col), F.explode(feats).alias("feat")))
+    return t.select("doc_id", F.explode(feats).alias("feat"))
 
 
 def dsir_weights(raw: DataFrame, target: DataFrame,
-                 text_col: str = "text", id_col: str = "doc_id",
-                 scale: int = 1_000_000,
                  n_buckets: int | None = None) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): estimate a raw
@@ -725,7 +696,7 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     each feature by how much more the target uses it.
 
     -> (feat, w_scaled) with
-       w_scaled = ((c_target + 1) * scale) // (c_raw + 1)
+       w_scaled = ((c_target + 1) * 10^6) // (c_raw + 1)
 
     Deviation from the paper, by design: the paper weights log-ratios
     of hashed-bucket probabilities; logs are transcendental and two
@@ -743,8 +714,8 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
     map-side combined) + one join on the feature key. `target` is
     normally a small filtered slice of `raw` (quality sample, wiki
     slice), so its count pass is cheap."""
-    rf = _dsir_features(raw, text_col, id_col)
-    tf = _dsir_features(target, text_col, id_col)
+    rf = _dsir_features(raw)
+    tf = _dsir_features(target)
     if n_buckets is not None:
         key = lambda d: d.select(  # noqa: E731
             F.pmod(F.xxhash64("feat"), F.lit(int(n_buckets))).alias("feat"))
@@ -760,14 +731,12 @@ def dsir_weights(raw: DataFrame, target: DataFrame,
               .select(
                   "feat",
                   F.expr(f"CAST(((coalesce(c_target, 0) + 1)"
-                         f" * {int(scale)}L)"
+                         f" * {_SCALE}L)"
                          f" div (coalesce(c_raw, 0) + 1) AS BIGINT)")
                   .alias("w_scaled")))
 
 
 def dsir_scores(raw: DataFrame, target: DataFrame,
-                text_col: str = "text", id_col: str = "doc_id",
-                scale: int = 1_000_000,
                 n_buckets: int | None = None) -> DataFrame:
     """Per-document DSIR importance score over `raw`:
     -> (doc_id, n_feats, score_scaled) where score_scaled sums the
@@ -780,20 +749,20 @@ def dsir_scores(raw: DataFrame, target: DataFrame,
     unbucketed it joins on the feature key (one shuffle each side,
     skew-safe: feature frequency skew lands in the groupBy partial
     aggregation, not the join)."""
-    w = dsir_weights(raw, target, text_col, id_col, scale, n_buckets)
+    w = dsir_weights(raw, target, n_buckets)
     if n_buckets is not None:
         w = F.broadcast(w)
-    rf = _dsir_features(raw, text_col, id_col)
+    rf = _dsir_features(raw)
     if n_buckets is not None:
         rf = rf.select(
-            id_col,
+            "doc_id",
             F.pmod(F.xxhash64("feat"), F.lit(int(n_buckets))).alias("feat"))
     per_doc = (rf.join(w, "feat")
-                 .groupBy(id_col)
+                 .groupBy("doc_id")
                  .agg(F.count(F.lit(1)).alias("n_feats"),
                       F.sum("w_scaled").alias("score_scaled")))
-    return (raw.select(id_col).join(per_doc, id_col, "left")
-            .select(F.col(id_col),
+    return (raw.select("doc_id").join(per_doc, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_feats", F.lit(0)).alias("n_feats"),
                     F.coalesce("score_scaled", F.lit(0))
                      .alias("score_scaled")))
@@ -833,25 +802,21 @@ def _guarded_long(col: Column, what: str) -> Column:
                                F.lit(_LONG_MAX).cast("decimal(38,0)")),
                    col.cast("long"))
             .otherwise(F.raise_error(
-                F.lit(f"{what} exceeds BIGINT range: lower `scale` "
-                      f"for this corpus size")).cast("long")))
+                F.lit(f"{what} exceeds BIGINT range")).cast("long")))
 
 
-def unigram_lm_scores(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      scale: int = 1_000_000,
-                      n_buckets: int = 3) -> DataFrame:
+def unigram_lm_scores(df: DataFrame) -> DataFrame:
     """CCNet-style language-model quality bucketing (Wenzek et al.
     2020) with the LM reduced to an add-one-smoothed UNIGRAM model
     trained on the corpus itself: per-doc mean token improbability,
     then an NTILE split into head/middle/tail buckets.
 
-    -> (id_col, n_tokens, score_scaled, bucket) where
+    -> (doc_id, n_tokens, score_scaled, bucket) where
        score_scaled = (Σ q(tok)) div n_tokens,
-       q(tok) = (scale * (N + V)) div (c_tok + 1)
+       q(tok) = (10^6 * (N + V)) div (c_tok + 1)
     — the add-one-smoothed INVERSE probability of each token as an
-    exact scaled integer — and bucket ∈ 1..n_buckets by NTILE ordered
-    on (score_scaled, id_col); 1 = head (most predictable text).
+    exact scaled integer — and bucket ∈ 1..3 by NTILE ordered on
+    (score_scaled, doc_id); 1 = head (most predictable text).
 
     Deviation from CCNet, by design: the paper buckets on perplexity
     (mean LOG inverse probability); logs are transcendental and the
@@ -863,7 +828,7 @@ def unigram_lm_scores(df: DataFrame, text_col: str = "text",
     reproduces bit-for-bit (the dsir_weights count-ratio pattern).
     q and the per-doc sum are computed in DECIMAL(38,0) (exact at any
     corpus size); the BIGINT output cast raises on overflow rather
-    than wrapping — lower `scale` past ~9e12-token corpora.
+    than wrapping, which happens past ~9e12-token corpora.
 
     Plan (100 TB posture): token counts are one groupBy(token) with
     map-side combine; (N, V) is a 1-row aggregate cross-joined lazily
@@ -876,8 +841,8 @@ def unigram_lm_scores(df: DataFrame, text_col: str = "text",
     contract, documented trade)."""
     from pyspark.sql import Window
 
-    toks_e = (df.select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
-              .select(F.col(id_col), F.explode(F.col("_t")).alias("token")))
+    toks_e = (df.select("doc_id", tokens(F.col("text")).alias("_t"))
+              .select("doc_id", F.explode(F.col("_t")).alias("token")))
     counts = toks_e.groupBy("token").agg(
         F.count(F.lit(1)).alias("c"))
     tot = counts.agg(F.sum("c").alias("N"),
@@ -885,41 +850,40 @@ def unigram_lm_scores(df: DataFrame, text_col: str = "text",
     q = (counts.crossJoin(F.broadcast(tot))
          .select("token",
                  floor_div_exact(
-                     F.lit(int(scale)).cast("decimal(38,0)") *
+                     F.lit(_SCALE).cast("decimal(38,0)") *
                      (F.col("N") + F.col("V")).cast("decimal(38,0)"),
                      F.col("c") + 1).alias("q")))
     per_doc = (toks_e.join(q, "token")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_tokens"),
                     F.sum("q").alias("sum_q")))
-    scored = (df.select(id_col).join(per_doc, id_col, "left")
-              .select(F.col(id_col),
+    scored = (df.select("doc_id").join(per_doc, "doc_id", "left")
+              .select("doc_id",
                       F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
                       F.coalesce(F.col("sum_q"),
                                  F.lit(0).cast("decimal(38,0)"))
                       .alias("sum_q"))
-              .select(F.col(id_col), F.col("n_tokens"),
+              .select("doc_id", "n_tokens",
                       F.when(F.col("n_tokens") == 0, F.lit(0).cast("long"))
                        .otherwise(_guarded_long(
                            floor_div_exact(F.col("sum_q"),
                                            F.col("n_tokens")),
                            "unigram_lm_scores score_scaled"))
                        .alias("score_scaled")))
-    w = Window.orderBy(F.asc("score_scaled"), F.asc(id_col))
+    w = Window.orderBy(F.asc("score_scaled"), F.asc("doc_id"))
     return scored.select(
-        F.col(id_col), "n_tokens", "score_scaled",
-        F.ntile(n_buckets).over(w).cast("long").alias("bucket"))
+        "doc_id", "n_tokens", "score_scaled",
+        F.ntile(3).over(w).cast("long").alias("bucket"))
 
 
-def domain_stats(df: DataFrame, domain_col: str = "source",
-                 text_col: str = "text", id_col: str = "doc_id",
-                 short_tokens: int = 20) -> DataFrame:
+def domain_stats(df: DataFrame, short_tokens: int = 20) -> DataFrame:
     """Domain-level curation rollup — the RefinedWeb/C4-style signal
     for KEEPING or DROPPING whole sites rather than documents (domain
     spam shows up as high duplicate fractions and short-page farms
     long before per-doc filters fire).
 
-    -> (domain, n_docs, total_tokens, n_short_docs, n_dup_docs), all
+    -> (domain = source, n_docs, total_tokens, n_short_docs,
+    n_dup_docs), all
     exact BIGINTs; n_dup_docs counts docs whose canonical fingerprint
     occurs more than once CORPUS-WIDE (cross-domain mirrors count for
     every domain that hosts a copy — the signal a mirror-farm
@@ -930,16 +894,16 @@ def domain_stats(df: DataFrame, domain_col: str = "source",
     counts are a pure Column expression, and the rollup is a single
     groupBy(domain) with map-side partial aggregation — domain skew
     (one giant host) lands in the partial agg, not a join."""
-    fp = fingerprints(df, text_col=text_col, id_col=id_col)
+    fp = fingerprints(df)
     dup_fps = (fp.groupBy("fingerprint")
                .agg(F.count(F.lit(1)).alias("c"))
                .filter(F.col("c") > 1).select("fingerprint"))
     dup_ids = (fp.join(dup_fps, "fingerprint", "left_semi")
-               .select(F.col(id_col), F.lit(1).cast("long").alias("is_dup")))
-    n_tok = token_count(F.col(text_col))
-    base = (df.select(F.col(id_col), F.col(domain_col).alias("domain"),
+               .select("doc_id", F.lit(1).cast("long").alias("is_dup")))
+    n_tok = token_count(F.col("text"))
+    base = (df.select("doc_id", F.col("source").alias("domain"),
                       n_tok.alias("n_tokens"))
-            .join(dup_ids, id_col, "left"))
+            .join(dup_ids, "doc_id", "left"))
     return (base.groupBy("domain")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("n_tokens").alias("total_tokens"),
@@ -949,22 +913,20 @@ def domain_stats(df: DataFrame, domain_col: str = "source",
                   .alias("n_dup_docs")))
 
 
-def top_terms_tfidf(df: DataFrame, k: int = 3, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    scale: int = 1_000_000) -> DataFrame:
+def top_terms_tfidf(df: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-k keywords by TF-IDF — the classic semantic
     index / keyword-extraction primitive.
 
-    -> (id_col, term, tf, score_scaled, rnk), rnk 1..k per doc by
+    -> (doc_id, term, tf, score_scaled, rnk), rnk 1..k per doc by
     (score DESC, term ASC); score_scaled = tf * idf_scaled with
-    idf_scaled = (scale * N_docs) div df_term — the raw inverse
+    idf_scaled = (10^6 * N_docs) div df_term — the raw inverse
     document frequency as an exact scaled integer, the same
     quantize-each-DISTINCT-value-then-do-integer-arithmetic contract
     as unigram_lm_scores. Deviation from textbook TF-IDF, by design:
     ln(N/df) is transcendental and the r4 gate proved floor(scale*ln)
     is not reproducible across engine libm builds, so the idf weight
     is the count ratio itself (monotone in the true idf; corpus-wide
-    terms still sink — df=N gives the minimum weight `scale`). All
+    terms still sink — df=N gives the minimum weight 10^6). All
     intermediates are exact DECIMAL(38,0); the BIGINT output cast
     raises on overflow instead of wrapping.
 
@@ -976,44 +938,43 @@ def top_terms_tfidf(df: DataFrame, k: int = 3, text_col: str = "text",
     corpus-wide sort."""
     from pyspark.sql import Window
 
-    tf = (df.select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
-          .select(F.col(id_col), F.explode(F.col("_t")).alias("term"))
-          .groupBy(id_col, "term")
+    tf = (df.select("doc_id", tokens(F.col("text")).alias("_t"))
+          .select("doc_id", F.explode(F.col("_t")).alias("term"))
+          .groupBy("doc_id", "term")
           .agg(F.count(F.lit(1)).alias("tf")))
     n_docs = df.agg(
-        F.count_distinct(F.col(id_col)).alias("n_docs"))
+        F.count_distinct(F.col("doc_id")).alias("n_docs"))
     idf = (tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_"))
            .crossJoin(F.broadcast(n_docs))
            .select("term",
                    floor_div_exact(
-                       F.lit(int(scale)).cast("decimal(38,0)") *
+                       F.lit(_SCALE).cast("decimal(38,0)") *
                        F.col("n_docs").cast("decimal(38,0)"),
                        F.col("df_")).alias("idf_scaled")))
     scored = (tf.join(idf, "term")
-              .select(F.col(id_col), "term", F.col("tf").cast("long")
+              .select("doc_id", "term", F.col("tf").cast("long")
                       .alias("tf"),
                       _guarded_long(
                           F.col("tf").cast("decimal(38,0)") *
                           F.col("idf_scaled"),
                           "top_terms_tfidf score_scaled")
                       .alias("score_scaled")))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("score_scaled"), F.asc("term"))
-    return (scored.select(F.col(id_col), "term", "tf", "score_scaled",
+    return (scored.select("doc_id", "term", "tf", "score_scaled",
                           F.row_number().over(w).cast("long")
                           .alias("rnk"))
             .filter(F.col("rnk") <= k))
 
 
-def chunk_assignments(df: DataFrame, budget: int = 64, overlap: int = 16,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def chunk_assignments(df: DataFrame, budget: int = 64,
+                      overlap: int = 16) -> DataFrame:
     """Retrieval-prep chunking: split each document's token stream
     into overlapping windows of ``budget`` tokens with ``overlap``
     carried between neighbors (stride = budget - overlap) — the
     standard RAG/embedding-index preprocessing step.
 
-    -> (id_col, chunk_id, start_tok, n_chunk_tokens, chunk_md5);
+    -> (doc_id, chunk_id, start_tok, n_chunk_tokens, chunk_md5);
     chunk_md5 hashes the space-rejoined token slice, so a green
     oracle pins the exact slice boundaries, not just the counts.
     Chunk count per doc: 1 if n <= budget else
@@ -1030,8 +991,8 @@ def chunk_assignments(df: DataFrame, budget: int = 64, overlap: int = 16,
     stride = budget - overlap
     if stride <= 0:
         raise ValueError("overlap must be smaller than budget")
-    t = (df.select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
-         .select(F.col(id_col), "toks",
+    t = (df.select("doc_id", tokens(F.col("text")).alias("toks"))
+         .select("doc_id", "toks",
                  F.size("toks").cast("long").alias("n")))
     n_chunks = F.when(F.col("n") <= 0, F.lit(0)) \
         .when(F.col("n") <= budget, F.lit(1)) \
@@ -1048,16 +1009,15 @@ def chunk_assignments(df: DataFrame, budget: int = 64, overlap: int = 16,
                 " ", F.slice(F.col("toks"), k * stride + 1, budget)))
              .alias("chunk_md5")))
     return (t.filter(F.col("n") > 0)
-            .select(F.col(id_col), F.explode(chunk).alias("c"))
-            .select(F.col(id_col), F.col("c.chunk_id").alias("chunk_id"),
+            .select("doc_id", F.explode(chunk).alias("c"))
+            .select("doc_id", F.col("c.chunk_id").alias("chunk_id"),
                     F.col("c.start_tok").alias("start_tok"),
                     F.col("c.n_chunk_tokens").alias("n_chunk_tokens"),
                     F.col("c.chunk_md5").alias("chunk_md5")))
 
 
-def collocations(df: DataFrame, k: int = 20, min_count: int = 5,
-                 text_col: str = "text",
-                 scale: int = 1_000_000) -> DataFrame:
+def collocations(df: DataFrame, k: int = 20,
+                 min_count: int = 5) -> DataFrame:
     """Collocation / phrase mining over adjacent token bigrams —
     the word2vec-phrases-style signal (Mikolov et al. 2013) used to
     promote "new york"-type units into a tokenizer vocabulary:
@@ -1066,7 +1026,7 @@ def collocations(df: DataFrame, k: int = 20, min_count: int = 5,
     -> top-``k`` rows (w1, w2, n_pair, pmi_scaled, rnk) among bigrams
     with c_ab >= min_count; ordering (pmi_scaled DESC, w1, w2).
 
-    Integer contract: pmi_scaled = (scale·N·c_ab) div (c_a·c_b) — the
+    Integer contract: pmi_scaled = (10^6·N·c_ab) div (c_a·c_b) — the
     PMI RATIO as an exact scaled integer instead of its log. ln is
     monotone, so the top-k ranking equals the true-PMI ranking up to
     quantization ties; and because the r4 gate proved
@@ -1081,7 +1041,7 @@ def collocations(df: DataFrame, k: int = 20, min_count: int = 5,
     unigram counts one more, both joined on word keys where frequency
     skew was already absorbed by the aggregations; the global top-k is
     a TakeOrdered, not a full sort."""
-    t = df.select(tokens(F.col(text_col)).alias("_t"))
+    t = df.select(tokens(F.col("text")).alias("_t"))
     uni = (t.select(F.explode(F.col("_t")).alias("w"))
            .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
     n_tok = uni.agg(F.sum("c").alias("n_total"))
@@ -1104,7 +1064,7 @@ def collocations(df: DataFrame, k: int = 20, min_count: int = 5,
                       .alias("n_pair"),
                       _guarded_long(
                           floor_div_exact(
-                              F.lit(int(scale)).cast("decimal(38,0)") *
+                              F.lit(_SCALE).cast("decimal(38,0)") *
                               F.col("n_total").cast("decimal(38,0)") *
                               F.col("n_pair").cast("decimal(38,0)"),
                               F.col("c1").cast("decimal(38,0)") *

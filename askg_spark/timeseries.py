@@ -25,7 +25,7 @@ row: Spark's window frame here is running-last, not buffered).
 
 Tie rule (mirrored exactly by the DuckDB `ASOF JOIN` oracle in
 __spark_entry__): right rows at ts == left ts DO match (<= semantics);
-among right rows sharing (key, ts) the greatest tiebreak column wins.
+among right rows sharing (user_id, ts) the greatest event_id wins.
 Reference analog: none (training-pipeline operator family).
 """
 
@@ -34,17 +34,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def asof_join(left: DataFrame, right: DataFrame, key: str = "user_id",
-              ts: str = "ts", tiebreak: str = "event_id",
-              payload_prefix: str = "prior_") -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Point-in-time join: every `left` row gains the latest `right`
-    row with right.ts <= left.ts for the same key (NULLs when no prior
-    right row exists). Output = all left columns + right's non-key
-    columns renamed `prior_<col>`.
+    row with right.ts <= left.ts for the same user_id (NULLs when no
+    prior right row exists). Output = all left columns + right's
+    non-key columns renamed `prior_<col>`.
 
-    Rows from `right` that share (key, ts) are resolved to the one
-    with the greatest `tiebreak` value before the merge, making the
-    result deterministic on any partitioning."""
+    Rows from `right` that share (user_id, ts) are resolved to the one
+    with the greatest event_id before the merge, making the result
+    deterministic on any partitioning."""
+    key = "user_id"
     rcols = [c for c in right.columns if c != key]
 
     # scratch-column collision guard: a right frame already carrying
@@ -58,19 +57,19 @@ def asof_join(left: DataFrame, right: DataFrame, key: str = "user_id",
             f"asof_join: input columns collide with reserved scratch "
             f"names {sorted(clash)}; rename them before joining")
 
-    # deterministic pre-dedup of right on (key, ts): greatest tiebreak
-    w_dedup = Window.partitionBy(key, ts).orderBy(F.desc(tiebreak))
+    # deterministic pre-dedup of right on (key, ts): greatest event_id
+    w_dedup = Window.partitionBy(key, "ts").orderBy(F.desc("event_id"))
     r1 = (right.withColumn("_rn", F.row_number().over(w_dedup))
           .filter(F.col("_rn") == 1).drop("_rn"))
 
     tagged_r = r1.select(
-        F.col(key), F.col(ts).alias("_ts"), F.lit(0).alias("_side"),
+        F.col(key), F.col("ts").alias("_ts"), F.lit(0).alias("_side"),
         F.struct(*[F.col(c) for c in rcols]).alias("_rpay"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(f"_l_{c}")
           for c in left.columns if c != key],
     )
     tagged_l = left.select(
-        F.col(key), F.col(ts).alias("_ts"), F.lit(1).alias("_side"),
+        F.col(key), F.col("ts").alias("_ts"), F.lit(1).alias("_side"),
         F.lit(None).cast(tagged_r.schema["_rpay"].dataType).alias("_rpay"),
         *[F.col(c).alias(f"_l_{c}") for c in left.columns if c != key],
     )
@@ -87,73 +86,70 @@ def asof_join(left: DataFrame, right: DataFrame, key: str = "user_id",
     )
     out_left = [F.col(f"_l_{c}").alias(c)
                 for c in left.columns if c != key]
-    out_right = [F.col("_asof")[c].alias(f"{payload_prefix}{c}")
+    out_right = [F.col("_asof")[c].alias(f"prior_{c}")
                  for c in rcols]
     return merged.select(F.col(key), *out_left, *out_right)
 
 
-def sessionize(events: DataFrame, key: str = "user_id", ts: str = "ts",
-               tiebreak: str = "event_id",
-               gap_seconds: int = 1800) -> DataFrame:
-    """Gap-based sessionization: consecutive events of a key belong to
+def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+    """Gap-based sessionization: consecutive events of a user belong to
     one session while the inter-event gap is <= ``gap_seconds``; a
     larger gap starts a new session. -> per-session summary
-    (key, session_id 1-based, n_events, session_start, session_end,
+    (user_id, session_id 1-based, n_events, session_start, session_end,
     duration_sec).
 
     Plan: ONE exchange. The session boundary is a running sum of
-    new-session flags over the (key)-partitioned ts-ordered window;
-    the follow-up groupBy(key, session_id) needs rows co-located by
-    key only, which the window's hash partitioning already guarantees,
-    so Catalyst plans it shuffle-free on top of the same exchange.
-    All outputs are integers/timestamps — exact cross-engine compare."""
-    w = Window.partitionBy(key).orderBy(ts, tiebreak)
-    prev = F.lag(F.col(ts)).over(w)
+    new-session flags over the user-partitioned (ts, event_id)-ordered
+    window; the follow-up groupBy(user_id, session_id) needs rows
+    co-located by user only, which the window's hash partitioning
+    already guarantees, so Catalyst plans it shuffle-free on top of the
+    same exchange. All outputs are integers/timestamps — exact
+    cross-engine compare."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev = F.lag(F.col("ts")).over(w)
     new_session = F.when(
         prev.isNull()
-        | ((F.unix_timestamp(F.col(ts)) - F.unix_timestamp(prev))
+        | ((F.unix_timestamp(F.col("ts")) - F.unix_timestamp(prev))
            > int(gap_seconds)),
         F.lit(1)).otherwise(F.lit(0))
     runw = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     with_sess = events.select(
-        F.col(key), F.col(ts),
+        "user_id", "ts",
         F.sum(new_session).over(runw).alias("session_id"))
-    return (with_sess.groupBy(key, "session_id")
+    return (with_sess.groupBy("user_id", "session_id")
             .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.min(ts).alias("session_start"),
-                 F.max(ts).alias("session_end"))
+                 F.min("ts").alias("session_start"),
+                 F.max("ts").alias("session_end"))
             .withColumn(
                 "duration_sec",
                 (F.unix_timestamp("session_end")
                  - F.unix_timestamp("session_start")).cast("long")))
 
 
-def funnel_counts(events: DataFrame, steps: list[str],
-                  key: str = "user_id", ts: str = "ts",
-                  type_col: str = "event_type") -> DataFrame:
-    """Ordered-funnel analysis: for each step i, how many keys
+def funnel_counts(events: DataFrame, steps: list[str]) -> DataFrame:
+    """Ordered-funnel analysis: for each step i, how many users
     performed steps[0..i] IN ORDER (each step at-or-after the
     previous step's first qualifying occurrence — the standard
-    first-touch funnel). -> (step_idx, step, n_keys) with step_idx
-    1-based; n_keys is non-increasing.
+    first-touch funnel, steps matched on event_type). -> (step_idx,
+    step, n_keys) with step_idx 1-based; n_keys is non-increasing.
 
-    Plan: one keyed groupBy per step (min qualifying ts), each joined
-    to the previous stage's frame on the key — k small equi-joins on
-    the same key, no windows over the full event stream and no
-    per-key Python. The per-stage frames shrink monotonically, so
+    Plan: one user-keyed groupBy per step (min qualifying ts), each
+    joined to the previous stage's frame on user_id — k small
+    equi-joins on the same key, no windows over the full event stream
+    and no per-user Python. The per-stage frames shrink monotonically, so
     every join after the first is AQE-broadcastable in practice."""
     stage = None
     out_rows = []
     for i, step in enumerate(steps):
-        ev = events.where(F.col(type_col) == step)
+        ev = events.where(F.col("event_type") == step)
         if stage is None:
-            stage = (ev.groupBy(key)
-                     .agg(F.min(ts).alias("_t")))
+            stage = (ev.groupBy("user_id")
+                     .agg(F.min("ts").alias("_t")))
         else:
-            stage = (ev.join(stage, key)
-                     .where(F.col(ts) >= F.col("_t"))
-                     .groupBy(key)
-                     .agg(F.min(ts).alias("_t2"))
+            stage = (ev.join(stage, "user_id")
+                     .where(F.col("ts") >= F.col("_t"))
+                     .groupBy("user_id")
+                     .agg(F.min("ts").alias("_t2"))
                      .withColumnRenamed("_t2", "_t"))
         out_rows.append(
             stage.agg(F.count(F.lit(1)).alias("n_keys"))
@@ -165,62 +161,59 @@ def funnel_counts(events: DataFrame, steps: list[str],
     return res
 
 
-def rolling_counts(events: DataFrame, window_days: int = 7,
-                   key: str = "user_id", ts: str = "ts") -> DataFrame:
-    """Trailing-window activity: per (key, active day), the event
+def rolling_counts(events: DataFrame, window_days: int = 7) -> DataFrame:
+    """Trailing-window activity: per (user_id, active day), the event
     count over the previous ``window_days`` days inclusive.
-    -> (key, day, n_day, n_window).
+    -> (user_id, day, n_day, n_window).
 
-    Plan: pre-aggregate to one row per (key, day) — the shuffle
+    Plan: pre-aggregate to one row per (user_id, day) — the shuffle
     carries day-granular rows, not raw events — then a RANGE-framed
     window (day numbers, `rangeBetween(-(w-1), 0)`) sums the trailing
-    counts per key without re-scanning events. The range frame makes
+    counts per user without re-scanning events. The range frame makes
     gaps correct: a day with no events contributes nothing and missing
     days never appear as zero rows."""
-    day = F.floor(F.unix_timestamp(F.col(ts)) / F.lit(86400)) \
+    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400)) \
         .cast("long").alias("day")
-    daily = (events.select(F.col(key), day)
-             .groupBy(key, "day")
+    daily = (events.select("user_id", day)
+             .groupBy("user_id", "day")
              .agg(F.count(F.lit(1)).alias("n_day")))
-    w = (Window.partitionBy(key).orderBy("day")
+    w = (Window.partitionBy("user_id").orderBy("day")
          .rangeBetween(-(int(window_days) - 1), 0))
     return daily.select(
-        key, "day", "n_day",
+        "user_id", "day", "n_day",
         F.sum("n_day").over(w).alias("n_window"))
 
 
-def cohort_retention(events: DataFrame, key: str = "user_id",
-                     ts: str = "ts") -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Weekly cohort retention: cohort = the ISO-agnostic week number
-    (epoch days // 7) of a key's FIRST event; for every later active
-    week, how many of the cohort's keys were active.
+    (epoch days // 7) of a user's FIRST event; for every later active
+    week, how many of the cohort's users were active.
     -> (cohort_week, active_week, n_keys).
 
-    Plan: min-agg per key (cohort), join back on the key (AQE
+    Plan: min-agg per user (cohort), join back on user_id (AQE
     broadcasts the cohort frame when small), then one groupBy over
-    (cohort_week, active_week) with a distinct-key count. Exact
+    (cohort_week, active_week) with a distinct-user count. Exact
     integers throughout."""
-    week = F.floor(F.unix_timestamp(F.col(ts)) / F.lit(604800)) \
+    week = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(604800)) \
         .cast("long")
-    acts = events.select(F.col(key), week.alias("active_week")).distinct()
-    cohorts = acts.groupBy(key).agg(F.min("active_week")
-                                    .alias("cohort_week"))
-    return (acts.join(cohorts, key)
+    acts = events.select("user_id", week.alias("active_week")).distinct()
+    cohorts = acts.groupBy("user_id").agg(F.min("active_week")
+                                          .alias("cohort_week"))
+    return (acts.join(cohorts, "user_id")
             .groupBy("cohort_week", "active_week")
-            .agg(F.countDistinct(key).alias("n_keys")))
+            .agg(F.countDistinct("user_id").alias("n_keys")))
 
 
-def anomaly_hours(events: DataFrame, type_col: str = "event_type",
-                  ts_col: str = "ts", sigmas: int = 3) -> DataFrame:
+def anomaly_hours(events: DataFrame) -> DataFrame:
     """Per-type hourly volume anomalies: flag hours whose event count
-    sits more than ``sigmas`` population standard deviations above
+    sits more than 3 population standard deviations above
     that type's mean hourly count — the monitoring primitive every
     ingest pipeline runs over its own throughput stream.
 
     -> (event_type, hour, n_events, is_anomaly), with is_anomaly
     decided INTEGER-EXACTLY: with per-type sums S = Σc, SS = Σc² over
-    n observed hours, the test  c > μ + kσ  (σ population) multiplies
-    out to
+    n observed hours, the test  c > μ + kσ  (σ population, k = 3)
+    multiplies out to
 
         (c·n − S) > 0  AND  (c·n − S)² > k²·(n·SS − S²)
 
@@ -241,8 +234,8 @@ def anomaly_hours(events: DataFrame, type_col: str = "event_type",
     Column predicate — two narrow shuffles total. Only OBSERVED hours
     enter the moments (a silent hour is a missing row, not a zero);
     at web scale the per-type moment frame stays dimension-sized."""
-    hourly = (events.select(F.col(type_col).alias("event_type"),
-                            F.date_trunc("hour", F.col(ts_col))
+    hourly = (events.select("event_type",
+                            F.date_trunc("hour", F.col("ts"))
                             .alias("hour"))
               .groupBy("event_type", "hour")
               .agg(F.count(F.lit(1)).alias("n_events")))
@@ -255,7 +248,7 @@ def anomaly_hours(events: DataFrame, type_col: str = "event_type",
             .select("event_type", "hour",
                     F.col("n_events").cast("long").alias("n_events"),
                     _anomaly_flag(F.col("n_events"), F.col("n_h"),
-                                  F.col("s"), F.col("ss"), sigmas)
+                                  F.col("s"), F.col("ss"), 3)
                     .alias("is_anomaly")))
 
 

@@ -198,21 +198,24 @@ def nt_literal(col: F.Column) -> F.Column:
                     F.lit('"'))
 
 
-def nt_iri(col: F.Column, base: str = "https://askg.example/kg/") -> F.Column:
-    """An IRIREF under `base` with forbidden characters percent-encoded.
+# namespace of every IRI the export mints
+_BASE = "https://askg.example/kg/"
+
+
+def nt_iri(col: F.Column) -> F.Column:
+    """An IRIREF under ``_BASE`` with forbidden characters percent-encoded.
 
     Covers §2.2's printable forbidden set plus TAB/LF/CR; remaining
     C0 controls (%x00-%x08 etc.) are assumed already stripped by
     upstream text normalization (textops.normalize_text) — ids minted
     by this pipeline never contain them, and a bounded replace chain
     beats a per-row UDF for the 10^12-row export."""
-    return F.concat(F.lit("<" + base),
+    return F.concat(F.lit("<" + _BASE),
                     _chain_replace(col.cast("string"), _NT_IRI_ESCAPES),
                     F.lit(">"))
 
 
 def to_ntriples(triples: DataFrame,
-                base: str = "https://askg.example/kg/",
                 object_is_iri: F.Column | None = None) -> DataFrame:
     """Serialize (subj, pred, obj) rows as N-Triples lines — the
     standard line-oriented RDF exchange format, so the materialized
@@ -227,14 +230,14 @@ def to_ntriples(triples: DataFrame,
     hot path.
 
     ``object_is_iri``: optional boolean Column; where true the object
-    serializes as an IRI under `base` (relationship edges), where
+    serializes as an IRI under ``_BASE`` (relationship edges), where
     false/absent as an escaped string literal (attribute values)."""
     obj = (nt_literal(F.col("obj")) if object_is_iri is None
-           else F.when(object_is_iri, nt_iri(F.col("obj"), base))
+           else F.when(object_is_iri, nt_iri(F.col("obj")))
                  .otherwise(nt_literal(F.col("obj"))))
     return triples.select(
-        F.concat(nt_iri(F.col("subj"), base), F.lit(" "),
-                 nt_iri(F.col("pred"), base), F.lit(" "),
+        F.concat(nt_iri(F.col("subj")), F.lit(" "),
+                 nt_iri(F.col("pred")), F.lit(" "),
                  obj, F.lit(" .")).alias("line"))
 
 

@@ -279,8 +279,9 @@ def documents_as_warc(docs: DataFrame, n_segments: int = 32) -> DataFrame:
         build, schema="segment int, warc binary")
 
 
-def parse_warc(df: DataFrame, blob_col: str = "warc") -> DataFrame:
-    """Distributed WARC reader: one row per response record.
+def parse_warc(df: DataFrame) -> DataFrame:
+    """Distributed WARC reader: one row per response record of the
+    ``warc`` blob column.
 
     Zero shuffle — segments map independently; this is the plan shape
     that holds at 10^8 segments (each task streams its blobs' gzip
@@ -288,7 +289,7 @@ def parse_warc(df: DataFrame, blob_col: str = "warc") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             urls, tss, sts, payloads = [], [], [], []
-            for blob in pdf[blob_col]:
+            for blob in pdf["warc"]:
                 if blob is None:
                     continue
                 for url, ts, status, payload in parse_warc_bytes(bytes(blob)):
@@ -325,8 +326,9 @@ def _members_with_offsets(blob: bytes):
         pos = end
 
 
-def cdx_records(segments: DataFrame, blob_col: str = "warc") -> DataFrame:
-    """CDX-style index rows for every response record:
+def cdx_records(segments: DataFrame) -> DataFrame:
+    """CDX-style index rows for every response record of the ``warc``
+    blob column:
     (url, ts_epoch, offset, comp_len, cdx_ok).
 
     ``cdx_ok`` certifies the random-access contract IN-ENGINE: the
@@ -340,7 +342,7 @@ def cdx_records(segments: DataFrame, blob_col: str = "warc") -> DataFrame:
         for pdf in batches:
             cols = {k: [] for k in
                     ("url", "ts_epoch", "offset", "comp_len", "cdx_ok")}
-            for blob in pdf[blob_col]:
+            for blob in pdf["warc"]:
                 if blob is None:
                     continue
                 blob = bytes(blob)

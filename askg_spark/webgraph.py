@@ -261,16 +261,18 @@ class _ShufflePartitions:
         return False
 
 
+DAMPING = 0.85
+
+
 @operator_scope
 def pagerank(edges: DataFrame, iterations: int = 10,
-             damping: float = 0.85,
              checkpoint_every: int = 4) -> DataFrame:
     """Distributed power-iteration PageRank over (src, dst) edges:
     -> (node, rank), sum(rank) == 1 at every step (dangling-node mass
     is redistributed uniformly).
 
     rank_{t+1}(v) = (1-d)/N + d * (sum_{u->v} rank_t(u)/outdeg(u)
-                                   + dangling_mass_t / N)
+                                   + dangling_mass_t / N),  d = DAMPING
 
     Zero per-iteration driver synchronization AND zero per-iteration
     materialization: every round is lazy — the dangling mass is NOT a
@@ -338,11 +340,10 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     verts_c = child.table(f"global_temp.{tag}_verts")
 
     ranks = verts_c.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
     try:
         ranks = _pagerank_loop(
-            child, fan_c, verts_c, ranks, iterations, damping, base, n,
-            width, checkpoint_every)
+            child, fan_c, verts_c, ranks, iterations, n, width,
+            checkpoint_every)
     finally:
         spark.catalog.dropGlobalTempView(f"{tag}_fan")
         spark.catalog.dropGlobalTempView(f"{tag}_verts")
@@ -351,8 +352,9 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     return ranks
 
 
-def _pagerank_loop(spark, fan, verts, ranks, iterations, damping, base,
-                   n, width, checkpoint_every):
+def _pagerank_loop(spark, fan, verts, ranks, iterations, n, width,
+                   checkpoint_every):
+    base = (1.0 - DAMPING) / n
     prev = None
     with _AqeOff(spark), _ShufflePartitions(spark, width):
         for it in range(iterations):
@@ -374,7 +376,7 @@ def _pagerank_loop(spark, fan, verts, ranks, iterations, damping, base,
                 .select(
                     "node",
                     (F.lit(base)
-                     + F.lit(damping)
+                     + F.lit(DAMPING)
                      * (F.coalesce(F.col("inflow"), F.lit(0.0))
                         + (F.lit(1.0) - F.col("m")) / F.lit(float(n))))
                     .alias("rank"),

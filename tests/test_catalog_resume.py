@@ -105,6 +105,59 @@ def test_materialized_resume_recomputes_on_content_edit(spark, tmp_path):
     assert run_pipeline_materialized(spark, edited, out)["skipped"] is True
 
 
+@pytest.mark.slow
+def test_materialized_resume_recomputes_on_code_change(spark, tmp_path,
+                                                       monkeypatch):
+    from askg_spark import pipeline
+
+    pages = generate_pages(spark, n_servers=8, seed=7)
+    out = str(tmp_path / "kg")
+    assert run_pipeline_materialized(spark, pages, out)["skipped"] is False
+    assert run_pipeline_materialized(spark, pages, out)["skipped"] is True
+    # same pages and config, different engine code: the stored
+    # snapshots are stale
+    monkeypatch.setattr(pipeline, "code_digest", lambda: "edited")
+    assert run_pipeline_materialized(spark, pages, out)["skipped"] is False
+    assert run_pipeline_materialized(spark, pages, out)["skipped"] is True
+
+
+def test_code_digest_reads_the_deployed_zip(tmp_path):
+    """The digest of the package imported from a ``--py-files``-style
+    zip equals the digest of the source tree, and any edit to a module
+    changes it."""
+    import os
+    import subprocess
+    import sys
+    import zipfile
+
+    from askg_spark import pipeline
+
+    src = os.path.dirname(pipeline.__file__)
+    names = sorted(f for f in os.listdir(src) if f.endswith(".py"))
+
+    def zipped_digest(edit: str | None) -> str:
+        path = tmp_path / f"askg_spark_{edit or 'same'}.zip"
+        with zipfile.ZipFile(path, "w") as z:
+            for f in names:
+                with open(os.path.join(src, f), "rb") as fh:
+                    body = fh.read()
+                if f == edit:
+                    body += b"\n# edited\n"
+                z.writestr(f"askg_spark/{f}", body)
+        code = ("import sys; sys.path.insert(0, sys.argv[1]); "
+                "import askg_spark.pipeline as p; "
+                "assert p.__file__.startswith(sys.argv[1]), p.__file__; "
+                "print(p.code_digest())")
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        out = subprocess.run([sys.executable, "-c", code, str(path)],
+                             cwd=tmp_path, env=env, check=True,
+                             capture_output=True, text=True, timeout=120)
+        return out.stdout.strip()
+
+    assert zipped_digest(None) == pipeline.code_digest()
+    assert zipped_digest("cc.py") != pipeline.code_digest()
+
+
 def test_compact_snapshot_reduces_files_preserves_rows(spark, tmp_path):
     from askg_spark.catalog import Catalog
     import glob

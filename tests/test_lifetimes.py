@@ -407,6 +407,33 @@ def test_release_views_frees_every_view(spark, views):
         n for _, _, n in views.values())
 
 
+def test_contract_queries_leave_no_storage_behind(spark, views):
+    """Every contract query, run as bench.py and check_oracles.py run
+    it (inside an operator scope, its rows collected), leaves stored
+    exactly what was stored before it: the views' own storage, which
+    ``release_views`` then frees. Requesting the views here rebuilds
+    any that an earlier test released."""
+    import __spark_entry__
+
+    frames = [df for name in session.VIEWS
+              for df in session.view(spark, name, SF).values()]
+    own, own_cached = _reads(frames)
+    rdds0, entries0 = _persisted(spark), _cache_entries(spark)
+    assert own <= rdds0
+
+    @session.operator_scope
+    def rows(query):
+        return query(spark, SF).collect()
+
+    for name, query in __spark_entry__.queries().items():
+        rows(query)
+        assert _persisted(spark) == rdds0, name
+        assert _cache_entries(spark) == entries0, name
+    session.release_views()
+    assert _persisted(spark) == rdds0 - own
+    assert _cache_entries(spark) == entries0 - len(own_cached)
+
+
 def test_view_is_built_afresh_in_a_new_context():
     code = f"""
 import __spark_entry__

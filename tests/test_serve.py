@@ -95,11 +95,20 @@ def test_search_driver_matches_spark(spark, monkeypatch, entities, frame):
     for prompt in PROMPTS:
         got, want = _both(monkeypatch, search.semantic_search, ents, prompt)
         assert got == want, prompt
-    for limit in (0, 1, 3, 1000):
+    for limit in (-1, 0, 1, 3, 1000):
         for conf in (0.0, 8.0, 10.05):
             for fn, arg in ((search.search_entities, "database"),
                             (search.semantic_search,
                              "find database query servers")):
+                if limit < 0:
+                    # refused on both paths, before either runs
+                    for gate in (search._DRIVER_MAX_ROWS, 0):
+                        with monkeypatch.context() as mp:
+                            mp.setattr(search, "_DRIVER_MAX_ROWS", gate)
+                            with pytest.raises(ValueError, match="limit"):
+                                fn(ents, arg, min_confidence=conf,
+                                   limit=limit)
+                    continue
                 got, want = _both(monkeypatch, fn, ents, arg,
                                   min_confidence=conf, limit=limit)
                 assert got == want, (fn.__name__, limit, conf)
